@@ -15,11 +15,14 @@ import graft.sources.{Loader, WorkbookSink}
   * Stage boundaries follow the reference but the execution model is
   * Spark's: the per-column dictionary work (classification, detection)
   * runs on tiny deterministic samples collected driver-side — bounded by
-  * distinct-value counts, exactly like the reference's LLM-call inputs —
-  * while everything row-scaled (cleaning, map application, partitioning)
-  * stays a lazy DataFrame plan until the caller acts on it. The
-  * reference's JSON checkpoint artifacts become optional returns (the
-  * report object) instead of filesystem barriers.
+  * distinct-value counts, exactly like the reference's LLM-call inputs.
+  * EP2 and EP3 each write their cleaned frame once as an eager local
+  * checkpoint, the stand-in for the reference's one in-memory pandas
+  * frame: every later consumer of the stage (EP2's column samples, EP3's
+  * per-table sheet writes) reads those blocks instead of re-running the
+  * load and the cleaning pass with its dedup shuffle. The reference's JSON
+  * checkpoint artifacts become optional returns (the report object)
+  * instead of filesystem barriers.
   */
 object Pipelines {
 
@@ -39,7 +42,15 @@ object Pipelines {
       verbose: Boolean = false): Preprocess.CleanResult =
     Preprocess.clean(Loader.load(spark, path), verbose)
 
-  /** EP2: the translation pipeline over an already-loaded frame. */
+  /** EP2: the translation pipeline over an already-loaded frame.
+    *
+    * The cleaned frame is materialised once (eager `localCheckpoint`);
+    * the per-column sample jobs, the translation and the returned
+    * `TranslateReport.df` all read its blocks. The returned frame is
+    * therefore lineage-truncated: `Caching.releaseAll` before it is
+    * consumed makes its consumer fail rather than recompute — the same
+    * contract as pipe1's checkpoint.
+    */
   def translatePipeline(
       df: DataFrame,
       translator: DictionaryTranslator,
@@ -48,7 +59,8 @@ object Pipelines {
       sampleN: Int = 10): TranslateReport = {
 
     val cleaned = Preprocess.clean(df)
-    val stringCols = cleaned.df.schema.fields
+    val base = cleaned.df.localCheckpoint()
+    val stringCols = base.schema.fields
       .filter(_.dataType == StringType).map(_.name).toSeq
 
     // D2 samples -> E1 classification (driver-side, one tiny job per col —
@@ -59,8 +71,8 @@ object Pipelines {
     // wedged sample job surfaces as an error without hanging the driver or
     // cancelling unrelated work on a shared SparkContext.
     val samples = Jobs.boundedTraverse(
-        cleaned.df.sparkSession, stringCols, "translatePipeline-samples")(c =>
-        c -> Dictionary.sampleTopNSeq(cleaned.df, c, sampleN))
+        base.sparkSession, stringCols, "translatePipeline-samples")(c =>
+        c -> Dictionary.sampleTopNSeq(base, c, sampleN))
       .toMap
     val columnLabels = samples.map { case (c, s) => c -> classifier.classify(c, s) }
     val textCols = stringCols.filter(c => columnLabels(c) == "TEXT")
@@ -70,7 +82,7 @@ object Pipelines {
     val nonEnglish = textCols.filter(c => languageLabels(c) == "NON-ENGLISH")
 
     // E3+E5: translate only NON-ENGLISH text columns, identity fallback
-    val translated = translator.applyTo(cleaned.df, nonEnglish)
+    val translated = translator.applyTo(base, nonEnglish)
     val applied = nonEnglish.filter(c => translator.forColumn(c).nonEmpty)
 
     TranslateReport(translated, columnLabels, languageLabels, applied,
@@ -88,6 +100,17 @@ object Pipelines {
     * directory-of-parquet form. Either way an empty mapping sinks
     * nothing (Excel has no zero-sheet workbook; the dir sink likewise
     * creates no files).
+    *
+    * The mapping needs only the cleaned frame's column names, so it is
+    * decided first; when it yields tables, the cleaned frame is
+    * materialised once (eager `localCheckpoint`) and every returned table
+    * is a projection of those blocks. Row i of every table then comes
+    * from the same stored row (the alignment [[SchemaMap.verticalPartition]]
+    * relies on), and each sheet write reads blocks instead of re-running
+    * the lineage. The returned frames are lineage-truncated:
+    * `Caching.releaseAll` before they are consumed makes their consumers
+    * fail rather than recompute — the same contract as pipe1's checkpoint.
+    * An empty mapping returns no tables and runs no job.
     */
   def mapPipeline(
       df: DataFrame,
@@ -95,10 +118,13 @@ object Pipelines {
       mapper: SchemaMapper = new SchemaMap.NameSimilarityMapper(),
       sinkPath: Option[String] = None): Map[String, DataFrame] = {
     val cleaned = Preprocess.clean(df).df
+    val cols = cleaned.columns.toSeq
     val mapping: Map[String, ColumnMapping] =
-      mapper.mapColumns(cleaned.columns.toSeq, destSchema)
-        .collect { case (src, Some(cm)) => src -> cm }
-    val tables = SchemaMap.verticalPartition(cleaned, mapping)
+      mapper.mapColumns(cols, destSchema)
+        .collect { case (src, Some(cm)) if cols.contains(src) => src -> cm }
+    val tables =
+      if (mapping.isEmpty) Map.empty[String, DataFrame]
+      else SchemaMap.verticalPartition(cleaned.localCheckpoint(), mapping)
     sinkPath.filter(_ => tables.nonEmpty).foreach { p =>
       if (p.toLowerCase.endsWith(".xlsx"))
         graft.sources.Xlsx.write(tables, p, df.sparkSession)

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions.col
   * parser ([[SchemaMap.parseMappingLines]]) and cleanup rules are kept so
   * that an LLM-backed implementation could be dropped in behind the same
   * trait. Vertical partitioning is pure projection — one `select` per
-  * destination table off the same frame, no shuffle, row alignment free
-  * (`mapper.py:106-121` relies on the shared row index; a projection of one
-  * DataFrame has the same property by construction).
+  * destination table off the same frame, no shuffle (`mapper.py:106-121`
+  * relies on the shared row index; see [[SchemaMap.verticalPartition]]
+  * for when the projections keep that alignment).
   */
 object SchemaMap {
 
@@ -134,6 +134,14 @@ object SchemaMap {
     * destination table, source columns renamed to their destinations.
     * Deterministic column order (destination-name sort) regardless of map
     * iteration order.
+    *
+    * Invariant: row i of every returned table comes from the same row of
+    * `df` only when `df` is materialised, as a local checkpoint is. Each
+    * table is consumed by its own action, and over a lazy plan each
+    * action re-executes it; a shuffle in that plan (a `dropDuplicates`,
+    * say) need not emit rows in the same order twice.
+    * [[graft.engine.Pipelines.mapPipeline]] therefore passes a local
+    * checkpoint.
     */
   def verticalPartition(
       df: DataFrame,

@@ -123,7 +123,7 @@ object Xlsx {
     b.toString
   }
 
-  private def cellXml(ref: String, dt: DataType, v: Any): String = v match {
+  private def cellXml(ref: String, v: Any): String = v match {
     case null => ""
     case b: Boolean => s"""<c r="$ref" t="b"><v>${if (b) 1 else 0}</v></c>"""
     case n: Byte => s"""<c r="$ref"><v>$n</v></c>"""
@@ -165,12 +165,12 @@ object Xlsx {
     w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
     w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
     val names = df.schema.fieldNames
+    val refs = names.indices.map(colRef).toArray
     w.write("<row r=\"1\">")
     names.zipWithIndex.foreach { case (n, i) =>
-      w.write(s"""<c r="${colRef(i)}1" t="inlineStr"><is><t>${esc(n)}</t></is></c>""")
+      w.write(s"""<c r="${refs(i)}1" t="inlineStr"><is><t>${esc(n)}</t></is></c>""")
     }
     w.write("</row>")
-    val dts = df.schema.fields.map(_.dataType)
     var r = 1 // header consumed row 1
     val it = df.toLocalIterator()
     while (it.hasNext) {
@@ -182,7 +182,7 @@ object Xlsx {
       w.write(s"""<row r="$r">""")
       var i = 0
       while (i < names.length) {
-        w.write(cellXml(s"${colRef(i)}$r", dts(i), if (row.isNullAt(i)) null else row.get(i)))
+        w.write(cellXml(s"${refs(i)}$r", if (row.isNullAt(i)) null else row.get(i)))
         i += 1
       }
       w.write("</row>")

@@ -79,6 +79,92 @@ class PipelinesSpec extends AnyFunSuite {
       Seq("amount_clean", "merchant"))
   }
 
+  /** One destination column per cleaned column of the fixture, over three
+    * tables, so the tables together reassemble whole cleaned rows. */
+  private val everyColumn = Map(
+    "FACT_Expense" -> Seq("amount", "amount_clean", "merchant"),
+    "DIM_Trip" -> Seq("expense_type", "trip_date"),
+    "DIM_Account" -> Seq("col1", "expenseaccountname"))
+
+  /** The body's result and the jobs it submits from this thread. Listener
+    * events arrive asynchronously but in order, so a marker job submitted
+    * afterwards proves every earlier job-start event has been delivered. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("EP3 tables are row-aligned projections of one materialised frame") {
+    val df = graft.sources.Loader.load(spark, csvPath).repartition(3)
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > 1)
+    val tables = Pipelines.mapPipeline(df, everyColumn)
+    assert(tables.keySet == everyColumn.keySet)
+    val parts = tables.values.toSeq.map(t => (t.columns.toSeq, t.collect()))
+    val n = parts.head._2.length
+    assert(parts.forall(_._2.length == n), parts.map(_._2.length))
+    val cleaned = graft.engine.Preprocess.clean(df).df
+    val expected = cleaned.collect()
+      .map(r => cleaned.columns.toSeq.zip(r.toSeq).toMap).toSet
+    // row i of every table, joined on position, is one cleaned row; and
+    // the n reassembled rows are the whole (deduplicated) cleaned frame
+    val reassembled = (0 until n).map { i =>
+      parts.flatMap { case (cols, rows) => cols.zip(rows(i).toSeq) }.toMap
+    }
+    reassembled.foreach(r => assert(expected.contains(r), r))
+    assert(reassembled.toSet == expected)
+  }
+
+  test("EP3 tables read the materialised frame: no exchange, no file scan") {
+    val tables = Pipelines.mapPipeline(
+      graft.sources.Loader.load(spark, csvPath), everyColumn)
+    tables.foreach { case (t, df) =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange") && !p.contains("FileScan"), s"$t: $p")
+    }
+  }
+
+  test("EP3 xlsx sink runs at most one job per sheet") {
+    val tables = Pipelines.mapPipeline(
+      graft.sources.Loader.load(spark, csvPath), everyColumn)
+    val sink = Files.createTempDirectory("graft-wb-jobs").toString + "/pin.xlsx"
+    val (_, jobs) = jobsDuring(graft.sources.Xlsx.write(tables, sink, spark))
+    assert(jobs <= tables.size, s"$jobs jobs for ${tables.size} sheets")
+  }
+
+  test("EP3 with an empty mapping sinks nothing and materialises nothing") {
+    val df = graft.sources.Loader.load(spark, csvPath)
+    val sink = Files.createTempDirectory("graft-wb-empty").toString + "/none.xlsx"
+    val dest = Map("DIM_None" -> Seq("qqqqqqqqqqqqqqqq"))
+    val (tables, mapJobs) =
+      jobsDuring(Pipelines.mapPipeline(df, dest, sinkPath = Some(sink)))
+    assert(tables.isEmpty)
+    assert(!new java.io.File(sink).exists())
+    // only the cleaning pass's own validation job runs
+    val (_, cleanJobs) = jobsDuring(graft.engine.Preprocess.clean(df))
+    assert(mapJobs == cleanJobs)
+  }
+
   test("S6 CSV sink roundtrip through the extension-dispatched loader") {
     val df = graft.sources.Loader.load(spark, csvPath)
     val cleaned = Pipelines.cleanPipeline(spark, csvPath).df
