@@ -277,36 +277,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE may re-coalesce cached-plan output partitioning (see
-      // GraftSession) — without it every scopedPersist'd affinity-scale
-      // frame pins downstream stages at `cpus` near-empty tasks.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Dev A/B knob for AQE's coalescing floor (default = Spark's 1m).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m"))
-      // Dev A/B knob: SPARK_GRAFT_AQE=0 disables adaptive execution, to
-      // measure AQE's per-stage re-planning overhead across the suite.
-      // Measured r16 full-surface A/B at sf0.1 (same box, probes
-      // ~0.23/0.17 both runs): 181.5 s on vs 168.9 s off — each exchange
-      // under AQE is a query stage (a driver re-plan round-trip), a
-      // latency term that at toy scale concentrates in the long exchange
-      // chains (gr family +0.6..+1.6 s each, lake4 +0.8, dd7 +0.7) while
-      // REAL wins show where AQE's runtime re-planning earns its keep
-      // (t23 −0.9, er4 −0.9, t30 −0.8: skew-prone text aggregates). The
-      // default stays ON: the bench measures the library at its
-      // production posture, and the 100 TB target is exactly where
-      // adaptive re-planning pays; the off switch exists to attribute
-      // suite-position noise, never for official artifacts.
-      .config("spark.sql.adaptive.enabled",
-        if (sys.env.get("SPARK_GRAFT_AQE").contains("0")) "false" else "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // START-of-run reap (r20, the r19 verdict's #6): the exit-time sweep
     // cannot run when a session crashes, so a crashed PRIOR session's
     // stranded j5_* warehouse dirs would otherwise tax this official
@@ -376,7 +348,7 @@ object Bench {
     // env-overridden limit would otherwise silently disagree with the
     // judge's hardcoded default).
     val load1Limit = sys.env.getOrElse("SPARK_GRAFT_LOAD1_LIMIT", "4.0").toDouble
-    val spinThreads = cpus.toInt
+    val spinThreads = cpus
     spinShot(spinThreads) // one throwaway shot compiles the kernel
     val (load1Arrival, loadGateS) = loadGate(load1Limit, spinThreads)
     val load1Start = load1

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.plans.GraftExtensions
 
-/** Recommended session bootstrap for library consumers.
+/** The one session factory: the only code that builds a `SparkSession`.
   *
   * Encodes the configuration this engine is designed against: AQE on
   * (runtime re-planning, skew-join splitting, partition coalescing),
@@ -14,16 +14,21 @@ import graft.plans.GraftExtensions
   * `master`/`defaultParallelism` change; every operator in this library is
   * partitioning-aware by construction, so the same code runs unmodified
   * from `local[4]` to 1000 executors.
+  *
+  * [[Bench]], [[Verify]], [[Explain]], [[Prof]], the test harness and the
+  * benchmark program all build their session here, so tested, verified,
+  * explained and benched plans share one config. A caller may still set
+  * deployment settings only: master and cores, log level, the UI and the
+  * warehouse dir. Every engine setting lives in [[builder]].
   */
 object GraftSession {
 
   def builder(
       master: String = "local[*]",
-      appName: String = "graft",
       defaultParallelism: Option[Int] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
-      .appName(appName)
+      .appName("graft")
       .withExtensions(new GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -40,8 +45,8 @@ object GraftSession {
       // at sf0.1/local[32]: label rounds 3.5 s -> <1 s.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
-      // engine-wide default: parquet TIMESTAMP(NANOS) columns decode as
-      // raw longs (see Tables.t, which converts events.ts explicitly)
+      // Parquet TIMESTAMP(NANOS) columns decode as raw longs; Tables.t
+      // converts events.ts explicitly and relies on this being set.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     defaultParallelism.foldLeft(b)((bb, n) =>
       bb.config("spark.sql.shuffle.partitions", n.toString))

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Single-query profiler: run named `SparkEntry.queries` entries with
   * per-action stage/task/task-time accounting.
   *
   * `runMain graft.Prof <query>[,<query>...]` (env `SPARK_GRAFT_SF_DIR`,
-  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_MIN_PART_SIZE` as in [[Bench]] —
-  * SAME names, so an A/B profiles under the floor it benched; 3 timed
-  * runs each printed, read the later ones as the warm numbers).
+  * `SPARK_GRAFT_CPUS` as in [[Bench]], on the same [[GraftSession]]
+  * config; 3 timed runs each printed, read the later ones as the warm
+  * numbers).
   *
   * Why task counts and not just seconds: on a contended box a Spark task
   * carries a large fixed launch cost, so a "slow query" is very often a
@@ -30,17 +29,8 @@ object Prof {
     val names = args.headOption.map(_.split(",").map(_.trim).toSeq)
       .getOrElse(sys.error("usage: graft.Prof <query>[,<query>...]"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         stages += 1

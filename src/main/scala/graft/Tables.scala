@@ -24,12 +24,10 @@ object Tables {
     * schema instead of hardcoding one vintage:
     *
     *   - parquet TIMESTAMP(NANOS): Spark rejects nanos by default, so the
-    *     session-wide `nanosAsLong` escape hatch (also set by
-    *     [[GraftSession]]) decodes the column as a raw long, which we
-    *     floor-truncate to microseconds (`ts div 1000` — matching DuckDB's
-    *     TIMESTAMP_NS → TIMESTAMP cast for the oracle). The conf is left
-    *     set deliberately: the returned frame is lazy and re-consults it
-    *     at execution, so restoring it here would be unsound.
+    *     session-wide `nanosAsLong` escape hatch ([[GraftSession]] sets
+    *     it) decodes the column as a raw long, which we floor-truncate to
+    *     microseconds (`ts div 1000` — matching DuckDB's
+    *     TIMESTAMP_NS → TIMESTAMP cast for the oracle).
     *   - parquet TIMESTAMP_MICROS with `isAdjustedToUTC=false`: Spark
     *     decodes `timestamp_ntz`, which we cast to TimestampType. Under
     *     the session's UTC zone the ntz→ltz cast is a wall-clock identity,
@@ -39,7 +37,6 @@ object Tables {
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       val tsCol = raw.schema("ts").dataType match {
         case LongType => expr("timestamp_micros(ts div 1000)")

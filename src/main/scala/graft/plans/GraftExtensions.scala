@@ -10,12 +10,8 @@ import graft.functions.FloatDotProduct
   * the engine's custom expressions as SQL functions so `spark.sql` text
   * can use them.
   *
-  * Wire at session build time:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * }}}
-  * or via config (survives spark-submit):
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Wired at session build time by [[graft.GraftSession]], or via config
+  * (survives spark-submit): `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * No custom Rule[LogicalPlan] or SparkStrategy is registered — every
   * operator in this engine compiles to built-in plans (SURVEY §4's

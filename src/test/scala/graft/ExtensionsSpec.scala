@@ -4,20 +4,51 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.GraftExtensions
 
-/** The SparkSessionExtensions seam: SQL-text access to custom
-  * expressions.
+/** The SparkSessionExtensions seam (SQL-text access to custom
+  * expressions) and the one session factory, [[GraftSession]], that wires
+  * it and every engine setting into each session.
   */
 class ExtensionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("float_dot_product callable from SQL after registration") {
-    GraftExtensions.registerOn(spark)
-    val r = spark.sql(
+    def dot(): Double = spark.sql(
       """SELECT float_dot_product(
         |  array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
         |  array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)
       .collect()(0).getDouble(0)
-    assert(r == 11.0)
+    // GraftSession registers the extensions when it builds the session
+    assert(dot() == 11.0)
+    GraftExtensions.registerOn(spark)
+    assert(dot() == 11.0)
+  }
+
+  test("the test session carries GraftSession's engine settings") {
+    val expected = Map(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true")
+    assert(expected.map { case (k, _) => k -> spark.conf.get(k) } == expected)
+  }
+
+  test("GraftSession is the only code that builds a SparkSession") {
+    import scala.jdk.CollectionConverters._
+    val builds = """SparkSession\s*\.\s*builder\b""".r
+    val hits = Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root),
+        s"expected to run from the repo root; cwd=${System.getProperty("user.dir")}")
+      val walked = java.nio.file.Files.walk(root)
+      try walked.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => builds.findFirstIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.toString).toList
+      finally walked.close()
+    }
+    assert(hits.isEmpty, s"build the session through GraftSession: $hits")
   }
 
   test("extensions object injects without error at construction") {

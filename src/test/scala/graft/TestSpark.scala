@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Match Bench/Verify/GraftSession: AQE may re-coalesce cached-plan
-      // output partitioning, so specs exercise the shipped plan shape.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
+    val s = GraftSession.builder("local[4]", defaultParallelism = Some(4))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
