@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Distinct-value dictionary operators (SURVEY.md §2.3, D1-D4).
   *
@@ -21,19 +23,27 @@ import org.apache.spark.sql.functions._
   */
 object Dictionary {
 
+  /** The long-format dictionary schema of [[distinctValues]]. */
+  private val LongSchema = StructType(Seq(
+    StructField("column_name", StringType), StructField("value", StringType)))
+
   /** D1 (`translate.py:11-34`): per-column distinct non-null trimmed string
     * values, long format `(column_name, value)`. First-occurrence order of
     * the reference is NOT preserved (documented: order is never consumed
-    * downstream — the dictionary feeds map lookups only).
+    * downstream — the dictionary feeds map lookups and samples only).
+    * No columns give an empty dictionary.
     */
-  def distinctValues(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val kvs = cols.map(c =>
-      struct(lit(c).as("column_name"), col(c).cast("string").as("value")))
-    df.select(explode(array(kvs: _*)).as("kv"))
-      .select(col("kv.column_name").as("column_name"), trim(col("kv.value")).as("value"))
-      .filter(col("value").isNotNull)
-      .distinct()
-  }
+  def distinctValues(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (cols.isEmpty)
+      df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), LongSchema)
+    else {
+      val kvs = cols.map(c =>
+        struct(lit(c).as("column_name"), col(c).cast("string").as("value")))
+      df.select(explode(array(kvs: _*)).as("kv"))
+        .select(col("kv.column_name").as("column_name"), trim(col("kv.value")).as("value"))
+        .filter(col("value").isNotNull)
+        .distinct()
+    }
 
   /** D2 (`translate.py:43`, `mapper.py:48`): deterministic head-N sample of a
     * column's distinct trimmed values (value-ordered prefix).
@@ -45,11 +55,35 @@ object Dictionary {
       .orderBy("value")
       .limit(n)
 
-  /** D2 driver-side form: the sample as a collected Seq (inputs to the
-    * enrichment classifiers are tiny by construction).
+  /** D2 for many columns in ONE action: each column's [[sampleTopN]],
+    * read from a long-format `(column_name, value)` dictionary such as
+    * [[distinctValues]] builds, collected to the driver (the samples feed
+    * the enrichment classifiers and are tiny by construction). Every
+    * name in `columns` is a key of the result; a column with no values
+    * maps to an empty sample. An empty `columns` runs no job.
+    *
+    * Plan shape: the dictionary's distinct (one shuffle on
+    * `(column_name, value)`), then `row_number() over (partition by
+    * column_name order by value) <= n`, which Spark plans as a map-side
+    * `WindowGroupLimit` ahead of the exchange on `column_name`, so that
+    * exchange carries at most n rows per column and partition. Within a
+    * column the rows are ordered by the collected `rn`, i.e. by Spark's
+    * UTF-8 byte order — the order `sampleTopN` uses. Scala's `String`
+    * order (UTF-16 code units) differs for supplementary-plane
+    * characters, so the driver never re-sorts by value.
     */
-  def sampleTopNSeq(df: DataFrame, c: String, n: Int): Seq[String] =
-    sampleTopN(df, c, n).collect().map(_.getString(0)).toSeq
+  def sampleTopNPerColumn(
+      dict: DataFrame, columns: Seq[String], n: Int): Map[String, Seq[String]] =
+    if (columns.isEmpty) Map.empty
+    else {
+      val rn = row_number().over(Window.partitionBy("column_name").orderBy("value"))
+      val got = dict.select(col("column_name"), col("value"), rn.as("rn"))
+        .filter(col("rn") <= n)
+        .collect()
+        .groupBy(_.getString(0))
+        .map { case (c, rows) => c -> rows.sortBy(_.getInt(2)).map(_.getString(1)).toSeq }
+      columns.map(c => c -> got.getOrElse(c, Seq.empty)).toMap
+    }
 
   /** D3 (`translate.py:64`): "random" sample made deterministic — order by
     * md5(value) (a fixed pseudo-random permutation) and take the prefix.
@@ -76,7 +110,7 @@ object Dictionary {
   def sampleStratified(
       df: DataFrame, stratumCol: String, idCol: String, k: Int): DataFrame =
     df.withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
+        Window
           .partitionBy(stratumCol)
           .orderBy(md5(col(idCol).cast("string")), col(idCol))))
       .filter(col("rn") <= k)

@@ -18,8 +18,8 @@ import graft.sources.{Loader, WorkbookSink}
   * distinct-value counts, exactly like the reference's LLM-call inputs.
   * EP2 and EP3 each write their cleaned frame once as an eager local
   * checkpoint, the stand-in for the reference's one in-memory pandas
-  * frame: every later consumer of the stage (EP2's column samples, EP3's
-  * per-table sheet writes) reads those blocks instead of re-running the
+  * frame: every later consumer of the stage (EP2's sampler query, EP3's
+  * sheet writes) reads those blocks instead of re-running the
   * load and the cleaning pass with its dedup shuffle. The reference's JSON
   * checkpoint artifacts become optional returns (the report object)
   * instead of filesystem barriers.
@@ -45,7 +45,7 @@ object Pipelines {
   /** EP2: the translation pipeline over an already-loaded frame.
     *
     * The cleaned frame is materialised once (eager `localCheckpoint`);
-    * the per-column sample jobs, the translation and the returned
+    * the sampler query, the translation and the returned
     * `TranslateReport.df` all read its blocks. The returned frame is
     * therefore lineage-truncated: `Caching.releaseAll` before it is
     * consumed makes its consumer fail rather than recompute — the same
@@ -63,17 +63,11 @@ object Pipelines {
     val stringCols = base.schema.fields
       .filter(_.dataType == StringType).map(_.name).toSeq
 
-    // D2 samples -> E1 classification (driver-side, one tiny job per col —
-    // same cost shape as the reference's one LLM call per column). The
-    // per-column jobs are independent; submit them concurrently instead
-    // of paying N sequential job latencies on wide tables.
-    // Finite deadline + scoped cancellation (Jobs.boundedTraverse): a
-    // wedged sample job surfaces as an error without hanging the driver or
-    // cancelling unrelated work on a shared SparkContext.
-    val samples = Jobs.boundedTraverse(
-        base.sparkSession, stringCols, "translatePipeline-samples")(c =>
-        c -> Dictionary.sampleTopNSeq(base, c, sampleN))
-      .toMap
+    // D2 samples -> E1 classification (driver-side, one sample per
+    // column — the inputs of the reference's one LLM call per column),
+    // all drawn by one sampler query over the checkpoint.
+    val samples = Dictionary.sampleTopNPerColumn(
+      Dictionary.distinctValues(base, stringCols), stringCols, sampleN)
     val columnLabels = samples.map { case (c, s) => c -> classifier.classify(c, s) }
     val textCols = stringCols.filter(c => columnLabels(c) == "TEXT")
 

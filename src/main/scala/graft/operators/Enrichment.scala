@@ -81,15 +81,17 @@ object Enrichment {
       ("part", "p_name"), ("part", "p_brand"),
       ("customer", "c_mktsegment"), ("customer", "c_name"),
       ("nation", "n_name"), ("lineitem", "l_returnflag"))
-    // The per-column sample jobs are independent — submit them
-    // concurrently (Spark schedules driver-side jobs in parallel) instead
-    // of paying 8 sequential job latencies. Finite deadline + scoped
-    // cancellation via Jobs.boundedTraverse: a timeout cancels only this
-    // batch's job group, never unrelated jobs on the shared context.
-    val rows = graft.engine.Jobs.boundedTraverse(
-      spark, inputs, "classifyColumns") { case (table, c) =>
-      val sample = Dictionary.sampleTopNSeq(t(spark, dir, table), c, 10)
-      Row(s"$table.$c", Enrich.HeuristicColumnClassifier.classify(c, sample))
+    // One sampler query over the union of the tables' dictionaries, with
+    // names qualified `table.column`, instead of one job per column.
+    val dict = inputs.groupBy(_._1).toSeq.sortBy(_._1).map { case (table, cs) =>
+      Dictionary.distinctValues(t(spark, dir, table), cs.map(_._2))
+        .withColumn("column_name", concat(lit(s"$table."), col("column_name")))
+    }.reduce(_ union _)
+    val samples = Dictionary.sampleTopNPerColumn(
+      dict, inputs.map { case (table, c) => s"$table.$c" }, 10)
+    val rows = inputs.map { case (table, c) =>
+      Row(s"$table.$c",
+        Enrich.HeuristicColumnClassifier.classify(c, samples(s"$table.$c")))
     }
     val schema = StructType(Seq(
       StructField("column_name", StringType), StructField("label", StringType)))

@@ -2,11 +2,14 @@ package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{graftbridge, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.types._
 
 /** Binary `.xlsx` workbook codec — dependency-free SpreadsheetML over the
@@ -43,9 +46,11 @@ import org.apache.spark.sql.types._
   * Scale stance (why driver-side I/O is CORRECT here, not a shortcut): a
   * workbook is one non-splittable binary blob with a hard 1,048,576-row
   * sheet cap — Excel's own format makes it a report/control-plane
-  * artifact, never a data-scale dataset. The writer streams
-  * `toLocalIterator()` (one partition resident at a time) and fails
-  * loudly at the Excel cap; the reader caps decompressed part sizes
+  * artifact, never a data-scale dataset. The writer streams each parent
+  * plan once with `toLocalIterator()` (one partition resident at a time)
+  * for all the sheets that project it, spools their XML to local disk
+  * (at most one such group of sheets at a time) and fails loudly at the
+  * Excel cap; the reader caps decompressed part sizes
   * (zip-bomb guard) and materializes via `spark.createDataFrame` with
   * `parallelize`. Data-scale "sheets" belong in [[DirWorkbookSource]]'s
   * directory-of-parquet representation — both implement the same
@@ -154,41 +159,110 @@ object Xlsx {
       s"""<c r="$ref" t="inlineStr"><is><t$sp>${esc(s)}</t></is></c>"""
   }
 
-  /** Stream one sheet's XML straight into the (already-opened) zip entry
-    * — never materialized as a whole: at the 1,048,576-row cap a buffered
-    * sheet XML would be hundreds of driver-heap MB, while this path holds
-    * one `toLocalIterator` partition plus the writer's buffer.
+  /** One sheet of a write: its table, its zip part number, its header,
+    * the plan its rows come from, and for each of its columns the ordinal
+    * of that plan's output attribute the column reads.
     */
-  private def sheetXml(df: DataFrame, table: String, out: java.io.OutputStream): Unit = {
-    val w = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(out, UTF_8), 64 * 1024)
-    w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-    w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-    val names = df.schema.fieldNames
-    val refs = names.indices.map(colRef).toArray
-    w.write("<row r=\"1\">")
-    names.zipWithIndex.foreach { case (n, i) =>
-      w.write(s"""<c r="${refs(i)}1" t="inlineStr"><is><t>${esc(n)}</t></is></c>""")
+  private final case class Sheet(
+      table: String, part: Int, header: Array[String], parent: LogicalPlan, fields: Seq[Int])
+
+  /** The plan a sheet's rows come from, and the ordinals its columns read.
+    * A sheet whose analyzed plan is a `Project` of attributes, or of
+    * aliases of attributes, reads its child; any other sheet reads its own
+    * plan whole. (`commandExecuted` is the analyzed plan with eager
+    * commands already replaced by their results, so none re-runs.)
+    */
+  private def parentOf(df: DataFrame): (LogicalPlan, Seq[Int]) = {
+    def attribute(e: NamedExpression): Option[Attribute] = e match {
+      case a: Attribute => Some(a)
+      case Alias(a: Attribute, _) => Some(a)
+      case _ => None
     }
-    w.write("</row>")
-    var r = 1 // header consumed row 1
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      r += 1
-      if (r > MaxRows) throw new IllegalArgumentException(
-        s"Table '$table' exceeds Excel's $MaxRows-row sheet capacity; " +
-          "use WorkbookSink's directory-of-parquet representation for data-scale tables")
-      w.write(s"""<row r="$r">""")
-      var i = 0
-      while (i < names.length) {
-        w.write(cellXml(s"${refs(i)}$r", if (row.isNullAt(i)) null else row.get(i)))
-        i += 1
+    df.queryExecution.commandExecuted match {
+      case Project(list, child) if list.forall(attribute(_).exists(child.outputSet.contains)) =>
+        (child, list.map(e => child.output.indexWhere(_.exprId == attribute(e).get.exprId)))
+      case plan => (plan, plan.output.indices)
+    }
+  }
+
+  /** Sheets grouped by the plan they read, groups in the order of their
+    * first sheet. Parents are matched by `sameResult`, so equal plans
+    * built apart still share one stream.
+    */
+  private def sheetGroups(sheets: Seq[Sheet]): Seq[Seq[Sheet]] =
+    sheets.foldLeft(Vector.empty[Vector[Sheet]]) { (groups, sheet) =>
+      groups.indexWhere(_.head.parent.sameResult(sheet.parent)) match {
+        case -1 => groups :+ Vector(sheet)
+        case g => groups.updated(g, groups(g) :+ sheet)
       }
-      w.write("</row>")
     }
-    w.write("</sheetData></worksheet>")
-    w.flush() // flush the writer, but the zip entry/stream stays open for the caller
+
+  /** Stream one group's parent once and copy its sheets into the zip.
+    *
+    * The parent is read with `toLocalIterator` (one partition resident on
+    * the driver at a time), selecting only the attributes the sheets need.
+    * Row r of every sheet is rendered from parent row r into that sheet's
+    * spool file under the JVM temp dir, so the sheets are row-aligned by
+    * construction. Once the stream ends each spool holds its final sheet
+    * XML and is copied into its zip entry, in sheet order. The spools are
+    * deleted whether or not the group succeeds, so the disk holds at most
+    * one group's uncompressed sheet XML, which [[MaxRows]] bounds.
+    */
+  private def writeGroup(spark: SparkSession, sheets: Seq[Sheet], zip: ZipOutputStream): Unit = {
+    val parent = sheets.head.parent
+    val needed = sheets.flatMap(_.fields).distinct.sorted
+    // Per sheet: each column's position in the streamed row, and its A1 letters.
+    val cols = sheets.map(s =>
+      (s.fields.map(needed.indexOf(_)).toArray, s.fields.indices.map(colRef).toArray)).toArray
+    val spools = mutable.ArrayBuffer.empty[Path]
+    val writers = mutable.ArrayBuffer.empty[java.io.Writer]
+    try {
+      sheets.zip(cols).foreach { case (sheet, (_, refs)) =>
+        spools += Files.createTempFile("graft-xlsx-spool-", ".xml")
+        val w = new java.io.BufferedWriter(
+          new java.io.OutputStreamWriter(Files.newOutputStream(spools.last), UTF_8), 64 * 1024)
+        writers += w
+        w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+        w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+        w.write("<row r=\"1\">")
+        sheet.header.zipWithIndex.foreach { case (n, i) =>
+          w.write(s"""<c r="${refs(i)}1" t="inlineStr"><is><t>${esc(n)}</t></is></c>""")
+        }
+        w.write("</row>")
+      }
+      val stream = graftbridge.Bridge.ofRows(spark, Project(needed.map(parent.output), parent))
+      var r = 1 // header consumed row 1
+      val it = stream.toLocalIterator()
+      while (it.hasNext) {
+        val row = it.next()
+        r += 1
+        if (r > MaxRows) throw new IllegalArgumentException(
+          s"Table '${sheets.head.table}' exceeds Excel's $MaxRows-row sheet capacity; " +
+            "use WorkbookSink's directory-of-parquet representation for data-scale tables")
+        var s = 0
+        while (s < cols.length) {
+          val (pos, refs) = cols(s)
+          val w = writers(s)
+          w.write(s"""<row r="$r">""")
+          var i = 0
+          while (i < pos.length) {
+            w.write(cellXml(s"${refs(i)}$r", if (row.isNullAt(pos(i))) null else row.get(pos(i))))
+            i += 1
+          }
+          w.write("</row>")
+          s += 1
+        }
+      }
+      writers.foreach { w => w.write("</sheetData></worksheet>"); w.close() }
+      sheets.zip(spools).foreach { case (sheet, spool) =>
+        zip.putNextEntry(new ZipEntry(s"xl/worksheets/sheet${sheet.part}.xml"))
+        Files.copy(spool, zip)
+        zip.closeEntry()
+      }
+    } finally {
+      writers.foreach(w => try w.close() catch { case _: java.io.IOException => () })
+      spools.foreach(Files.deleteIfExists)
+    }
   }
 
   /** Characters Excel rejects in sheet names (plus the apostrophe rule:
@@ -207,6 +281,13 @@ object Xlsx {
     * [[WorkbookSink.sheetNames]] — sorted table name order, same rule as
     * the directory sink, so the two representations never disagree on
     * naming — applied AFTER Excel's forbidden-character sanitation.
+    *
+    * One stream per parent plan: sheets that project the same plan (the
+    * tables of [[graft.engine.SchemaMap.verticalPartition]], say) form a
+    * group, and each group's parent runs as one Spark action however
+    * many sheets read it; see `writeGroup` for the spooling and its disk
+    * bound. Zip entries follow group order, which is sheet order unless
+    * groups interleave; readers find parts by name either way.
     *
     * Atomicity: the zip streams into a sibling `._tmp` path and renames
     * into place only on success. Table rows materialize lazily INSIDE the
@@ -260,11 +341,11 @@ object Xlsx {
           (1 to n).map(i =>
             s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""").mkString +
           """</Relationships>""").getBytes(UTF_8))
-      ordered.zipWithIndex.foreach { case ((t, df), i) =>
-        zip.putNextEntry(new ZipEntry(s"xl/worksheets/sheet${i + 1}.xml"))
-        sheetXml(df, t, zip)
-        zip.closeEntry()
+      val sheets = ordered.zipWithIndex.map { case ((t, df), i) =>
+        val (parent, fields) = parentOf(df)
+        Sheet(t, i + 1, df.schema.fieldNames, parent, fields)
       }
+      sheetGroups(sheets).foreach(writeGroup(spark, _, zip))
       zip.close()
       // Commit: replace any previous file only after the zip is complete.
       if (fs.exists(p)) fs.delete(p, false)

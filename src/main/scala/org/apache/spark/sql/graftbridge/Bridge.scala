@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Classic-mode Column <-> Expression bridge.
@@ -36,4 +38,10 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .registerFunction(ident, info, builder)
+
+  /** A DataFrame over a logical plan built from other frames' analyzed
+    * plans (`Dataset.ofRows` is `private[sql]`).
+    */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -20,9 +20,44 @@ class DictionarySpec extends AnyFunSuite {
   }
 
   test("D2 deterministic top-N sample") {
-    val s = Dictionary.sampleTopNSeq(
+    val s = Dictionary.sampleTopN(
       spark.read.parquet(s"$sf/documents.parquet"), "lang", 3)
+      .collect().map(_.getString(0)).toSeq
     assert(s == Seq("de", "en", "es"))
+  }
+
+  test("D2 one-query sampler equals per-column sampleTopN on every edge") {
+    import spark.implicits._
+    // dups: repeated values (also shared with other columns); nulls: one
+    // distinct value, fewer than n; blank: space-only values trim to a
+    // kept ""; num: a non-string column; plane: a high-BMP value against
+    // a supplementary-plane one, whose UTF-8 and UTF-16 orders disagree.
+    val df = Seq(
+      ("b", Some("x"), "  ", 3, "Ａ"),
+      ("a", None, "\t", 1, "😀"),
+      ("b", Some("x"), " z ", 2, "a"),
+      ("c", None, "y", 3, "Ａ"),
+      ("a", Some(" x"), " ", 10, "a")
+    ).toDF("dups", "nulls", "blank", "num", "plane")
+    val cols = df.columns.toSeq
+    def perColumn(frame: org.apache.spark.sql.DataFrame) = cols.map(c =>
+      c -> Dictionary.sampleTopN(frame, c, 3).collect().map(_.getString(0)).toSeq).toMap
+    def fused(frame: org.apache.spark.sql.DataFrame) =
+      Dictionary.sampleTopNPerColumn(Dictionary.distinctValues(frame, cols), cols, 3)
+    assert(fused(df) == perColumn(df))
+    assert(fused(df)("plane") == Seq("a", "Ａ", "😀")) // Spark's UTF-8 byte order
+    assert(fused(df)("blank") == Seq("", "\t", "y")) // trim strips spaces only
+    assert(fused(df)("num") == Seq("1", "10", "2"))
+    val empty = df.limit(0)
+    assert(fused(empty) == perColumn(empty))
+    assert(fused(empty) == cols.map(_ -> Seq.empty[String]).toMap)
+  }
+
+  test("D2 one-query sampler over no columns is empty and runs no job") {
+    val df = spark.read.parquet(s"$sf/documents.parquet")
+    val (samples, jobs) = TestSpark.jobsDuring(
+      Dictionary.sampleTopNPerColumn(Dictionary.distinctValues(df, Nil), Nil, 3))
+    assert(samples.isEmpty && jobs == 0)
   }
 
   test("D3 hashed sample is deterministic across invocations") {

@@ -24,7 +24,7 @@ class EdgeSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("c", StringType)))
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     assert(Dictionary.distinctValues(df, Seq("c")).count() == 0)
-    assert(Dictionary.sampleTopNSeq(df, "c", 5).isEmpty)
+    assert(Dictionary.sampleTopN(df, "c", 5).collect().isEmpty)
   }
 
   test("BatchedTranslator covers every value across batch boundaries") {

@@ -86,35 +86,6 @@ class PipelinesSpec extends AnyFunSuite {
     "DIM_Trip" -> Seq("expense_type", "trip_date"),
     "DIM_Account" -> Seq("col1", "expenseaccountname"))
 
-  /** The body's result and the jobs it submits from this thread. Listener
-    * events arrive asynchronously but in order, so a marker job submitted
-    * afterwards proves every earlier job-start event has been delivered. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = group + "-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (result, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("EP3 tables are row-aligned projections of one materialised frame") {
     val df = graft.sources.Loader.load(spark, csvPath).repartition(3)
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > 1)
@@ -144,12 +115,28 @@ class PipelinesSpec extends AnyFunSuite {
     }
   }
 
-  test("EP3 xlsx sink runs at most one job per sheet") {
+  test("EP3 xlsx sink runs one job for all of mapPipeline's tables") {
     val tables = Pipelines.mapPipeline(
       graft.sources.Loader.load(spark, csvPath), everyColumn)
     val sink = Files.createTempDirectory("graft-wb-jobs").toString + "/pin.xlsx"
-    val (_, jobs) = jobsDuring(graft.sources.Xlsx.write(tables, sink, spark))
-    assert(jobs <= tables.size, s"$jobs jobs for ${tables.size} sheets")
+    val (_, jobs) = TestSpark.jobsDuring(graft.sources.Xlsx.write(tables, sink, spark))
+    assert(jobs == 1, s"$jobs jobs for ${tables.size} sheets")
+  }
+
+  test("EP2 runs at most 7 jobs: cleaning aggregate, checkpoint, one sampler") {
+    val df = graft.sources.Loader.load(spark, csvPath)
+    val (_, jobs) = TestSpark.jobsDuring(Pipelines.translatePipeline(df, golden))
+    assert(jobs <= 7, s"$jobs jobs")
+  }
+
+  test("EP2 over a frame with no string columns runs no sampler job") {
+    import spark.implicits._
+    val df = Seq((1L, 2.5), (2L, 3.5)).toDF("id", "amount")
+    val (report, jobs) = TestSpark.jobsDuring(Pipelines.translatePipeline(df, golden))
+    assert(report.columnLabels.isEmpty)
+    val (_, baseJobs) = TestSpark.jobsDuring(
+      graft.engine.Preprocess.clean(df).df.localCheckpoint())
+    assert(jobs == baseJobs, s"$jobs jobs against $baseJobs for clean + checkpoint")
   }
 
   test("EP3 with an empty mapping sinks nothing and materialises nothing") {
@@ -157,11 +144,11 @@ class PipelinesSpec extends AnyFunSuite {
     val sink = Files.createTempDirectory("graft-wb-empty").toString + "/none.xlsx"
     val dest = Map("DIM_None" -> Seq("qqqqqqqqqqqqqqqq"))
     val (tables, mapJobs) =
-      jobsDuring(Pipelines.mapPipeline(df, dest, sinkPath = Some(sink)))
+      TestSpark.jobsDuring(Pipelines.mapPipeline(df, dest, sinkPath = Some(sink)))
     assert(tables.isEmpty)
     assert(!new java.io.File(sink).exists())
     // only the cleaning pass's own validation job runs
-    val (_, cleanJobs) = jobsDuring(graft.engine.Preprocess.clean(df))
+    val (_, cleanJobs) = TestSpark.jobsDuring(graft.engine.Preprocess.clean(df))
     assert(mapJobs == cleanJobs)
   }
 

@@ -25,6 +25,12 @@ class XlsxSpec extends AnyFunSuite {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory("graft-xlsx").resolve(name).toString
 
+  /** The writer's sheet spool files now in the JVM temp dir. */
+  private def spools(): Set[String] = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"))
+    dir.list().filter(_.startsWith("graft-xlsx-spool-")).toSet
+  }
+
   test("multi-sheet multi-type workbook round-trips losslessly") {
     import spark.implicits._
     val facts = Seq(
@@ -283,7 +289,9 @@ class XlsxSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-xlsx-atomic")
     val path = dir.resolve("report.xlsx").toString
+    val spooledBefore = spools()
     XlsxWorkbookSink.save(Map("t" -> Seq((1L, "good")).toDF("id", "v")), path, spark)
+    assert(spools().subsetOf(spooledBefore), "spool file left after a write")
     // A table whose evaluation throws mid-iteration — the rows only
     // materialize inside the zip stream, so this is the torn-write case.
     val failing = spark.range(5).selectExpr(
@@ -299,6 +307,46 @@ class XlsxSpec extends AnyFunSuite {
       .takeWhile(_.hasNext).map(_.next().getFileName.toString).toSeq
       .filterNot(_.endsWith(".crc")) // Hadoop LocalFileSystem checksum sidecars
     assert(names == Seq("report.xlsx"), s"temp debris: $names")
+    assert(spools().subsetOf(spooledBefore), "spool file left after a failed write")
+  }
+
+  test("sheets projecting one shuffled parent are row-aligned and run it once") {
+    import spark.implicits._
+    val rows = spark.sparkContext.longAccumulator("parent rows")
+    // 40 rows, 4 per key; which row dropDuplicates keeps is up to the shuffle
+    val base = spark.range(0, 40, 1, 4)
+      .map { i => rows.add(1); (i.longValue % 10, i.longValue) }.toDF("k", "tag")
+    val parent = base.repartition(3).dropDuplicates("k")
+    val path = tmp("aligned.xlsx")
+    XlsxWorkbookSink.save(Map(
+      "keys" -> parent.select($"k"),
+      "tags" -> parent.select($"tag".as("t"), $"k".as("k2"))), path, spark)
+    assert(rows.value == 40L, "the parent ran more than once")
+    val back = XlsxWorkbookSource.load(spark, path)
+    val keys = back("keys").collect().map(_.getLong(0)).toSeq
+    val tags = back("tags").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(keys.sorted == (0L until 10L))
+    assert(tags.map(_._2) == keys) // row i of both sheets is parent row i
+    assert(tags.forall { case (t, k) => t % 10 == k })
+  }
+
+  test("a mixed workbook reads back equal to its input frames") {
+    import spark.implicits._
+    val parent = Seq((1L, "a", 1.5), (2L, "b", -2.0), (3L, "c", 0.25))
+      .toDF("id", "name", "score")
+    val tables = Map(
+      "a_names" -> parent.select($"id", $"name"),
+      "b_other" -> Seq(("x", 7L), ("y", 8L)).toDF("key", "n"),
+      "c_scores" -> parent.select($"score".as("s"), $"id"),
+      "d_doubled" -> parent.select(($"id" * 2).as("id2"), $"name"))
+    val path = tmp("mixed.xlsx")
+    XlsxWorkbookSink.save(tables, path, spark)
+    val back = XlsxWorkbookSource.load(spark, path)
+    assert(back.keySet == tables.keySet)
+    tables.foreach { case (t, df) =>
+      assert(back(t).columns.toSeq == df.columns.toSeq, t)
+      assert(back(t).collect().map(_.toSeq).toSeq == df.collect().map(_.toSeq).toSeq, t)
+    }
   }
 
   test("date-serial decode: epoch rules, phantom-day boundary, 1904 system") {
