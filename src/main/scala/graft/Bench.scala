@@ -33,21 +33,20 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** SETTLED probe (r16): up to 4 shots, accepting as soon as a shot
-    * agrees within 15% with the best shot so far and reporting that best.
-    * The probe's purpose is estimating STEADY box speed for the contract
-    * line's drift check; a shot taken inside a transient co-tenant burst
-    * measures the burst, not the box — r16's run2/run3 were both
-    * drift-flagged (1.41x/1.45x) by single burst-caught end probes while
-    * their quiet-gated starts and most queries ran clean. If nothing
-    * settles inside 4 shots the contention is real: report the min of
-    * all shots and let the drift flag speak.
+  /** SETTLED reading (r16) of `shot`, the Spark probe or the spin: up to
+    * 4 shots, accepting as soon as a shot agrees within 15% with the best
+    * shot so far and reporting that best. A shot taken inside a transient
+    * co-tenant burst measures the burst, not the box — r16's run2/run3
+    * were both drift-flagged (1.41x/1.45x) by single burst-caught end
+    * probes while their quiet-gated starts and most queries ran clean. If
+    * nothing settles inside 4 shots the contention is real: report the
+    * min of all shots and let the drift flag speak.
     */
-  private def probe(spark: SparkSession): Double = {
-    var prev = probeShot(spark)
+  private def settled(shot: () => Double): Double = {
+    var prev = shot()
     var shots = 1
     while (shots < 4) {
-      val cur = probeShot(spark)
+      val cur = shot()
       shots += 1
       if (math.max(prev / cur, cur / prev) <= 1.15) return math.min(prev, cur)
       prev = math.min(prev, cur)
@@ -55,7 +54,21 @@ object Bench {
     prev
   }
 
-  /** One spin shot: `threads` CPU-bound xorshift loops timed to join.
+  /** JIT-STABLE drift instrument (r16): the Spark-stack calibration probe
+    * turned out to measure the JVM as much as the box — over a
+    * 231-query suite, C2 maturation of the codegen/shuffle stack speeds
+    * the SAME probe 1.6–1.9x between suite start and end (four
+    * consecutive full runs read start 0.26–0.29 s vs end 0.15–0.18 s,
+    * while a fresh-JVM control on the same quiet box read 0.288/0.281
+    * back-to-back — the box didn't change, the JVM did), so a probe-based
+    * drift check flags every clean run on a quiet box. Drift is instead
+    * measured with this 4-thread scalar spin, [[settled]]: steady from
+    * the first shots (nothing for the JIT to learn mid-suite) and sensitive
+    * to exactly the resource a co-tenant burst steals (the worker
+    * threads' cores). The Spark probes stay on the contract line for
+    * historical continuity and cross-artifact box comparison.
+    *
+    * One shot: `threads` CPU-bound xorshift loops timed to join.
     * ~0.1 s/shot; the kernel is a dozen scalar ops, C2-compiled within
     * the first shot, so shots are steady from a fresh JVM.
     */
@@ -77,32 +90,6 @@ object Bench {
     }
     ts.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
-  }
-
-  /** JIT-STABLE drift instrument (r16): the Spark-stack calibration probe
-    * turned out to measure the JVM as much as the box — over a
-    * 231-query suite, C2 maturation of the codegen/shuffle stack speeds
-    * the SAME probe 1.6–1.9x between suite start and end (four
-    * consecutive full runs read start 0.26–0.29 s vs end 0.15–0.18 s,
-    * while a fresh-JVM control on the same quiet box read 0.288/0.281
-    * back-to-back — the box didn't change, the JVM did), so a probe-based
-    * drift check flags every clean run on a quiet box. Drift is instead
-    * measured with this settled 4-thread scalar spin: steady from the
-    * first shots (nothing for the JIT to learn mid-suite) and sensitive
-    * to exactly the resource a co-tenant burst steals (the worker
-    * threads' cores). The Spark probes stay on the contract line for
-    * historical continuity and cross-artifact box comparison.
-    */
-  private def spin(threads: Int): Double = {
-    var prev = spinShot(threads)
-    var shots = 1
-    while (shots < 4) {
-      val cur = spinShot(threads)
-      shots += 1
-      if (math.max(prev / cur, cur / prev) <= 1.15) return math.min(prev, cur)
-      prev = math.min(prev, cur)
-    }
-    prev
   }
 
   /** Quiet-start gate: sample the single-shot probe until two
@@ -354,8 +341,8 @@ object Bench {
     val load1Start = load1
     val memStart = memAvailG
     val gateS = quietGate(spark)
-    val probeStart = probe(spark)
-    val spinStart = spin(spinThreads)
+    val probeStart = settled(() => probeShot(spark))
+    val spinStart = settled(() => spinShot(spinThreads))
     // Post-reclaim drain settle (r16, also outside every timed window):
     // releaseAll's System.gc() kicks ContextCleaner into draining its
     // reference queue — asynchronous block/broadcast removals and a GC
@@ -423,13 +410,13 @@ object Bench {
         Thread.sleep(settleMs.toLong)
       // thirds fire when >= 3 queries are selected (single-query dev runs
       // have size/3 == 0, which idx + 1 never equals)
-      if (idx + 1 == third1At) spinThird1 = spin(spinThreads)
+      if (idx + 1 == third1At) spinThird1 = settled(() => spinShot(spinThreads))
       if (idx + 1 == third2At && third2At != third1At)
-        spinThird2 = spin(spinThreads)
+        spinThird2 = settled(() => spinShot(spinThreads))
       name -> best
     }.toMap
-    val probeEnd = probe(spark)
-    val spinEnd = spin(spinThreads)
+    val probeEnd = settled(() => probeShot(spark))
+    val spinEnd = settled(() => spinShot(spinThreads))
     // Times rounded to ms — sub-ms digits are noise and bloat the line.
     def fmt(v: Double): String =
       if (v < 0) "-1.0" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{t, tWide}
+import graft.engine.RegimeGate
 import graft.functions.TextFunctions.{fingerprint, tokenSet}
 
 /** Deduplication operator family over `documents` (north-star extension,
@@ -594,20 +595,15 @@ object Dedup {
         Right(reassemble(nodes, r).toDF("doc_id", "canonical_doc_id"))
     }
 
-  /** Edge-count bound under which [[componentsOf]] finishes on the driver:
-    * at or below it the pair list is broadcast-build-side sized (1M long
-    * pairs ≈ 16 MB of ids — the regime where Spark itself would collect a
-    * join side to the driver), and sequential union-find labels it in
-    * O(E·α(E)) — microseconds per edge — replacing O(log diameter)
-    * distributed rounds that each cost two shuffle joins, a checkpoint,
-    * and a convergence action. Above the bound the distributed loop runs
-    * unchanged, so corpus-scale edge lists (a 100 TB corpus's near-dup
-    * graph) never route through the driver: this is the broadcast-vs-
-    * shuffle join decision applied to connected components, with sim16's
-    * driver eigen-solve (MLlib's RowMatrix precedent) as the house
-    * precedent for finishing bounded-size tails locally.
+  /** Edge-count bound under which [[componentsOf]] finishes on the driver
+    * ([[RegimeGate.DriverRows]]): sequential union-find labels a
+    * broadcast-sized edge list in O(E·α(E)) — microseconds per edge —
+    * replacing O(log diameter) distributed rounds that each cost two
+    * shuffle joins, a checkpoint, and a convergence action. sim16's driver
+    * eigen-solve (MLlib's RowMatrix precedent) is the house precedent for
+    * finishing bounded-size tails locally.
     */
-  private[graft] val DriverFinishEdges = 1000000L
+  private[graft] val DriverFinishEdges = RegimeGate.DriverRows
 
   /** Generic min-label connected components over an undirected edge list —
     * THE one clustering implementation, shared by dd5/dd11/pipe1/pipe3
@@ -616,9 +612,7 @@ object Dedup {
     * two-column edge frame. Returns the unordered `(id, canon)` assignment
     * under the input's id column name plus `canon` — callers rename.
     *
-    * Two regimes, decided by ONE bounded collect on the persisted pair
-    * frame (r21 — limit(bound+1) both gates and delivers the
-    * driver-finish edges, deleting the separate count job):
+    * Two regimes, picked by [[RegimeGate]] on the pair frame:
     *
     * - **Driver finish** (≤ `driverFinishMax` edges, all-long id columns):
     *   collect the pairs and run union-find with path halving + union-by-
@@ -642,16 +636,11 @@ object Dedup {
     * touching at least one edge) — untouched ids are self-canonical by
     * definition and rejoin at the end (left join + coalesce).
     *
-    * Cost (the r16 change): the loop's per-round stages are latency-
-    * bounded at any toy scale (each exchange is an AQE query stage — a
-    * driver re-plan round-trip — and each round adds a count action), so
-    * the five call sites paid ~0.5–1.5 s each for graphs of a few
-    * thousand edges. Measured same-box back-to-back A/B at sf0.1
-    * (bench convention, min-of-2, probes 0.25/0.19 vs 0.26/0.20):
-    * dd5 2.89 → 1.96 s, dd11 3.69 → 2.80 s, sim6 1.56 → 1.01 s,
-    * pipe1 5.96 → 4.35 s, pipe3 5.63 → 4.36 s — −5.3 s (−27%) across
-    * the family, with the distributed loop bit-identical on the same
-    * graphs (DedupSpec runs every contract test in both regimes).
+    * Cost: the loop's per-round stages are latency-bound at any toy
+    * scale (each exchange is a driver re-plan round-trip, each round a
+    * count action); the driver finish cut dd5/dd11/sim6/pipe1/pipe3 by
+    * 5.3 s (−27%) at sf0.1, and DedupSpec runs every contract test in
+    * both regimes.
     */
   private[graft] def componentsOf(
       nodes: DataFrame, pairsIn: DataFrame,
@@ -696,88 +685,55 @@ object Dedup {
   private[graft] def componentsAssignment(
       nodes: DataFrame, pairsIn: DataFrame,
       driverFinishMax: Long = DriverFinishEdges): Either[Seq[(Long, Long)], DataFrame] = {
-    // Explicit persist (not scopedPersist): componentsOf runs its own
-    // internal actions — the regime-deciding count, then either the
-    // collect or the seed checkpoint — and a scoped cache would be
-    // released by the FIRST of them, recomputing the (typically
-    // expensive) pair plan for the second. Lifecycle is owned here:
-    // unpersisted as soon as the surviving regime has materialized what
-    // it needs (the union-find arrays, or the adjacency blocks).
     // Null endpoints are dropped up front so the two regimes agree: the
     // distributed loop would silently lose them to join/aggregate null
     // semantics while the driver finish's getLong would NPE — same input
     // must mean the same graph in both. A half-null edge is no edge.
-    // Cost adjudication (r17): a full-suite run read dd5 2.41 s vs the
-    // official r16 artifact's 1.57 s — exactly at the 1.5x dual-ratio
-    // bar — so the guard was A/B'd back-to-back on the same box
-    // (min-of-3, spin 0.33 both): 2.171 s WITH the na.drop vs 2.393 s
-    // WITHOUT. The guard is exonerated; the 1.57 s reading was that
-    // run's box state (today's band on both forms is ~2.2-2.4 s).
-    // r18 confirmation: isolated min-of-3 on a quiet box (spin 0.33,
-    // load1 1.3) reads dd5 2.27 s — inside the adjudicated band; the
-    // r16 official 1.57 s stands as the outlier.
-    val pairs = pairsIn.toDF("pa", "pb").na.drop()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allLong = (pairs.schema.fields.map(_.dataType) :+
-      nodes.schema.fields.head.dataType)
-      .forall(_ == org.apache.spark.sql.types.LongType)
-    // ONE bounded action decides the regime AND delivers the driver-finish
-    // data (r21, the bpeTrainRaw gate's convention, applied here and in
-    // Graph.supportEdgesOrFrame): limit(bound+1) returns every row at or
-    // under the bound and bound+1 rows above it, deleting the separate
-    // regime-deciding count() — a full extra job per call site
-    // (dd5/dd11/sim6 and the pipe1/pipe3 tails). Union-find's result is
-    // edge-order-independent (union-by-min roots every component at its
-    // minimum regardless of processing order), so collecting via limit
-    // changes nothing downstream. The persist still backs the over-bound
-    // regime: the seed checkpoint reads the partitions the collect
-    // materialized, and any the short-circuited limit skipped recompute
-    // from the already-written shuffle outputs, not from the corpus scan.
-    val bound = math.min(driverFinishMax, Int.MaxValue - 1L).toInt
-    val head =
-      if (allLong) pairs.limit(bound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (allLong && head.length <= bound) {
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) {
-          val p = parent(r)
-          parent(r) = parent.getOrElse(p, p) // path halving
-          r = parent(r)
-        }
-        r
-      }
-      head.foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        // union-by-min keeps every root at its component's minimum id
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val assign = parent.keys.toSeq.map(k => (k, find(k)))
-        .filter { case (k, r) => k != r } // self-rooted rows add nothing
-      pairs.unpersist(blocking = false)
-      return Left(assign)
+    // (A/B'd r17: 2.17 s with the na.drop vs 2.39 s without, same box.)
+    val gated = RegimeGate(pairsIn.toDF("pa", "pb").na.drop(), driverFinishMax,
+        Some(nodes)) { pairs =>
+      val adj = pairs.union(pairs.select(col("pb"), col("pa")))
+        .toDF("src", "dst")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // EAGER seed checkpoint — the lazy form (folding block
+      // materialization into round 1's convergence count) was A/B'd in
+      // r14 and REJECTED: round 1 consumes the seed in two subtrees
+      // (neighbor aggregate + path-halving join), and without an eager
+      // materialization both compute the edges-sized seed aggregate
+      // concurrently — measured same-box min-of-2 at sf0.1/local[32]:
+      // sim6 1.89 → 2.37 s, pipe3 6.60 → 7.70 s lazy-vs-eager. The seed
+      // also materializes adj's blocks, so the pair cache (adj's union
+      // was its last reader) is released before the rounds run.
+      (adj, adj.groupBy(col("src").as("nid"))
+        .agg(min(col("dst")).as("m"))
+        .select(col("nid"), least(col("nid"), col("m")).as("canon"))
+        .localCheckpoint())
     }
-    val adj = pairs.union(pairs.select(col("pb"), col("pa")))
-      .toDF("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER seed checkpoint — the lazy form (dd5's trick, folding block
-    // materialization into round 1's convergence count to save one
-    // scheduler round-trip) was A/B'd in r14 and REJECTED: round 1
-    // consumes the seed in two subtrees (neighbor aggregate +
-    // path-halving join), and without an eager materialization both
-    // compute the edges-sized seed aggregate concurrently before its
-    // blocks land — measured same-box min-of-2 at sf0.1/local[32]:
-    // sim6 1.89 → 2.37 s, pipe3 6.60 → 7.70 s, pipe1 7.26 → 7.80 s
-    // lazy-vs-eager. The saved action is worth less than the duplicated
-    // aggregate at every scale (the seed is |edges|-shaped).
-    var labels = adj.groupBy(col("src").as("nid"))
-      .agg(min(col("dst")).as("m"))
-      .select(col("nid"), least(col("nid"), col("m")).as("canon"))
-      .localCheckpoint()
-    // The eager seed materialized adj's blocks, adj's union was the pair
-    // cache's second and last reader — release it before the rounds run.
-    pairs.unpersist(blocking = false)
+    val (adj, seed) = gated match {
+      case Right(distributed) => distributed
+      case Left(rows) =>
+        // Union-find's result is edge-order-independent (union-by-min
+        // roots every component at its minimum regardless of processing
+        // order), so the limit-collected edge order changes nothing.
+        val parent = new scala.collection.mutable.LongMap[Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) {
+            val p = parent(r)
+            parent(r) = parent.getOrElse(p, p) // path halving
+            r = parent(r)
+          }
+          r
+        }
+        rows.foreach { row =>
+          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+          // union-by-min keeps every root at its component's minimum id
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        return Left(parent.keys.toSeq.map(k => (k, find(k)))
+          .filter { case (k, r) => k != r }) // self-rooted rows add nothing
+    }
+    var labels = seed
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 50) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.engine.RegimeGate
 
 /** Graph analytics over relationship structure the engine already mines:
   * dd5 assigns CLUSTERS over the near-dup graph (connectivity); this
@@ -93,12 +94,8 @@ object Graph {
   private[graft] def supportPairs(lineitem: DataFrame): DataFrame =
     graft.engine.Caching.scopedPersist(supportPairsPlan(lineitem))
 
-  /** [[supportPairs]] WITHOUT the scoped cache — for callers that must
-    * own the cache lifecycle themselves because they run internal
-    * actions against the pair frame (gr5's regime-deciding count: a
-    * scoped cache is released by the FIRST completed action, so the
-    * count would evict it and the surviving regime would re-run the
-    * corpus-scale basket pairing).
+  /** [[supportPairs]] WITHOUT the scoped cache, for [[supportEdgesOrFrame]],
+    * whose [[RegimeGate]] owns the pair frame's cache.
     */
   private[graft] def supportPairsPlan(lineitem: DataFrame): DataFrame =
     (
@@ -146,8 +143,8 @@ object Graph {
         .select(col("pa"), col("pb")))
 
   /** Driver wedge budget (r18, per-round review): the edge bound
-    * ([[graft.operators.Dedup.DriverFinishEdges]]) was sized for the
-    * O(V+E) finishes (gr5/pr1/componentsOf union-find and label rounds),
+    * ([[RegimeGate.DriverRows]]) was sized for the O(V+E) finishes
+    * (gr5/pr1/componentsOf union-find and label rounds),
     * but the WEDGE-shaped finishes — gr2/gr4's per-edge neighbor-set
     * intersections, gr3's open-wedge accumulator — cost O(Σ deg²) driver
     * time, and gr3 additionally O(#open wedges) driver MEMORY: a
@@ -163,78 +160,49 @@ object Graph {
     */
   private[graft] val DriverWedgeBudget = 4000000L
 
-  /** Σ deg² of the collected oriented edge list — the wedge-count bound
-    * the driver-finish budget gates on.
-    */
-  private def sumDegSq(es: Array[(Long, Long)]): Long = {
+  /** Undirected degree of every node of a collected edge list. */
+  private def degrees(es: Array[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
     val deg = new scala.collection.mutable.LongMap[Long]()
     es.foreach { case (a, b) =>
       deg(a) = deg.getOrElse(a, 0L) + 1
       deg(b) = deg.getOrElse(b, 0L) + 1
     }
-    var s = 0L
-    deg.foreachValue(d => s += d * d)
-    s
+    deg
   }
 
-  /** The support-pruned edge list in whichever regime fits (r17, the
-    * gr-family application of componentsOf's two-regime shape): `Left` —
-    * the collected oriented edges for a driver finish when the graph is
-    * broadcast-sized (≤ `max` edges, long keys; the support ≥ 2 filter
-    * prunes the edge list to true co-purchase affinity at any corpus
-    * scale, measured 3.6–3.9k edges across sf0.01→0.1); `Right` — the
-    * eagerly-checkpointed edge frame for the unchanged distributed
-    * plans. Explicit persist (not scopedPersist) because the
-    * regime-deciding count is an action that would consume a scoped
-    * cache; the checkpoint materializes FROM the cache, and the cache
-    * is dropped either way once the surviving regime holds its artifact.
+  /** The support-pruned edge list in whichever regime [[RegimeGate]]
+    * picks: `Left` — the collected oriented edges for a driver finish
+    * (the support ≥ 2 filter prunes the edge list to true co-purchase
+    * affinity at any corpus scale, measured 3.6–3.9k edges across
+    * sf0.01→0.1); `Right` — the checkpointed edge frame for the
+    * unchanged distributed plans.
     *
-    * `wedgeBudget` (r18): callers whose driver finish enumerates wedges
-    * pass [[DriverWedgeBudget]]; an edge list under `max` but over the
-    * wedge budget is re-distributed (a `Right` built from the collected
-    * rows — one extra driver round-trip on a path that is by definition
-    * rare) instead of handed to a quadratic local loop. Σ deg² is
-    * computed driver-side from the already-collected edges, so the
-    * common case pays zero extra Spark jobs.
+    * `wedgeBudget`: callers whose driver finish enumerates wedges pass
+    * [[DriverWedgeBudget]]; a collected edge list whose Σ deg² exceeds it
+    * is shipped back out as a `Right` instead of handed to a quadratic
+    * local loop. Σ deg² is computed from the collected edges, so the
+    * common case pays no extra Spark job.
     */
   private[graft] def supportEdgesOrFrame(
       lineitem: DataFrame,
       max: Long,
-      wedgeBudget: Long = Long.MaxValue): Either[Array[(Long, Long)], DataFrame] = {
-    val p = supportPairsPlan(lineitem)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allLong = p.schema.fields.map(_.dataType)
-      .forall(_ == org.apache.spark.sql.types.LongType)
-    // ONE bounded action decides the regime AND delivers the small-regime
-    // data (r21, the bpeTrainRaw gate's convention): limit(max+1) returns
-    // every row when the frame is at or under the bound and max+1
-    // otherwise, so the separate count() job — a full extra pass per gr
-    // query — is gone. The persist still backs the over-bound regime: the
-    // checkpoint reads the partitions the collect materialized (a
-    // short-circuited limit leaves late partitions to recompute from the
-    // already-written shuffle outputs, not from the fact scan).
-    val bound = math.min(max, Int.MaxValue - 1L).toInt
-    val head = if (allLong) p.limit(bound + 1).collect() else Array.empty[org.apache.spark.sql.Row]
-    if (allLong && head.length <= bound) {
-      val es = head.map(r => (r.getLong(0), r.getLong(1)))
-      p.unpersist(blocking = false)
-      if (sumDegSq(es) <= wedgeBudget) Left(es)
-      else {
-        // Over-budget fallback: ship the collected edges back out as a
-        // properly-partitioned frame (a bare LocalTableScan would run
-        // every downstream join single-partition on the driver).
-        val spark = lineitem.sparkSession
-        import spark.implicits._
-        Right(es.toSeq.toDF("pa", "pb")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .localCheckpoint())
-      }
-    } else {
-      val ckpt = p.localCheckpoint()
-      p.unpersist(blocking = false)
-      Right(ckpt)
+      wedgeBudget: Long = Long.MaxValue): Either[Array[(Long, Long)], DataFrame] =
+    RegimeGate(supportPairsPlan(lineitem), max)(_.localCheckpoint()) match {
+      case Right(ckpt) => Right(ckpt)
+      case Left(rows) =>
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        if (degrees(es).values.map(d => d * d).sum <= wedgeBudget) Left(es)
+        else {
+          // Over-budget fallback: a properly-partitioned frame (a bare
+          // LocalTableScan would run every downstream join
+          // single-partition on the driver).
+          val spark = lineitem.sparkSession
+          import spark.implicits._
+          Right(es.toSeq.toDF("pa", "pb")
+            .repartition(spark.sparkContext.defaultParallelism)
+            .localCheckpoint())
+        }
     }
-  }
 
   /** [[basketItems]]'s DuckDB mirror — ONE template for the gr2 and gr3
     * oracles so the cap rule cannot drift between engines or schemes.
@@ -281,125 +249,84 @@ object Graph {
     */
   private[graft] def pagerankCore(
       docs: DataFrame,
-      driverFinishMax: Long = Dedup.DriverFinishEdges): DataFrame = {
-    // The pair set MUST persist before fan-out: the undirected union reads
-    // it twice and the degree aggregate a third time, so an unpersisted
-    // pair plan runs the whole band-route-and-verify pipeline 4x inside
-    // the one materialization below. A/B at sf0.1/local[32] (contended
-    // box, single-query runs): ~25% CPU drop (2m59s -> 2m11s) and the
-    // redundant pipeline stages disappear from the UI; bench-line delta
-    // 7.6 -> 5.9 s against a noisier background. Budget: 4.42 s isolated
-    // min-of-3 (r15, probes 0.40/0.54, the probe convention's canonical
-    // line — r14's official 7.08 s ran on the CONTENTION-SUSPECT
-    // artifact's contended start, adjudicated noise, not regression;
-    // earlier anchors: 3.9 s r13 min-of-3, 4.0 s r12 suite — stable,
-    // the cost is the band-route-and-verify pair build, shared with dd3).
-    //
-    // Explicit persist (componentsOf's convention, not scopedPersist):
-    // the regime-deciding count below is an ACTION, and a scoped cache
-    // would be consumed by it — the surviving regime would then re-run
-    // the whole band-route-and-verify pipeline. Lifecycle is owned here:
-    // released as soon as the surviving regime has what it needs (the
-    // collected edge list, or the checkpointed edges+degrees frame).
+      driverFinishMax: Long = RegimeGate.DriverRows): DataFrame = {
+    // The gate persists the pair set before fan-out: the undirected union
+    // reads it twice and the degree aggregate a third time, so an
+    // unpersisted pair plan runs the whole band-route-and-verify pipeline
+    // 4x inside the one materialization below (A/B at sf0.1/local[32]:
+    // ~25% CPU drop, 2m59s -> 2m11s).
     val pairs = Dedup.verifiedPairsOf(
         graft.engine.Caching.scopedPersist(Dedup.shingledOf(docs)))
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = docs.select(col("doc_id"))
-    val allLong = pairs.schema.fields.map(_.dataType)
-      .forall(_ == org.apache.spark.sql.types.LongType) &&
-      nodes.schema.fields.head.dataType ==
-        org.apache.spark.sql.types.LongType
-    // Driver finish (r17, extending componentsOf's r16 two-regime shape
-    // to the OTHER fixed-iteration graph loop — the r16 official artifact
-    // confirmed the componentsOf finish held up under driver conditions,
-    // −5.3 s across its call sites): the verified near-dup edge list is
-    // affinity-sized (thousands of pairs at bench scale), yet each of the
-    // 3 distributed power-iteration rounds re-joins the CORPUS-sized rank
-    // frame and re-plans 2 exchanges — pure scheduling latency for
-    // driver-trivial arithmetic. Below the bound, collect the edges and
-    // run the 3 rounds over the ACTIVE subgraph (nodes touching >= 1
-    // edge) as local floats; every isolated node's rank is closed-form
-    // (1-d)/n after the first round (no in-edges, so its recurrence is
-    // constant), so the full corpus rejoins as a broadcast map + floor
-    // coalesce — the broadcast-join decision shape, not a driver-side
-    // anti-pattern. Arithmetic parity: the local recurrence replays the
-    // EXACT expressions the distributed form used (0.15/n as a literal
-    // division, r/deg contributions, 0.85 damping), so the only drift is
-    // per-node summation order — the ~1e-17 class the 1e-6 rounding grid
-    // already absorbs (scaladoc above). Above the bound or for non-long
-    // ids, the edge-partitioned distributed rounds run unchanged;
-    // GraphSpec drives the centrality axioms in BOTH regimes.
-    // ONE bounded action decides the regime AND delivers the edges (r21,
-    // the componentsAssignment/supportEdgesOrFrame convention — the
-    // separate regime-deciding count() was a full extra job per query).
-    val bound = math.min(driverFinishMax, Int.MaxValue - 1L).toInt
-    val head =
-      if (allLong) pairs.limit(bound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (allLong && head.length <= bound) {
-      val es = head.map(r => (r.getLong(0), r.getLong(1)))
-      pairs.unpersist(blocking = false)
-      val n = nodes.count().toDouble
-      val deg = new scala.collection.mutable.LongMap[Long]()
-      es.foreach { case (a, b) =>
-        deg(a) = deg.getOrElse(a, 0L) + 1
-        deg(b) = deg.getOrElse(b, 0L) + 1
-      }
-      var r = new scala.collection.mutable.LongMap[Double]()
-      deg.keys.foreach(k => r(k) = 1.0 / n)
-      for (_ <- 1 to Iterations) {
-        val contrib = new scala.collection.mutable.LongMap[Double]()
-        es.foreach { case (a, b) =>
-          contrib(b) = contrib.getOrElse(b, 0.0) + r(a) / deg(a)
-          contrib(a) = contrib.getOrElse(a, 0.0) + r(b) / deg(b)
+    RegimeGate(pairs, driverFinishMax, Some(nodes)) { p =>
+      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+      // EAGER: one materialization serves all three iterations' joins
+      edges.join(deg, "src").localCheckpoint()
+    } match {
+      case Left(rows) =>
+        // Driver finish: the verified near-dup edge list is affinity-sized
+        // (thousands of pairs at bench scale), yet each distributed round
+        // re-joins the CORPUS-sized rank frame and re-plans 2 exchanges.
+        // The 3 rounds run over the ACTIVE subgraph (nodes touching >= 1
+        // edge) as local doubles; every isolated node's rank is
+        // closed-form (1-d)/n after the first round, so the corpus rejoins
+        // as a broadcast map + floor coalesce. The local recurrence replays
+        // the EXACT expressions of the distributed form (0.15/n as a
+        // literal division, r/deg contributions, 0.85 damping), so the
+        // only drift is per-node summation order, which the 1e-6 rounding
+        // grid absorbs.
+        val es = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val n = nodes.count().toDouble
+        val deg = degrees(es)
+        var r = new scala.collection.mutable.LongMap[Double]()
+        deg.keys.foreach(k => r(k) = 1.0 / n)
+        for (_ <- 1 to Iterations) {
+          val contrib = new scala.collection.mutable.LongMap[Double]()
+          es.foreach { case (a, b) =>
+            contrib(b) = contrib.getOrElse(b, 0.0) + r(a) / deg(a)
+            contrib(a) = contrib.getOrElse(a, 0.0) + r(b) / deg(b)
+          }
+          val next = new scala.collection.mutable.LongMap[Double]()
+          deg.keys.foreach { k =>
+            next(k) = 0.15 / n + Damping * contrib.getOrElse(k, 0.0)
+          }
+          r = next
         }
-        val next = new scala.collection.mutable.LongMap[Double]()
-        deg.keys.foreach { k =>
-          next(k) = 0.15 / n + Damping * contrib.getOrElse(k, 0.0)
+        val floor = 0.15 / n // every isolated node after round 1, exactly
+        val spark = docs.sparkSession
+        import spark.implicits._
+        val active = r.toSeq.map { case (k, v) => (k, v) }
+        nodes
+          .join(broadcast(active.toDF("nid", "r")),
+            col("doc_id") === col("nid"), "left")
+          .select(col("doc_id"),
+            round(coalesce(col("r"), lit(floor)) * lit(n), 6)
+              .as("pagerank_scaled"))
+          .orderBy("doc_id")
+      case Right(out) =>
+        val nF = nodes.agg(count(lit(1)).as("n"))
+        var ranks = nodes.crossJoin(broadcast(nF))
+          .select(col("doc_id"), (lit(1.0) / col("n")).as("r"))
+        for (_ <- 1 to Iterations) {
+          val contribs = ranks
+            .join(out, col("doc_id") === col("src"))
+            .select(col("dst"), (col("r") / col("deg")).as("c"))
+            .groupBy("dst").agg(sum(col("c")).as("contrib"))
+          ranks = nodes.crossJoin(broadcast(nF))
+            .join(contribs, col("doc_id") === col("dst"), "left")
+            .select(col("doc_id"),
+              // 0.15 as a LITERAL, not 1 - 0.85: the subtraction lands one
+              // ulp off the 0.15 the oracle parses, a real hash divergence
+              (lit(0.15) / col("n") +
+                lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("r"))
         }
-        r = next
-      }
-      val floor = 0.15 / n // every isolated node after round 1, exactly
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val active = r.toSeq.map { case (k, v) => (k, v) }
-      return nodes
-        .join(broadcast(active.toDF("nid", "r")),
-          col("doc_id") === col("nid"), "left")
-        .select(col("doc_id"),
-          round(coalesce(col("r"), lit(floor)) * lit(n), 6)
-            .as("pagerank_scaled"))
-        .orderBy("doc_id")
+        ranks.crossJoin(broadcast(nF))
+          .select(col("doc_id"), round(col("r") * col("n"), 6).as("pagerank_scaled"))
+          .orderBy("doc_id")
     }
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // EAGER checkpoint (componentsOf's seed discipline): one
-    // materialization serves all three iterations' joins, and its blocks
-    // are what lets the pair cache release before the rounds run.
-    val out = edges.join(deg, "src").localCheckpoint()
-    pairs.unpersist(blocking = false)
-    val nF = nodes.agg(count(lit(1)).as("n"))
-
-    var ranks = nodes.crossJoin(broadcast(nF))
-      .select(col("doc_id"), (lit(1.0) / col("n")).as("r"))
-    for (_ <- 1 to Iterations) {
-      val contribs = ranks
-        .join(out, col("doc_id") === col("src"))
-        .select(col("dst"), (col("r") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("contrib"))
-      ranks = nodes.crossJoin(broadcast(nF))
-        .join(contribs, col("doc_id") === col("dst"), "left")
-        .select(col("doc_id"),
-          // 0.15 as a LITERAL, not 1 - 0.85: the subtraction lands one
-          // ulp off the 0.15 the oracle parses, a real hash divergence
-          (lit(0.15) / col("n") +
-            lit(Damping) * coalesce(col("contrib"), lit(0.0))).as("r"))
-    }
-    ranks.crossJoin(broadcast(nF))
-      .select(col("doc_id"), round(col("r") * col("n"), 6).as("pagerank_scaled"))
-      .orderBy("doc_id")
   }
 
   /** gr2 — triangle participation in the market-basket affinity graph:
@@ -440,7 +367,7 @@ object Graph {
     */
   private[graft] def trianglesCore(
       lineitem: DataFrame,
-      driverFinishMax: Long = Dedup.DriverFinishEdges,
+      driverFinishMax: Long = RegimeGate.DriverRows,
       wedgeBudget: Long = DriverWedgeBudget): DataFrame =
     supportEdgesOrFrame(lineitem, driverFinishMax, wedgeBudget) match {
       case Left(es) =>
@@ -498,7 +425,7 @@ object Graph {
     */
   private[graft] def clusteringCoefficientCore(
       lineitem: DataFrame,
-      driverFinishMax: Long = Dedup.DriverFinishEdges,
+      driverFinishMax: Long = RegimeGate.DriverRows,
       wedgeBudget: Long = DriverWedgeBudget): DataFrame =
     supportEdgesOrFrame(lineitem, driverFinishMax, wedgeBudget) match {
       case Left(es) =>
@@ -584,7 +511,7 @@ object Graph {
 
   private[graft] def linkPredictionCore(
       lineitem: DataFrame,
-      driverFinishMax: Long = Dedup.DriverFinishEdges,
+      driverFinishMax: Long = RegimeGate.DriverRows,
       wedgeBudget: Long = DriverWedgeBudget): DataFrame =
     supportEdgesOrFrame(lineitem, driverFinishMax, wedgeBudget) match {
       case Left(es) =>
@@ -710,21 +637,12 @@ object Graph {
     */
   private[graft] def componentsCore(
       lineitem: DataFrame,
-      driverFinishMax: Long = Dedup.DriverFinishEdges): DataFrame =
-    // Regime gate via [[supportEdgesOrFrame]] (r18, per-round review —
-    // this previously inlined its own persist/allLong/count/collect
-    // lifecycle; two copies of the cache-and-type-gate convention can
-    // drift, the dd5 lesson). Driver finish (r17, the same two-regime
-    // shape as componentsOf and pr1): the support-pruned edge list is
-    // affinity-sized (~4k edges at bench scale), yet the 3 unrolled
-    // HashToMin rounds + the size window re-plan ~6 exchanges of
-    // driver-trivial integer work. Below the bound, replay EXACTLY the
-    // 3 min-label rounds locally (all integers — zero arithmetic drift,
-    // unlike pr1's float class; O(V+E) per round, so no wedge budget
-    // applies); above it, or for non-long keys, the distributed rounds
-    // run unchanged. GraphSpec drives the planted-clique/chain contracts
-    // in BOTH regimes, including the honestly-unconverged diameter-5
-    // case.
+      driverFinishMax: Long = RegimeGate.DriverRows): DataFrame =
+    // Driver finish: the support-pruned edge list is affinity-sized (~4k
+    // edges at bench scale), yet the 3 unrolled HashToMin rounds + the
+    // size window re-plan ~6 exchanges of driver-trivial integer work.
+    // The driver replays EXACTLY the 3 min-label rounds (all integers —
+    // zero arithmetic drift; O(V+E) per round, so no wedge budget).
     supportEdgesOrFrame(lineitem, driverFinishMax) match {
       case Left(es) =>
         val nbrs = new scala.collection.mutable.LongMap[List[Long]]()

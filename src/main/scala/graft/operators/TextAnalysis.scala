@@ -516,29 +516,19 @@ object TextAnalysis {
       .toDF("step", "pair", "unit", "n_occurrences")
   }
 
-  /** Vocab-row bound under which [[bpeTrainRaw]] elects its merges on
-    * the driver (r20, the dd5 [[graft.operators.Dedup.DriverFinishEdges]]
-    * convention): a `(distinct [a-z]+ token, long weight)` row is tens
-    * of bytes, so 1M rows is broadcast-build-side sized — the regime
-    * where Spark itself would ship the frame to every executor. Above
-    * the bound (or when a caller forces it) the distributed elect loop
-    * below runs unchanged.
-    */
-  private[graft] val DriverVocabRows = 1000000L
-
   /** The trainer itself, returning the raw merge list (t22's encode
     * applies `replace(t, rp, digit)` in step order).
     *
-    * Two regimes, decided by ONE bounded collect on the distinct-token
-    * frame (r20): the k-step elect→merge→recount loop iterates on
-    * VOCAB-sized data (the Zipf crush above), yet the distributed form
-    * paid 2 jobs / ~4 AQE stages per step — ~24 sequential driver
-    * round-trips for t21/t22/t31 each, the dominant cost of all three
-    * at bench scale (t31 profiled at 33 stages with 0.7 s of task
-    * time). At or below [[DriverVocabRows]] the loop now runs in plain
-    * Scala on the collected vocab — integer weights, the same 2-char
-    * windows, the same (n desc, decoded-pair asc) election and the same
-    * non-overlapping left-to-right `replace` (`String.replace` and
+    * Two regimes, picked by [[graft.engine.RegimeGate]] on the
+    * distinct-token frame (r20): the k-step elect→merge→recount loop
+    * iterates on VOCAB-sized data (the Zipf crush above), yet the
+    * distributed form paid 2 jobs / ~4 AQE stages per step — ~24
+    * sequential driver round-trips for t21/t22/t31 each, the dominant
+    * cost of all three at bench scale (t31 profiled at 33 stages with
+    * 0.7 s of task time). At or below the gate's bound the loop runs in
+    * plain Scala on the collected vocab — integer weights, the same
+    * 2-char windows, the same (n desc, decoded-pair asc) election and the
+    * same non-overlapping left-to-right `replace` (`String.replace` and
     * Spark's `StringReplace` share the contract), so the merge list is
     * bit-identical (TextAnalysisSpec pins both regimes on seeded random
     * corpora; the sf0.001/0.01/0.1 oracle hashes are unchanged). The
@@ -548,11 +538,8 @@ object TextAnalysis {
     * the distributed loop unchanged.
     */
   private[graft] def bpeTrainRaw(tokens: DataFrame, k: Int,
-      driverVocabMax: Long = DriverVocabRows): Seq[BpeMerge] = {
+      driverVocabMax: Long = graft.engine.RegimeGate.DriverRows): Seq[BpeMerge] = {
     require(k >= 1 && k <= 10, "sentinel alphabet is '0'-'9'")
-    // r20 ADVICE: overrides above Int.MaxValue would wrap limit()'s
-    // argument negative; clamp instead of trusting the private caller.
-    val bound = math.min(driverVocabMax, Int.MaxValue - 1L).toInt
     // r20 ADVICE: both regimes ignore length-1 tokens (the driver loop
     // counts no pairs for them and drops them on merge; the distributed
     // elect's sequence(1, length-1) would instead DESCEND and fabricate
@@ -562,22 +549,12 @@ object TextAnalysis {
     val vocab0 = tokens.select(col("token").as("t"))
       .filter(length(col("t")) >= 2)
       .groupBy("t").agg(count(lit(1)).as("w"))
-      // r20 ADVICE: cached so the LARGE regime's first checkpoint reads
-      // the partitions the gate's collect already materialized instead
-      // of re-running the full vocab aggregate (limit() may leave late
-      // partitions uncached when it short-circuits past the bound —
-      // those alone recompute). The small regime pays only block
-      // bookkeeping on a vocab-sized frame and releases it immediately.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // One job decides the regime AND delivers the small-regime data:
-    // limit(bound+1) caps the collect at bound+1 rows (a count-first
-    // gate would pay a second full aggregate in both regimes).
-    val head = vocab0.limit(bound + 1).collect()
-    try {
-      if (head.length <= bound)
-        bpeTrainDriver(head.iterator.map(r => (r.getString(0), r.getLong(1))), k)
-      else bpeTrainDistributed(vocab0, k)
-    } finally vocab0.unpersist(blocking = false)
+    graft.engine.RegimeGate(vocab0, driverVocabMax, longKeys = false)(
+        _.localCheckpoint()) match {
+      case Left(rows) =>
+        bpeTrainDriver(rows.iterator.map(r => (r.getString(0), r.getLong(1))), k)
+      case Right(vocab) => bpeTrainDistributed(vocab, k)
+    }
   }
 
   /** Driver-regime trainer: the elect loop over a collected vocabulary.
@@ -629,12 +606,12 @@ object TextAnalysis {
   }
 
   /** Distributed-regime trainer (the pre-r20 form, unchanged): one
-    * elect job + one re-segment checkpoint per step over the vocab
-    * frame.
+    * elect job + one re-segment checkpoint per step over the
+    * checkpointed vocab frame.
     */
   private def bpeTrainDistributed(
       vocab0: DataFrame, k: Int): Seq[BpeMerge] = {
-    var vocab = vocab0.localCheckpoint()
+    var vocab = vocab0
     val units = scala.collection.mutable.LinkedHashMap[String, String]()
     val merges = Seq.newBuilder[BpeMerge]
     var dry = false

@@ -51,6 +51,22 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"build the session through GraftSession: $hits")
   }
 
+  test("RegimeGate is the only code that clamps a bound and collects bound + 1 rows") {
+    import scala.jdk.CollectionConverters._
+    val copies = Seq("""limit\(\s*\w+\s*\+\s*1\s*\)""".r, """Int\.MaxValue\s*-\s*1L""".r)
+    val walked = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try walked.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "RegimeGate.scala")
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        copies.exists(_.findFirstIn(src).isDefined)
+      }
+      .map(_.toString).toList
+      finally walked.close()
+    assert(hits.isEmpty, s"gate through graft.engine.RegimeGate: $hits")
+  }
+
   test("extensions object injects without error at construction") {
     // smoke: applying the extensions hook to a fresh container must not
     // throw (full wiring needs a new session, which local tests share)

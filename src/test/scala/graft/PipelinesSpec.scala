@@ -115,6 +115,18 @@ class PipelinesSpec extends AnyFunSuite {
     }
   }
 
+  test("jobsDuring counts jobs from other threads and other job groups") {
+    val sc = spark.sparkContext
+    val (_, jobs) = TestSpark.jobsDuring {
+      // a pooled thread carries no inherited job group
+      val t = new Thread(() => { sc.clearJobGroup(); sc.parallelize(Seq(1, 2), 2).count() })
+      t.start(); t.join()
+      sc.setJobGroup("jobs-during-own-group", "body's own group")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    assert(jobs == 2, s"$jobs jobs")
+  }
+
   test("EP3 xlsx sink runs one job for all of mapPipeline's tables") {
     val tables = Pipelines.mapPipeline(
       graft.sources.Loader.load(spark, csvPath), everyColumn)

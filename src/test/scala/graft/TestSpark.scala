@@ -14,30 +14,38 @@ object TestSpark {
     s
   }
 
-  /** The body's result and the jobs it submits from this thread. Listener
-    * events arrive asynchronously but in order, so a marker job submitted
-    * afterwards proves every earlier job-start event has been delivered. */
+  /** The body's result and the number of jobs that start while it runs,
+    * whatever thread or job group submits them: every job that starts
+    * between a start marker job and an end marker job. Suites run one at
+    * a time in the forked test JVM, so no other test's jobs fall in the
+    * window. Listener events arrive asynchronously but in order, so the
+    * end marker's start event proves every earlier one has been
+    * delivered. */
   def jobsDuring[A](body: => A): (A, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = group + "-marker"
+    val id = java.util.UUID.randomUUID()
+    val (start, end) = (s"jobs-$id-start", s"jobs-$id-end")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
+      @volatile private var counting = false
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ => ()
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `start` => counting = true
+          case `end` => counting = false; drained.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
         }
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "counted")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      marker(start)
+      val result = body
+      marker(end)
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
       (result, jobs.get)
     } finally sc.removeSparkListener(listener)
