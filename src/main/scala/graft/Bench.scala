@@ -543,8 +543,6 @@ object Bench {
         System.err.println(s"[bench] full-record write failed: ${e.getMessage}")
       }
     }
-    graft.sources.Lake.cleanupScratch(spark)
-    graft.operators.Relational.cleanupBucketScratch(spark)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

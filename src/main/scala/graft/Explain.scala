@@ -59,6 +59,6 @@ object Explain {
             println(s"[explain] $n failed: ${e.getMessage}")
           }
       }
-    } finally spark.stop()
+    } finally GraftSession.stop(spark)
   }
 }

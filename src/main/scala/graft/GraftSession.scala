@@ -52,6 +52,17 @@ object GraftSession {
       bb.config("spark.sql.shuffle.partitions", n.toString))
   }
 
+  /** Stop `spark` after deleting the scratch tables its queries wrote:
+    * the lake's `target/lake/<app id>` tree and the bucketed `j5_*`
+    * warehouse tables. Entry points call it in a `finally`, so a failed
+    * run cleans up too.
+    */
+  def stop(spark: SparkSession): Unit =
+    try {
+      graft.sources.Lake.cleanupScratch(spark)
+      graft.operators.Relational.cleanupBucketScratch(spark)
+    } finally spark.stop()
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", defaultParallelism = Some(cores))
       .config("spark.ui.enabled", "false")

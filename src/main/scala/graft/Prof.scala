@@ -57,6 +57,6 @@ object Prof {
       (1 to 3).foreach(i => time(s"$n #$i")(
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()))
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

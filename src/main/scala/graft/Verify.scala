@@ -12,6 +12,12 @@ object Verify {
       prefixes.forall(_.exists(name.startsWith))
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    try dump(spark, sfDir, outDir, selected)
+    finally GraftSession.stop(spark)
+  }
+
+  private def dump(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      outDir: String, selected: String => Boolean): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).zipWithIndex.foreach {
       case ((name, fn), i) =>
@@ -54,8 +60,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.sources.Lake.cleanupScratch(spark)
-    graft.operators.Relational.cleanupBucketScratch(spark)
-    spark.stop()
   }
 }

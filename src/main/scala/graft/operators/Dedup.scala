@@ -213,7 +213,7 @@ object Dedup {
     // produces the same count on both engines.
     val p = toks.select(col("doc_id"),
       array_distinct(transform(col("tks"),
-        x => conv(md5(x).substr(1, 15), 16, 10).cast("long"))).as("ts"))
+        x => graft.functions.CorpusKernels.token60(x))).as("ts"))
     // One md5 per distinct token; the 8 "permutations" are its disjoint
     // 4-hex-char windows — the SAME signatures() aggregate dd3 uses on
     // shingles, so the two schemes cannot drift.
@@ -486,27 +486,15 @@ object Dedup {
     * oracle-checked (DuckDB has >>, &, xor, bit_count on BIGINT).
     */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    // SCAN-LOCAL votes (r20, the dd3 signatures precedent): the per-doc
-    // bit votes were an explode through a corpus-sized 60-column hash
-    // aggregate whose groups were exactly the input rows. The token set
-    // already lives in one array per row, so vote_i = 2·|{h: bit i
-    // set}| − |set| is a filter-size fold over the hashed array — no
-    // explode, no exchange. EvalOnce pins the md5 array against
-    // CollapseProject inlining the hashing 60x; the size ≥ 1 guard
-    // reproduces the explode's empty/null-token-set absence. Same-box
-    // isolated min-of-4 A/B at sf0.1: 1.468 -> 1.219 s.
-    val hs = graft.functions.EvalOnce.once(
-      transform(tokenSet(col("text")),
-        tok => conv(md5(tok).substr(1, 15), 16, 10).cast("long")))
-    val fp = (0 until 60).map(i =>
-      when(lit(2) * size(filter(col("hs"),
-            h => shiftright(h, i).bitwiseAND(1) === 1)) - size(col("hs")) > 0,
-        shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce(_.bitwiseOR(_))
+    // SCAN-LOCAL votes: the compiled kernel folds each document's token
+    // set into its fingerprint in the scan projection — no explode, no
+    // exchange. It is NULL for an empty or null token set (the docs an
+    // explode would drop); EvalOnce keeps the NULL filter from being
+    // pushed below the projection, which would hash every set twice.
     val fps = tWide(spark, dir, "documents")
-      .select(col("doc_id"), hs.as("hs"))
-      .filter(size(col("hs")) >= 1)
-      .select(col("doc_id"), fp.as("fp"))
+      .select(col("doc_id"), graft.functions.EvalOnce.once(
+        graft.functions.CorpusKernels.simhash60(tokenSet(col("text")))).as("fp"))
+      .filter(col("fp").isNotNull)
     val bands = (0 until 4).map(b =>
       struct(lit(b).as("band"),
         shiftright(col("fp"), b * 15).bitwiseAND(0x7FFFL).as("chunk")))
@@ -997,9 +985,8 @@ object Dedup {
     // One md5 per window; array_distinct BEFORE the explode so repeated
     // boilerplate inside one document counts once.
     val wins = toks.select(col("doc_id"),
-      explode(array_distinct(transform(
-        sequence(lit(1), size(col("tk")) - (k - 1)),
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(k))))))).as("wh"))
+      explode(array_distinct(graft.functions.CorpusKernels.kgramMd5(
+        col("tk"), k))).as("wh"))
     val corpus = wins.select(explode(
         when(isEvalSplit(col("doc_id")),
           array(col("doc_id"), col("doc_id") + IdShift))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{r6, r6s, t}
+import graft.functions.CorpusKernels.longSqL2
 
 /** Similarity search over the `embeddings` table (`Array[Float]` vectors,
   * north-star extension, SURVEY.md §2.5): brute-force cosine top-k as the
@@ -12,9 +13,11 @@ import graft.Tables.{r6, r6s, t}
   *
   * Numeric portability: floats are cast to double BEFORE any arithmetic
   * (float→double is exact), and the dot product is a strict left-to-right
-  * fold (`aggregate` over `zip_with`) — the same evaluation order DuckDB's
-  * `list_dot_product` uses on `DOUBLE[]` — so Spark and the oracle produce
-  * bit-identical cosines, rounded to 6 only as belt-and-braces.
+  * sum ([[graft.functions.FloatDotProduct]]) — the same evaluation order
+  * DuckDB's `list_dot_product` uses on `DOUBLE[]` — so Spark and the
+  * oracle produce bit-identical cosines, rounded to 6 only as
+  * belt-and-braces. The integer-grid operators (sim8, sim12) take exact
+  * squared distances with [[graft.functions.LongSquaredL2]].
   *
   * Scale design: the quantizer's hyperplane-bit count b GROWS WITH THE
   * CORPUS ([[Similarity.chooseBits]]: smallest b with 2^b >= n/32), so
@@ -563,8 +566,8 @@ object Similarity {
     *
     * Scale shape: both assignment passes keep vectors in ARRAY form and
     * run SCAN-LOCAL — the K-row centroid table collapses to one broadcast
-    * cid-sorted array row and each corpus row folds its argmin over it in
-    * the projection (K zip_with/aggregate integer folds; no row fan-out,
+    * cid-sorted array row and each corpus row takes its argmin over it in
+    * the projection (K compiled `long_sq_l2` distances; no row fan-out,
     * no per-vector exchange, no window). Only the mean update explodes to
     * (vector, dim) long format, and its hash aggregate combines map-side
     * down to K×64 rows before the exchange. The corpus never self-joins;
@@ -609,10 +612,6 @@ object Similarity {
       .join(broadcast(kPrm))
       .filter(col("cid") < col("k"))
       .select(col("cid"), col("v6").as("c6"))
-    // Exact integer squared L2 between two micro-unit long arrays.
-    def dist2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
-        lit(0L), (acc, v) => acc + v)
     // Scan-local nearest-centroid argmin (r20, replacing the K-row
     // fan-out join + per-vec_id rank window of r13–r19): the centroid
     // table collapses to ONE cid-sorted array row, the broadcast ships
@@ -620,15 +619,14 @@ object Similarity {
     // per-centroid (d2, cid) structs in the scan projection — no row
     // blowup, no vec_id exchange, no window. Struct ordering compares
     // (d2, cid) lexicographically, which IS rank 1 under the old
-    // (d2 asc, cid asc) window order. d2 stays the same exact integer
-    // arithmetic, so no float-summation order can diverge between
-    // engines.
+    // (d2 asc, cid asc) window order. d2 is exact integer arithmetic,
+    // so no float-summation order can diverge between engines.
     def asRow(centroids: DataFrame): DataFrame =
       centroids.agg(sort_array(collect_list(struct(col("cid"), col("c6"))))
         .as("cents"))
     def nearest(cents: Column, v: Column): Column =
       array_min(transform(cents,
-        c => struct(dist2(v, c.getField("c6")).as("d2"),
+        c => struct(longSqL2(v, c.getField("c6")).as("d2"),
           c.getField("cid").as("cid"))))
         .getField("cid")
     val a0 = e6.join(broadcast(asRow(seeds)))
@@ -844,9 +842,9 @@ object Similarity {
     * Scale shape: one posexplode aggregate builds the (labels × dims)
     * centroid table (map-side combine; output is dimension-sized), the
     * centroid array frame broadcasts, and the distance pass is
-    * scan-local per point (|labels| array folds) into a per-point min —
-    * the corpus is scanned twice (centroids, distances), never joined to
-    * itself.
+    * scan-local per point (|labels| `long_sq_l2` distances) into a
+    * per-point min — the corpus is scanned twice (centroids, distances),
+    * never joined to itself.
     */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
     val e6 = t(spark, dir, "embeddings").select(col("vec_id"), col("label"),
@@ -862,8 +860,7 @@ object Similarity {
         s => s.getField("c6")).as("c6l"))
     val d = e6.join(broadcast(centArr))
       .select(col("vec_id"), col("label"), col("c_label"),
-        aggregate(zip_with(col("v6"), col("c6l"), (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, v) => acc + v).as("d2"))
+        longSqL2(col("v6"), col("c6l")).as("d2"))
     val ab = d.groupBy("vec_id", "label")
       .agg(min(when(col("c_label") === col("label"), col("d2"))).as("a2"),
         min(when(col("c_label") =!= col("label"), col("d2"))).as("b2"))

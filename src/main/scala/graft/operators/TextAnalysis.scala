@@ -1142,28 +1142,25 @@ object TextAnalysis {
     * fewer than two tokens carry zero bigrams and a null novelty.
     *
     * Scale shape: one explode into the distinct (doc, shingle) domain,
-    * a min-aggregate over the shingle domain (map-side combine), one
-    * join back on the shingle key, and a per-doc aggregate — the same
-    * explode-then-hash-aggregate discipline as the rest of the family;
-    * no corpus self-join. At 100 TB "first" stays well-defined because
+    * `min(doc_id)` over a window partitioned by shingle, and a per-doc
+    * aggregate, so the tokenize+shingle+explode chain runs once; no
+    * corpus self-join. At 100 TB "first" stays well-defined because
     * doc_id is the global ingest order.
     *
-    * Width pin (r21, the r20 verdict's #6 — t26 was the audited
-    * "s-keyed exchange already shared" stage floor): the exchange IS
-    * shared (both consumers reuse it), but the tokenize+shingle+explode
-    * chain FEEDING it ran as one task under the row-group pin. Isolated
-    * min-of-4 ABAB at sf0.1/local[32], quiet cycles: pinned 0.84/0.93 s
-    * vs unpinned 1.42/1.47 s.
+    * Width pin (r21): the tokenize+shingle+explode chain ran as one task
+    * under the row-group pin. Isolated min-of-4 ABAB at sf0.1/local[32],
+    * quiet cycles: pinned 0.84/0.93 s vs unpinned 1.42/1.47 s.
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.rawShingles
+    import org.apache.spark.sql.expressions.Window
     val docs = tWide(spark, dir, "documents")
       .select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
     val ds = docs.filter(size(col("tk")) >= 2)
       .select(col("doc_id"),
         explode(array_distinct(rawShingles(col("tk")))).as("s"))
-    val firsts = ds.groupBy(col("s")).agg(min(col("doc_id")).as("first_doc"))
-    val per = ds.join(firsts, "s")
+    val per = ds
+      .withColumn("first_doc", min(col("doc_id")).over(Window.partitionBy("s")))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
@@ -1325,29 +1322,12 @@ object TextAnalysis {
     * curation pass uses to strip or down-weight templated text.
     * Within-corpus complement to dd8's cross-corpus span contamination.
     *
-    * Scale shape: one shingle explode (per-doc distinct) feeds both the
-    * document-frequency aggregate and the per-doc rollup; the frequent
-    * set joins back BY SHINGLE HASH — a shuffle join on the hashed key,
-    * deliberately not a broadcast: the boilerplate vocabulary grows
-    * with the corpus and would OOM a forced broadcast at 100 TB (AQE
-    * still picks broadcast when it genuinely fits).
-    *
-    * The shingle frame is deliberately NOT cache-bounded even though two
-    * subtrees consume it (no ReusedExchange fires — the df aggregate
-    * exchanges on h, the distinct on (doc_id, h)): a scopedPersist was
-    * A/B'd in r14 at sf0.1/local[32] isolated min-of-3 and measured a
-    * slight LOSS (2.12 s unpersisted vs 2.17 s persisted, probes 0.49 vs
-    * 0.44) — the duplicated scan+explode is embarrassingly parallel and
-    * cheaper than the materialization barrier. Re-measure before caching
-    * if the shingle pipeline ever gains per-row cost.
-    *
-    * r18 adjudication of the r17 official flag (1.24 → 2.67 s, 1.9× with
-    * NO code change that round — the dd5 playbook's same-box A/B):
-    * isolated min-of-3 on a quiet box (spin 0.33 s, load1 1.3) reads
-    * 1.35 s on the UNCHANGED code — within noise of the r16 official
-    * 1.24 s. Verdict: the 2.67 s reading was the r17 artifact's
-    * documented box contention (load1_start 8.49, 1.12× suite-median box
-    * factor), not a regression; no structural change warranted.
+    * Scale shape: one compiled shingle explode ([[graft.functions.KgramMd5]],
+    * per-doc distinct), the document frequency as `count(*)` over a
+    * window partitioned by shingle hash — the distinct rows ARE the
+    * (doc, shingle) pairs, so no aggregate has to be joined back and the
+    * scan+tokenize+shingle chain runs once — then the per-doc rollup.
+    * Nothing is broadcast: the shingle domain grows with the corpus.
     */
   def boilerplate(spark: SparkSession, dir: String): DataFrame =
     boilerplateCore(tWide(spark, dir, "documents"))
@@ -1357,20 +1337,15 @@ object TextAnalysis {
     * one (not), and a short doc with no shingles at all.
     */
   private[graft] def boilerplateCore(documents: DataFrame): DataFrame = {
-    val k = 5
-    val tk = documents.select(col("doc_id"), tokensOrdered(col("text")).as("t"))
-    val sh = tk.filter(size(col("t")) >= k)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(col("t")) - (k - 1)),
-          i => md5(concat_ws(" ", slice(col("t"), i, lit(k)))))).as("h"))
+    import org.apache.spark.sql.expressions.Window
+    val sh = documents
+      .select(col("doc_id"), explode(graft.functions.CorpusKernels.kgramMd5(
+        tokensOrdered(col("text")), 5)).as("h"))
       .distinct()
-    val freq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 3)
-      .select(col("h"), lit(true).as("boiler"))
-    val per = sh.join(freq, Seq("h"), "left")
+    val per = sh.withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("boiler"), 1L).otherwise(0L)).as("n_boiler"))
+        sum(when(col("df") >= 3, 1L).otherwise(0L)).as("n_boiler"))
     documents.select(col("doc_id"))
       .join(per, Seq("doc_id"), "left")
       .select(col("doc_id"),

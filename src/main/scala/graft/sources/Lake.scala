@@ -31,8 +31,9 @@ object Lake {
     s"${sys.props("user.dir")}/target/lake/" +
       s"${spark.sparkContext.applicationId}/$name"
 
-  /** Delete THIS session's lake scratch tree (r18) — Bench and Verify
-    * call it before `spark.stop()` so each run cleans up after itself.
+  /** Delete THIS session's lake scratch tree (r18) — every entry point
+    * stops its session through [[graft.GraftSession.stop]], which calls
+    * it, so each run cleans up after itself.
     * Scoped to the session's own applicationId directory, so concurrent
     * runs can never delete each other's live layouts; the per-appId
     * isolation that makes writes race-free makes the cleanup race-free

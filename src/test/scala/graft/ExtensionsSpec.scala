@@ -51,20 +51,33 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"build the session through GraftSession: $hits")
   }
 
-  test("RegimeGate is the only code that clamps a bound and collects bound + 1 rows") {
+  /** The `src/main/scala` files other than `owner` that spell any of
+    * `copies`. */
+  private def spelledOutside(owner: String, copies: Seq[scala.util.matching.Regex]) = {
     import scala.jdk.CollectionConverters._
-    val copies = Seq("""limit\(\s*\w+\s*\+\s*1\s*\)""".r, """Int\.MaxValue\s*-\s*1L""".r)
     val walked = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val hits = try walked.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "RegimeGate.scala")
+    try walked.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != owner)
       .filter { p =>
         val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         copies.exists(_.findFirstIn(src).isDefined)
       }
       .map(_.toString).toList
-      finally walked.close()
+    finally walked.close()
+  }
+
+  test("RegimeGate is the only code that clamps a bound and collects bound + 1 rows") {
+    val hits = spelledOutside("RegimeGate.scala",
+      Seq("""limit\(\s*\w+\s*\+\s*1\s*\)""".r, """Int\.MaxValue\s*-\s*1L""".r))
     assert(hits.isEmpty, s"gate through graft.engine.RegimeGate: $hits")
+  }
+
+  test("the corpus kernels are the only code that spells the compositions they replace") {
+    val hits = spelledOutside("CorpusKernels.scala", Seq(
+      """md5\(\s*concat_ws\(\s*" ",\s*slice\(""".r,
+      """conv\(\s*md5\(""".r,
+      """(?s)aggregate\(\s*zip_with\(.{0,120}?lit\(0L\)""".r))
+    assert(hits.isEmpty, s"call graft.functions.CorpusKernels: $hits")
   }
 
   test("extensions object injects without error at construction") {
