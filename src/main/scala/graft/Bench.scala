@@ -266,14 +266,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
-    // START-of-run reap (r20, the r19 verdict's #6): the exit-time sweep
-    // cannot run when a session crashes, so a crashed PRIOR session's
-    // stranded j5_* warehouse dirs would otherwise tax this official
-    // run's IO block until some later session outlives the 2h guard.
-    // Reaping here — before the load gate, so the delete IO is outside
-    // every instrument — costs a directory listing when there is nothing
-    // to do.
-    graft.operators.Relational.cleanupBucketScratch(spark)
+    // Start-of-run reap: a crashed session never reaches GraftSession.stop,
+    // so sweep dead sessions' scratch here, before the load gate and
+    // outside every timed window.
+    GraftSession.reclaim()
     // Warm up the session (codegen compiler, parquet footer caches, shuffle
     // machinery) so the first timed query isn't charged ~5s of JVM startup.
     try {

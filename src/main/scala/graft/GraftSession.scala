@@ -20,6 +20,9 @@ import graft.plans.GraftExtensions
   * explained and benched plans share one config. A caller may still set
   * deployment settings only: master and cores, log level, the UI and the
   * warehouse dir. Every engine setting lives in [[builder]].
+  *
+  * It also owns session scratch: [[scratchDir]] names it and [[stop]]
+  * removes it.
   */
 object GraftSession {
 
@@ -52,16 +55,54 @@ object GraftSession {
       bb.config("spark.sql.shuffle.partitions", n.toString))
   }
 
-  /** Stop `spark` after deleting the scratch tables its queries wrote:
-    * the lake's `target/lake/<app id>` tree and the bucketed `j5_*`
-    * warehouse tables. Entry points call it in a `finally`, so a failed
-    * run cleans up too.
+  /** Session scratch: the lake layouts, j5's bucketed tables and wb1's
+    * workbooks live under one root per session,
+    * `<working dir>/target/lake/<app id>/<name>`, and only this object
+    * names it. The app id keeps concurrent sessions apart; within one
+    * session the queries run one at a time, so a name has one writer.
+    */
+  private[graft] def scratchDir(spark: SparkSession, name: String): String =
+    s"${scratchRoot.getPath}/${spark.sparkContext.applicationId}/$name"
+
+  private def scratchRoot = new java.io.File(sys.props("user.dir"), "target/lake")
+
+  /** Sessions here live minutes, so a root whose newest file is older
+    * than this belongs to a session that died before [[stop]].
+    */
+  private val DeadAfterMs = 2L * 3600 * 1000
+
+  /** Stop `spark` after deleting its scratch root and sweeping dead
+    * sessions' roots ([[reclaim]]). Entry points call it in a `finally`,
+    * so a failed run cleans up too.
     */
   def stop(spark: SparkSession): Unit =
-    try {
-      graft.sources.Lake.cleanupScratch(spark)
-      graft.operators.Relational.cleanupBucketScratch(spark)
-    } finally spark.stop()
+    try reclaim(scratchRoot, Some(spark.sparkContext.applicationId))
+    finally spark.stop()
+
+  /** Delete the root `own` under `parent`, then every sibling whose newest
+    * mtime is older than [[DeadAfterMs]]. Never fails the caller; a root
+    * that survives is reported on stderr.
+    */
+  private[graft] def reclaim(
+      parent: java.io.File = scratchRoot,
+      own: Option[String] = None): Unit = try {
+    own.foreach(a => delete(new java.io.File(parent, a)))
+    def newest(f: java.io.File): Long =
+      Option(f.listFiles).toSeq.flatten
+        .foldLeft(f.lastModified())((m, c) => math.max(m, newest(c)))
+    val cutoff = System.currentTimeMillis() - DeadAfterMs
+    Option(parent.listFiles).toSeq.flatten.filter(newest(_) < cutoff).foreach(delete)
+    own.map(new java.io.File(parent, _)).filter(_.exists).foreach(r =>
+      System.err.println(s"[scratch] cleanup left $r behind"))
+  } catch { case e: Throwable =>
+    System.err.println(s"[scratch] cleanup failed: ${e.getMessage}")
+  }
+
+  /** Delete `f` and everything under it (file I/O only). */
+  private[graft] def delete(f: java.io.File): Unit = {
+    Option(f.listFiles).toSeq.flatten.foreach(delete)
+    f.delete(): Unit
+  }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", defaultParallelism = Some(cores))

@@ -121,6 +121,14 @@ object Tables {
     */
   def r6(c: Column): Column = round(c, 6)
 
+  /** [[r6]] on the driver: HALF_UP at the 6th decimal. NaN and ±∞ pass
+    * through unchanged, as in Spark's `round`. A zero result is +0.0,
+    * because a `BigDecimal` zero has no sign.
+    */
+  def round6(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** [[r2]]/[[r6]] for SIGNED statistics that can round to zero (t-stats,
     * effect sizes, slopes, correlations, covariances). DuckDB's IEEE
     * `round` returns −0.0 for a tiny negative value while Spark's

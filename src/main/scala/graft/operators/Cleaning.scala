@@ -69,13 +69,9 @@ object Cleaning {
     * pass rather than the reader. The timestamp column is compared as
     * epoch-ms (the repo's portable-timestamp convention).
     */
-  /** Fixture root under the working directory's build dir — the oracle SQL
-    * strings are assembled at runtime from these vals, so Spark and DuckDB
-    * always agree on the location without pinning the checkout path.
-    */
-  private[operators] val FixtureDir =
-    new java.io.File(sys.props("user.dir"), "target/fixtures").getAbsolutePath
-  private val CsvFixturePath = s"$FixtureDir/p_clean_input.csv"
+  // Not session scratch: DuckDB reads the file after the session ends.
+  private val CsvFixturePath = new java.io.File(
+    sys.props("user.dir"), "target/fixtures/p_clean_input.csv").getAbsolutePath
   private val CsvFixture =
     """ Order Id !, Amount ,Ship Date,Unnamed: 3,empty_col, Note
       |1,10.5,2024-01-02 03:04:05,x,,  alpha beta
@@ -108,7 +104,7 @@ object Cleaning {
     * corruption in EITHER sink→source roundtrip breaks the hash.
     */
   def workbookRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$FixtureDir/workbook"
+    val path = graft.GraftSession.scratchDir(spark, "workbook")
     graft.sources.XlsxWorkbookSink.save(
       Map("nation" -> t(spark, dir, "nation")), s"$path.xlsx", spark)
     graft.sources.WorkbookSink.save(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.t
+import graft.Tables.{round6, t}
 import graft.engine.RegimeGate
 
 /** Graph analytics over relationship structure the engine already mines:
@@ -448,8 +448,6 @@ object Graph {
             cnt(z) = cnt.getOrElse(z, 0L) + 1
           }
         }
-        def round6(v: Double): Double =
-          BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         val spark = lineitem.sparkSession
         import spark.implicits._
         deg.toSeq.filter(_._2 >= 2)
@@ -544,8 +542,6 @@ object Graph {
             acc((x, z)) = (c + 1, s + w)
           }
         }
-        def round6(v: Double): Double =
-          BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
         val spark = lineitem.sparkSession
         import spark.implicits._
         acc.toSeq
@@ -590,43 +586,15 @@ object Graph {
     * arithmetic-noise-free. `converged` marks nodes whose label did not
     * change between rounds 2 and 3 — per-node stability, necessary but
     * not sufficient for global fixpoint (a diameter->6 chain would still
-    * be moving); at 100 TB the production loop keeps iterating while
-    * `l_k != l_{k-1}` on any node (one count() per round on the persisted
-    * label frame) — O(log d) rounds, each one equi-join + map-side-
-    * combined min aggregate on the edge partitioning, which bucketing the
-    * edge list by src makes shuffle-free across rounds.
+    * be moving). The loop that iterates to fixpoint is
+    * [[Dedup.componentsOf]]; GraphSpec checks it on this graph.
     *
-    * Bench budget: 2.63 s isolated min-of-3 at sf0.1 local[32] (r15,
-    * probes 0.40/0.54 — the probe convention's canonical line; r14's
-    * official 4.40 s ran on the CONTENTION-SUSPECT artifact's
-    * contended start and is hereby adjudicated noise, not regression);
-    * 3.0 s isolated min-of-3 / ~2.6 s in-suite on the r13 box (r12's
-    * 7.9 s was root-caused to three compounding costs, each fixed:
-    * l3 consumed twice unpersisted, cached plans pinned at 32 near-empty
-    * partitions — see GraftSession's
-    * canChangeCachedPlanOutputPartitioning note — and the old
-    * distinct+window+self-join pairing, now [[supportPairs]]. A second
-    * r13 pass cut the post-pairing stage count itself: adj persisted
-    * once for its three round-joins, l0 seeded from its self-loops,
-    * round 3 folding l2's label out of the same aggregate, and the
-    * size join replaced by a lbl-partitioned window count — isolated
-    * min-of-3 went 4.9 → 3.0 s).
-    * Dominated by the lineitem basket pairing (the whole gr family's
-    * fixed cost); the three label rounds run on the ~4k-edge cached
-    * frame. Regression above ~5 s means the support filter or basket
-    * cap stopped pruning (gr3's budget convention).
+    * Bench budget: ~1.7–2.0 s isolated at sf0.1 on 32 cores, dominated
+    * by the lineitem basket pairing (the whole gr family's fixed cost);
+    * the three label rounds run on the ~4k-edge cached frame. Regression
+    * above ~5 s means the support filter or basket cap stopped pruning
+    * (gr3's budget convention).
     */
-  // r19 official flag (2.68 s on BENCH_r19, dual-ratio 1.63→2.68):
-  // adjudicated NOISE by the judge's same-box isolated min-of-4 (spin
-  // 0.323/0.400, load1_start 1.35) — 2.025 s with no code change in the
-  // path; the artifact's first-third spin tax (0.449 vs the 0.32–0.41
-  // quiet band) covers the gap. The judge noted the isolated reading
-  // sits ~0.35 s above the r17/r18 band (1.66): the r20 re-pin A/B on
-  // THIS session's box read gr5 1.75–1.91 s warm min-of-3 repeatedly
-  // (while the banded-core rework — which does not touch gr5's lineitem
-  // path — was landing), so the band is re-pinned at ~1.7–2.0 s
-  // isolated; drift beyond that without gr2/gr3/gr4 moving too is the
-  // signal worth a rework.
   def components(spark: SparkSession, dir: String): DataFrame =
     componentsCore(t(spark, dir, "lineitem"))
 
@@ -681,17 +649,17 @@ object Graph {
       .unionAll(pairs.select(col("pb").as("src"), col("pa").as("dst")))
     val nodes = sym.select(col("src").as("id")).distinct()
     // Self-loops fold "min of self and neighbors" into ONE aggregate.
-    // EAGER checkpoint ([[componentsFixpoint]]'s discipline): all three
-    // label rounds join against adj; the incoming pairs frame is itself
-    // a checkpoint, so the union + distinct materialize exactly once.
+    // EAGER checkpoint: all three label rounds join against adj; the
+    // incoming pairs frame is itself a checkpoint, so the union +
+    // distinct materialize exactly once.
     val adj = sym.unionAll(
       nodes.select(col("id").as("src"), col("id").as("dst")))
       .localCheckpoint()
     def step(prev: DataFrame): DataFrame =
       adj.as("a").join(prev.as("p"), col("a.dst") === col("p.id"))
         .groupBy(col("a.src").as("id")).agg(min(col("p.lbl")).as("lbl"))
-    // Seed from the persisted adjacency's self-loops ([[componentsFixpoint]]'s
-    // discipline) — `nodes` would re-derive the distinct from the pairs cache.
+    // Seed from the checkpointed adjacency's self-loops: `nodes` would
+    // re-derive the distinct from the pairs cache.
     val l0 = adj.filter(col("src") === col("dst"))
       .select(col("src").as("id"), col("src").as("lbl"))
     val l2 = step(step(l0))
@@ -713,72 +681,6 @@ object Graph {
     l3.select(col("id").as("l_partkey"), col("lbl").as("component"),
         count(lit(1)).over(byComponent).as("component_size"),
         (col("lbl") === col("lbl2")).as("converged"))
-      .orderBy("component", "l_partkey")
-  }
-
-  /** gr5's PRODUCTION fixpoint — the driver loop [[components]]'
-    * scaladoc documents, now executable: iterate min-label propagation
-    * until NO label changes (one count() per round on the materialized
-    * label frame) instead of the oracle form's fixed 3 unrolled rounds.
-    * O(log d) rounds on real graphs (HashToMin, Rastogi et al. 2013);
-    * each round is one equi-join against the persisted adjacency plus a
-    * map-side-combined min aggregate, and per-round `localCheckpoint`
-    * (sim16's lineage discipline) keeps the plan flat at any round
-    * count — at 100 TB, bucketing the adjacency by dst makes the
-    * per-round join shuffle-free on that side. Spec-gated (GraphSpec):
-    * the planted diameter-5 chain the unrolled form honestly leaves
-    * unconverged reaches fixpoint here with `converged` all-true and
-    * the exact chain-min labels; `rounds` reports the iteration count.
-    *
-    * `maxRounds` is the runaway bound for a pathological graph (a path
-    * of length > 2^maxRounds cannot exist in any real corpus); hitting
-    * it emits `converged = false` honestly rather than looping.
-    *
-    * Why no shared recursive-SQL oracle (probed r13): the terminating
-    * fixpoint form needs UNION-distinct recursion (`reach(node, lbl)`
-    * grown to a FIXED POINT of the label-reachability set), and Spark
-    * 4.1 raises UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE — UNION ALL
-    * recursion never terminates on a cyclic graph. sql4's DAG walk
-    * remains the engine's recursive-SQL seam; this loop stays
-    * spec-gated until Spark grows distinct recursion.
-    */
-  private[graft] def componentsFixpoint(
-      lineitem: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val pairs = supportPairs(lineitem)
-    val sym = pairs.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(pairs.select(col("pb").as("src"), col("pa").as("dst")))
-    val nodes = sym.select(col("src").as("id")).distinct()
-    // ONE eager action touches the scoped-persisted pairs frame: the
-    // adjacency checkpoint. Everything after (the l0 seed included)
-    // derives from the checkpoint — its self-loop rows ARE the node
-    // set — because scopedPersist releases the pairs cache after the
-    // first completed action, so a second action on the pairs lineage
-    // would re-run the corpus-scale basket pairing from scratch.
-    val adj = sym.unionAll(
-      nodes.select(col("id").as("src"), col("id").as("dst")))
-      .localCheckpoint()
-    def step(prev: DataFrame): DataFrame =
-      adj.as("a").join(prev.as("p"), col("a.dst") === col("p.id"))
-        .groupBy(col("a.src").as("id")).agg(min(col("p.lbl")).as("lbl"))
-    var labels = adj.filter(col("src") === col("dst"))
-      .select(col("src").as("id"), col("src").as("lbl"))
-      .localCheckpoint()
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < maxRounds) {
-      val next = step(labels).localCheckpoint()
-      changed = next
-        .join(labels.select(col("id"), col("lbl").as("prev")), "id")
-        .filter(col("lbl") =!= col("prev")).count()
-      labels = next
-      rounds += 1
-    }
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("component_size"))
-    labels.join(sizes, "lbl")
-      .select(col("id").as("l_partkey"), col("lbl").as("component"),
-        col("component_size"), lit(changed == 0L).as("converged"),
-        lit(rounds.toLong).as("rounds"))
       .orderBy("component", "l_partkey")
   }
 

@@ -26,9 +26,7 @@ object MediaCodecs {
     */
   final case class PnmImage(
       magic: String, width: Int, height: Int, maxVal: Int,
-      channels: Int, pixels: Array[Byte]) {
-    def nSampleBytes: Int = pixels.length
-  }
+      channels: Int, pixels: Array[Byte])
 
   /** Decoded WAV: the `fmt ` chunk fields plus the raw `data` chunk bytes
     * (for 8-bit mono PCM, one byte per sample).

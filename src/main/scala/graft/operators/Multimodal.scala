@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column operators (north-star extension): image/audio/video
   * payloads as opaque `binary` columns with typed metadata, decoded by
@@ -27,16 +26,6 @@ import org.apache.spark.sql.types._
   * decoded outputs carry per-row statistics, never sample arrays.
   */
 object Multimodal {
-
-  /** Canonical multimodal row schema: opaque payload + typed metadata. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("format", StringType, nullable = false), // ppm | wav | ppms ...
-    StructField("payload", BinaryType, nullable = true),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
 
   /** Decoded features: payload/decoded byte counts + fixed-width vector. */
   final case class MediaFeatures(

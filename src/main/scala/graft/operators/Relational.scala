@@ -795,91 +795,33 @@ object Relational {
       .orderBy($"status", $"priority")
   }
 
-  /** Write orders+lineitem as bucketed tables (8 buckets on the order
-    * key, sorted within buckets) under session- and sf-scoped names —
-    * ONE definition shared by the j5 gate and PlanSpec's shuffle-free
-    * assertion. Idempotent per (session, sf): the "write once, join
-    * many" lifecycle bucketing exists for.
+  /** Write orders+lineitem as bucketed tables `j5_orders_<sf>` and
+    * `j5_lineitem_<sf>` (8 buckets on the order key, sorted within
+    * buckets) — ONE definition shared by the j5 gate and PlanSpec's
+    * shuffle-free assertion. The tables are external, with their files in
+    * session scratch ([[graft.GraftSession.scratchDir]]); the in-memory
+    * catalog that names them ends with the session. Idempotent per
+    * (session, sf): the "write once, join many" lifecycle bucketing
+    * exists for.
     */
   private[graft] def bucketedOrderTables(
       spark: SparkSession, dir: String): (String, String) = {
-    val tag = (spark.sparkContext.applicationId + "_" +
-      new java.io.File(dir).getName).replaceAll("[^a-zA-Z0-9]", "_")
-    val (to, tl) = (s"j5_orders_$tag", s"j5_lineitem_$tag")
-    // Guards are PER TABLE and the writes are overwrite-mode: a first
-    // call interrupted between the two saveAsTable commits must not
-    // wedge the session (a single to-only guard would skip the missing
-    // lineitem write forever and every later j5 would throw).
-    // Repartitioning on the SAME hash the bucketer uses puts each
-    // bucket in ONE file (a task holds exactly one bucket).
-    if (!spark.catalog.tableExists(to))
-      t(spark, dir, "orders")
-        .repartition(8, col("o_orderkey"))
-        .write.mode("overwrite").bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey").saveAsTable(to)
-    if (!spark.catalog.tableExists(tl))
-      t(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-        .repartition(8, col("l_orderkey"))
-        .write.mode("overwrite").bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey").saveAsTable(tl)
+    val sf = new java.io.File(dir).getName.replaceAll("[^a-zA-Z0-9]", "_")
+    val (to, tl) = (s"j5_orders_$sf", s"j5_lineitem_$sf")
+    // Guarded per table and written in overwrite mode, so a first call
+    // interrupted between the two writes cannot wedge the session.
+    // Repartitioning on the SAME hash the bucketer uses puts each bucket
+    // in ONE file (a task holds exactly one bucket).
+    def save(df: DataFrame, key: String, name: String): Unit =
+      if (!spark.catalog.tableExists(name))
+        df.repartition(8, col(key)).write.mode("overwrite")
+          .option("path", graft.GraftSession.scratchDir(spark, name))
+          .bucketBy(8, key).sortBy(key).saveAsTable(name)
+    save(t(spark, dir, "orders"), "o_orderkey", to)
+    save(t(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
+      "l_orderkey", tl)
     (to, tl)
-  }
-
-  /** End-of-session hygiene for [[bucketedOrderTables]] (r19, the lake
-    * `cleanupScratch` convention applied to the warehouse): each session
-    * writes its own app-id-tagged j5 tables and, with Spark's default
-    * in-memory catalog, a dead session leaves only the files behind —
-    * audited at 110 stranded `spark-warehouse/j5_*` dirs (296 MB) across
-    * 19 rounds, the same debris class as the r18 lake-scratch finding
-    * (a standing suspect for the official box's "slow Spark-stack
-    * mode"). Drops THIS session's tables through the catalog (managed →
-    * files go with them), then sweeps j5 dirs of DEAD sessions — with a
-    * 2-hour mtime guard so a concurrently-running session's live tables
-    * are never deleted (sessions here live minutes). Never fails the
-    * run; survivors are reported (Bench.reclaim's visibility rule).
-    */
-  private[graft] def cleanupBucketScratch(spark: SparkSession): Unit = try {
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("j5_"))
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    // Resolve the warehouse the session ACTUALLY writes (r19 ADVICE): the
-    // old user.dir/spark-warehouse guess silently missed any session
-    // configured with spark.sql.warehouse.dir elsewhere. Non-file
-    // schemes (a real metastore warehouse on HDFS/S3) fall through to a
-    // File whose listFiles is null — a no-op, correctly: this sweep is
-    // local-scratch hygiene, not remote-storage GC.
-    val raw = spark.conf.get("spark.sql.warehouse.dir",
-      new java.io.File(sys.props("user.dir"), "spark-warehouse")
-        .toURI.toString)
-    val u = java.net.URI.create(raw.replace(" ", "%20"))
-    val wh = if ("file".equals(u.getScheme)) new java.io.File(u.getPath)
-      else if (u.getScheme == null) new java.io.File(raw)
-      else new java.io.File("/nonexistent")
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    // Liveness by the NEWEST mtime anywhere in the dir (r19 ADVICE): a
-    // long-lived concurrent session keeps writing files inside its table
-    // dirs without necessarily touching the top-level dir's mtime, so
-    // the old top-level check could reap a >2h-old session's LIVE
-    // tables. The recursive max is control-plane cheap (tens of files
-    // per j5 dir).
-    def newest(f: java.io.File): Long =
-      Option(f.listFiles).toSeq.flatten
-        .foldLeft(f.lastModified())((m, c) => math.max(m, newest(c)))
-    val stale = Option(wh.listFiles).toSeq.flatten
-      .filter(f => f.getName.startsWith("j5_") && newest(f) < cutoff)
-    stale.foreach(rm)
-    val left = Option(wh.listFiles).toSeq.flatten
-      .count(_.getName.startsWith("j5_"))
-    if (left > 0)
-      System.err.println(s"[bucket] warehouse cleanup left $left j5_* dir(s)" +
-        " (younger than the 2h live-session guard)")
-  } catch { case e: Throwable =>
-    System.err.println(s"[bucket] warehouse cleanup failed: ${e.getMessage}")
   }
 
   /** j5 — bucketed co-located join: revenue per order priority from a

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.{r6, r6s, t}
+import graft.Tables.{r6, r6s, round6, t}
 import graft.functions.CorpusKernels.longSqL2
 
 /** Similarity search over the `embeddings` table (`Array[Float]` vectors,
@@ -744,12 +744,6 @@ object Similarity {
           .as("rel"))
       .orderBy(col("rel").desc, col("vec_id")).limit(MmrCandidates)
       .collect()
-    // NaN/Infinity pass through unchanged — Spark's Round does the same
-    // (RoundBase short-circuits non-finite doubles), and BigDecimal(NaN)
-    // would throw where the distributed form emitted the NaN row.
-    def round6(v: Double): Double =
-      if (v.isNaN || v.isInfinite) v
-      else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // Null parity with the old distributed form: a ragged/null embedding
     // — or one with null ELEMENTS, which poison FloatDotProduct to null
     // — yields null dot → null rel/s; desc argmax sorts null mmr LAST

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.Tables.{r2, t}
 
 /** Hive-style partitioned-lake layout — the storage discipline that makes
@@ -17,48 +18,12 @@ import graft.Tables.{r2, t}
   * recomputes from the source table directly, so a partition-boundary
   * bug (rows landing in the wrong directory, partition-column type
   * mangling) breaks the hash.
+  *
+  * Every layout is session scratch: it lives under
+  * [[graft.GraftSession.scratchDir]], and [[graft.GraftSession.stop]]
+  * removes it.
   */
 object Lake {
-
-  /** Layout roots are keyed by the session's application id: two
-    * concurrent sessions (a bench run beside a verify run) each get their
-    * own directory tree, so one cannot overwrite a layout the other is
-    * mid-read on. Within ONE session the usual lake single-writer rule
-    * applies (the gate queries are sequential, so it holds by
-    * construction).
-    */
-  private def lakeDir(spark: SparkSession, name: String): String =
-    s"${sys.props("user.dir")}/target/lake/" +
-      s"${spark.sparkContext.applicationId}/$name"
-
-  /** Delete THIS session's lake scratch tree (r18) — every entry point
-    * stops its session through [[graft.GraftSession.stop]], which calls
-    * it, so each run cleans up after itself.
-    * Scoped to the session's own applicationId directory, so concurrent
-    * runs can never delete each other's live layouts; the per-appId
-    * isolation that makes writes race-free makes the cleanup race-free
-    * too. Without it every run strands ~1k small files under
-    * `target/lake` (53k files across 57 stale app dirs when audited).
-    */
-  private[graft] def cleanupScratch(spark: SparkSession): Unit =
-    try {
-      val root = new java.io.File(
-        s"${sys.props("user.dir")}/target/lake/" +
-          spark.sparkContext.applicationId)
-      def rm(f: java.io.File): Unit = {
-        val children = f.listFiles()
-        if (children != null) children.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root)
-      // A silently-regressed cleanup would re-strand files run after run
-      // with nothing in any log (Bench.reclaim's visibility convention) —
-      // report survivors, but never fail the run over scratch hygiene.
-      if (root.exists())
-        System.err.println(s"[lake] scratch cleanup left $root behind")
-    } catch { case e: Throwable =>
-      System.err.println(s"[lake] scratch cleanup failed: ${e.getMessage}")
-    }
 
   /** Control-plane filesystem handle for a layout path — the Hadoop
     * `FileSystem` API (the round-6 Workbook/Artifacts convention), so
@@ -98,12 +63,6 @@ object Lake {
       .toMap
   }
 
-  /** Spec access to the layout root (comparison layouts live beside the
-    * library-written ones).
-    */
-  private[graft] def lakeDirForTest(spark: SparkSession, name: String): String =
-    lakeDir(spark, name)
-
   /** Write events partitioned by event_type, read back ONE partition, and
     * summarize it. The read's filter must resolve at planning time
     * against the directory layout (PlanSpec asserts `PartitionFilters`
@@ -123,7 +82,7 @@ object Lake {
     * data filter) is the same plan the gate aggregates over.
     */
   private[graft] def prunedScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = lakeDir(spark, "events_by_type")
+    val out = GraftSession.scratchDir(spark, "events_by_type")
     t(spark, dir, "events")
       .write.mode("overwrite").partitionBy("event_type").parquet(out)
     spark.read.parquet(out).filter(col("event_type") === "click")
@@ -136,7 +95,7 @@ object Lake {
     * file count equals the budget.
     */
   def compactedWrite(df: DataFrame, name: String, numFiles: Int): String = {
-    val out = lakeDir(df.sparkSession, name)
+    val out = GraftSession.scratchDir(df.sparkSession, name)
     df.repartition(numFiles).write.mode("overwrite").parquet(out)
     out
   }
@@ -233,7 +192,7 @@ object Lake {
   private[graft] def writeZOrdered(df: DataFrame, name: String,
       rowGroupBytes: Long = 128L * 1024 * 1024,
       numPartitions: Int = 0): String = {
-    val out = lakeDir(df.sparkSession, name)
+    val out = GraftSession.scratchDir(df.sparkSession, name)
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     withZKey(df)
@@ -277,7 +236,7 @@ object Lake {
     * (ONE definition, so LakeSpec pins the same plan the gate runs).
     */
   private[graft] def incrementalScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = lakeDir(spark, "events_by_day")
+    val out = GraftSession.scratchDir(spark, "events_by_day")
     // Keyed width pin on the ingest write (r20): the single-row-group
     // scan otherwise funnels every day's file through ONE dynamic-
     // partitioning writer task. Hashing on `day` keeps one writer per
@@ -316,31 +275,11 @@ object Lake {
     * this is exactly a table-format OPTIMIZE pass: shuffle by partition,
     * roll at the size budget, swap the directory.
     *
-    * Bench budget: 2.1 s at sf0.1 local[32] (r13 box, in-suite
-    * min-of-3 — normalize cross-box via the r14+ bench probe — after the
-    * numeric-width writer fix below; 5.5–5.7 s before it, when AQE's
-    * bytes-based coalescing serialized the file churn onto one writer
-    * task) — ~400 fragment files written + rewritten + two directory
-    * listings. Regression above ~4 s means the writer width or the
-    * fragment budget scaling broke.
+    * Bench budget: 2.1–2.6 s at sf0.1 on 32 cores with a quiet box: ~400
+    * fragment files written and rewritten plus two directory listings.
+    * Above ~4 s on a quiet box the writer width or the fragment budget
+    * scaling broke; under co-tenant filesystem load it reads 5–13 s.
     */
-  // r18 adjudication (the dd5 playbook): an internal full-suite run read
-  // lake4 7.22 s vs the official r17 2.69 (2.7x raw) with NO code change
-  // in its path; isolated min-of-4 on a quiet box minutes later (spin
-  // 0.33, fresh lake dir) read 2.641 s — dead on the official band. The
-  // suite reading overlapped a co-tenant burst (mid-suite load1 spiked
-  // to 11); lake4 is the suite's most IO-bound query (two partitioned
-  // writes + directory listings), so sustained filesystem contention
-  // taxes it disproportionately. Verdict: box noise, no structural
-  // change; the per-run scratch cleanup below keeps target/lake from
-  // accumulating stale app dirs (53k files across 57 runs when audited).
-  // r19 official flag (5.00 s on BENCH_r19, dual-ratio 2.64→5.00):
-  // adjudicated NOISE by the judge's same-box isolated min-of-4 (spin
-  // 0.323/0.400, load1_start 1.35) — 2.589 s, dead on the 2.6 quiet
-  // band and under this scaladoc's own >4 s threshold. The artifact's
-  // spin_third1 0.449 (above the 0.32–0.41 quiet band) localizes the
-  // tax to the first suite third, where lake4's IO sits. Band stands:
-  // ~2.6 s isolated quiet, bimodal 7–13 s under sustained co-tenant IO.
   def compactionReport(spark: SparkSession, dir: String): DataFrame = {
     // Budgets scale with the corpus (total/400 rows per fragment file,
     // floored at 25) so the DEMONSTRATED pathology stays ~400 fragment
@@ -360,11 +299,11 @@ object Lake {
     // wide instead of letting AQE's bytes-based coalescing serialize
     // the file churn (measured: 5.8 → ~2 s at sf0.1 local[32]).
     val writers = spark.sparkContext.defaultParallelism
-    val frag = lakeDir(spark, "events_frag")
+    val frag = GraftSession.scratchDir(spark, "events_frag")
     ev.repartition(writers, col("day"))
       .write.mode("overwrite").partitionBy("day")
       .option("maxRecordsPerFile", fragTarget).parquet(frag)
-    val compacted = lakeDir(spark, "events_compact")
+    val compacted = GraftSession.scratchDir(spark, "events_compact")
     spark.read.parquet(frag)
       .repartition(writers, col("day"))
       .write.mode("overwrite").partitionBy("day")
@@ -402,7 +341,7 @@ object Lake {
     * tree). Aggregates are ordinary one-pass hash aggregates.
     */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = lakeDir(spark, "events_versions")
+    val root = GraftSession.scratchDir(spark, "events_versions")
     val dataDir = s"$root/data"
     val (fs, rootP) = hfs(spark, root)
     val manifestDir = new org.apache.hadoop.fs.Path(rootP, "_manifests")
@@ -464,7 +403,7 @@ object Lake {
     * hash aggregate per generation partition.
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = lakeDir(spark, "events_evolving")
+    val root = GraftSession.scratchDir(spark, "events_evolving")
     val ev = t(spark, dir, "events")
       .withColumn("day", to_date(col("ts")))
     val cut = ev.agg(date_add(min(col("day")), 15)).head().getDate(0)
@@ -498,8 +437,8 @@ object Lake {
     * month boundary break the hash.
     */
   def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val dayRoot = lakeDir(spark, "events_mig_day")
-    val monthRoot = lakeDir(spark, "events_mig_month")
+    val dayRoot = GraftSession.scratchDir(spark, "events_mig_day")
+    val monthRoot = GraftSession.scratchDir(spark, "events_mig_month")
     val ev = t(spark, dir, "events")
       .select(col("ts"), col("user_id"), col("value"))
       .withColumn("day", to_date(col("ts")))
@@ -553,7 +492,7 @@ object Lake {
     * the manifest's files, lake5's mechanism.
     */
   def vacuum(spark: SparkSession, dir: String): DataFrame = {
-    val root = lakeDir(spark, "events_vacuum")
+    val root = GraftSession.scratchDir(spark, "events_vacuum")
     val dataDir = s"$root/data"
     val ev = t(spark, dir, "events")
       .select(col("ts"), col("user_id"), col("value"))

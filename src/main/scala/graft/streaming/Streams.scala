@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Tables.round6
+
 /** Structured Streaming pipelines over the events stream (north-star
   * extension, SURVEY.md §2.5 "Streaming"). Each transform takes a
   * DataFrame that may be batch or streaming — the same declarative plan
@@ -264,9 +266,6 @@ object TwapStream {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-
   private[streaming] def update(
       userId: Long,
       events: Iterator[TEvent],
@@ -287,9 +286,9 @@ object TwapStream {
         if (s.n == 0) 0.0 else s.sumDt + dt)
     }
     state.update(st)
-    TwapRow(userId, st.n, r6((st.maxMs - st.minMs) / 1000.0),
-      r6(st.sumV / st.n),
-      if (st.sumDt > 0) Some(r6(st.sumVDt / st.sumDt)) else None)
+    TwapRow(userId, st.n, round6((st.maxMs - st.minMs) / 1000.0),
+      round6(st.sumV / st.n),
+      if (st.sumDt > 0) Some(round6(st.sumVDt / st.sumDt)) else None)
   }
 }
 
@@ -335,9 +334,6 @@ object VwapStream {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
   }
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-
   private[streaming] def update(
       key: (String, Long),
       events: Iterator[VEvent],
@@ -354,8 +350,8 @@ object VwapStream {
     }
     state.update(st)
     VwapRow(key._1, key._2, st.n, st.qty,
-      r6(st.cents.toDouble / (100.0 * st.n)),
-      if (st.qty != 0) Some(r6(st.centsQty.toDouble / (100.0 * st.qty)))
+      round6(st.cents.toDouble / (100.0 * st.n)),
+      if (st.qty != 0) Some(round6(st.centsQty.toDouble / (100.0 * st.qty)))
       else None)
   }
 }
@@ -416,10 +412,6 @@ object AnomalyMonitor {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
-  /** Spark `round(_, 6)` twin: HALF_UP at the 6th decimal. */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private[streaming] def update(
       userId: Long,
       events: Iterator[MEvent],
@@ -447,8 +439,8 @@ object AnomalyMonitor {
         val sdRaw = math.sqrt(
           buf.iterator.map(p => (p.value - meanRaw) * (p.value - meanRaw)).sum
             / (n - 1))
-        val mean6 = r6(meanRaw)
-        val sd6 = r6(sdRaw)
+        val mean6 = round6(meanRaw)
+        val sd6 = round6(sdRaw)
         if (sd6 > 0.0) {
           var k = i
           while (k < j) {

@@ -80,6 +80,12 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"call graft.functions.CorpusKernels: $hits")
   }
 
+  test("GraftSession is the only code that names the scratch root or the warehouse") {
+    val hits = spelledOutside("GraftSession.scala",
+      Seq("""target/lake""".r, """warehouse\.dir""".r))
+    assert(hits.isEmpty, s"name session scratch through GraftSession.scratchDir: $hits")
+  }
+
   test("extensions object injects without error at construction") {
     // smoke: applying the extensions hook to a fresh container must not
     // throw (full wiring needs a new session, which local tests share)

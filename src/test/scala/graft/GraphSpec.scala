@@ -209,28 +209,41 @@ class GraphSpec extends AnyFunSuite {
       Seq(31L, 32L, 33L).foreach(p =>
         assert(got(p)._1 == 31L && got(p)._3, s"$regime $p -> ${got(p)}"))
     }
-    // the production fixpoint loop converges the SAME chain fully: one
-    // component labeled 31 of size 5, converged everywhere, in the
-    // O(diameter) round budget (4 label rounds + 1 no-change round).
-    val fix = graft.operators.Graph.componentsFixpoint(li).collect()
-      .map(r => r.getLong(0) ->
-        (r.getAs[Long]("component"), r.getAs[Long]("component_size"),
-          r.getAs[Boolean]("converged"), r.getAs[Long]("rounds"))).toMap
-    Seq(31L, 32L, 33L, 34L, 35L).foreach(p =>
-      assert(fix(p)._1 == 31L && fix(p)._2 == 5L && fix(p)._3,
-        s"$p -> ${fix(p)}"))
-    Seq(1L, 2L, 3L).foreach(p => assert(fix(p)._1 == 1L && fix(p)._2 == 3L))
-    Seq(11L, 12L, 13L).foreach(p =>
-      assert(fix(p)._1 == 11L && fix(p)._2 == 3L))
-    assert(fix(31L)._4 <= 5L, s"rounds: ${fix(31L)._4}")
+    // the engine's fixpoint loop, componentsOf over the same support
+    // pairs, converges the SAME chain fully: one component labeled 31 of
+    // size 5, in both of its regimes.
+    for (max <- fixpointBounds) {
+      val fix = supportComponents(li, max)
+      Seq(31L, 32L, 33L, 34L, 35L).foreach(p =>
+        assert(fix(p) == ((31L, 5L)), s"bound $max: $p -> ${fix(p)}"))
+      Seq(1L, 2L, 3L).foreach(p => assert(fix(p) == ((1L, 3L)), s"bound $max"))
+      Seq(11L, 12L, 13L).foreach(p =>
+        assert(fix(p) == ((11L, 3L)), s"bound $max"))
+    }
+  }
+
+  private val fixpointBounds = Seq(graft.operators.Dedup.DriverFinishEdges, 0L)
+
+  /** Part key -> (component, component size) over `li`'s support-2
+    * co-purchase graph, from the engine's one connected-components loop
+    * ([[graft.operators.Dedup.componentsOf]]) at driver-finish bound `max`.
+    */
+  private def supportComponents(
+      li: org.apache.spark.sql.DataFrame, max: Long): Map[Long, (Long, Long)] = {
+    val pairs = graft.operators.Graph.supportPairs(li)
+    val nodes = pairs.select("pa").union(pairs.select("pb")).distinct()
+    val canon = graft.operators.Dedup.componentsOf(nodes, pairs, max).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sizes = canon.values.groupBy(identity).map { case (c, g) => c -> g.size.toLong }
+    canon.map { case (id, c) => id -> ((c, sizes(c))) }
   }
 
   test("componentsFixpoint matches union-find on pseudo-random co-purchase graphs") {
-    // DedupSpec pins componentsOf this way; the gr5 production loop gets
-    // the same treatment — seeded random edge sets cover cycles, stars
-    // and merged blobs beyond the planted cliques/chain above. Each edge
-    // rides its own TWO orders, so it survives support>=2 exactly and the
-    // co-purchase graph equals the generated edge set.
+    // The components fixpoint is Dedup.componentsOf over the support
+    // pairs (supportComponents above). Seeded random edge sets cover
+    // cycles, stars and merged blobs beyond the planted cliques/chain
+    // above. Each edge rides its own TWO orders, so it survives support>=2
+    // exactly and the co-purchase graph equals the generated edge set.
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 3) {
@@ -254,15 +267,12 @@ class GraphSpec extends AnyFunSuite {
       }
       val expected = touched.map(i => i -> find(i)).toMap
       val sizes = expected.values.groupBy(identity).map { case (c, g) => c -> g.size.toLong }
-      val fix = graft.operators.Graph.componentsFixpoint(li).collect()
-        .map(r => r.getLong(0) ->
-          (r.getAs[Long]("component"), r.getAs[Long]("component_size"),
-            r.getAs[Boolean]("converged"))).toMap
-      assert(fix.keySet == expected.keySet, s"trial $trial: node sets differ")
-      expected.foreach { case (id, c) =>
-        assert(fix(id)._1 == c, s"trial $trial node $id: ${fix(id)._1} != $c")
-        assert(fix(id)._2 == sizes(c), s"trial $trial node $id size")
-        assert(fix(id)._3, s"trial $trial node $id not converged")
+      for (max <- fixpointBounds) {
+        val fix = supportComponents(li, max)
+        assert(fix.keySet == expected.keySet, s"trial $trial bound $max: node sets differ")
+        expected.foreach { case (id, c) =>
+          assert(fix(id) == ((c, sizes(c))), s"trial $trial bound $max node $id: ${fix(id)}")
+        }
       }
     }
   }

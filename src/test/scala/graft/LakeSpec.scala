@@ -62,7 +62,7 @@ class LakeSpec extends AnyFunSuite {
     // covered by the disjoint-z-ranges test.
     val zDir = Lake.writeZOrdered(ev, "events_z", rowGroupBytes = 8192,
       numPartitions = 1)
-    val linDir = Lake.lakeDirForTest(spark, "events_linear")
+    val linDir = GraftSession.scratchDir(spark, "events_linear")
     ev.repartitionByRange(1, col("user_id")).sortWithinPartitions("user_id")
       .write.mode("overwrite").option("parquet.block.size", 8192L)
       .parquet(linDir)

@@ -392,9 +392,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sim6 matches union-find over the verified-pair graph on seeded random clusters") {
-    // GraphSpec pins componentsFixpoint and DedupSpec pins componentsOf
-    // this way; sim6 shares the label-propagation loop but rides a
-    // different graph (sim3's banded embedding pairs), so the property
+    // GraphSpec and DedupSpec pin componentsOf this way; sim6 shares the
+    // label-propagation loop but rides a different graph (sim3's banded
+    // embedding pairs), so the property
     // test runs END-TO-END: seeded random embedding clusters → the real
     // band/cap/verify pair machinery → semanticClusters, asserted against
     // union-find over the pairs that machinery ACTUALLY verified (not the

@@ -5,12 +5,21 @@ import org.apache.spark.sql.SparkSession
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toFile
     val s = GraftSession.builder("local[4]", defaultParallelism = Some(4))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // The suites share this session to the end of the JVM, so it never
+    // reaches GraftSession.stop. Delete its scratch and warehouse at exit
+    // with file I/O alone, which does not care whether Spark's own hook
+    // has run yet.
+    val scratch = new java.io.File(GraftSession.scratchDir(s, ""))
+    sys.addShutdownHook {
+      GraftSession.delete(scratch)
+      GraftSession.delete(warehouse)
+    }
     s
   }
 
