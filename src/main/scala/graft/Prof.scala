@@ -14,9 +14,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
   * carries a large fixed launch cost, so a "slow query" is very often a
   * TASK-COUNT pathology (a cached tiny frame pinned at `cpus` near-empty
   * partitions fanning every downstream stage) rather than a data-volume
-  * one — exactly how gr5's r12 regression was diagnosed: `warmup` showed
-  * ~330 ms/task for summing 1000 ints, so its 900 near-empty tasks WERE
-  * the 5 s. `taskTime >> wall * cpus` means contention; `tasks` large
+  * one. `taskTime >> wall * cpus` means contention; `tasks` large
   * with `taskTime` small means launch overhead — fix the partitioning,
   * not the operator.
   */

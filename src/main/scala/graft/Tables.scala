@@ -49,7 +49,7 @@ object Tables {
       }.toIndexedSeq: _*)
     } else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** [[t]] plus a keyed width pin for HEAVY per-row projections (r20):
+  /** [[t]] plus a keyed width pin for heavy per-row projections:
     * the driver parquet tables are single row groups at bench scale, so a
     * scan — and every expression chain fused into it — runs as ONE task
     * regardless of `maxPartitionBytes` (a row group cannot split). Sites
@@ -58,9 +58,9 @@ object Tables {
     * runs wide; the keyed form is deterministic and is the one shape AQE
     * must not coalesce. Quarter-width (not full): the frames are small
     * enough that full-width fans every downstream stage into near-empty
-    * tasks whose launch overhead exceeds the win (measured on the dedup
-    * family, r20). At production scale the table arrives in thousands of
-    * splits and the pin is a cheap rebalance of an already-wide scan;
+    * tasks whose launch overhead exceeds the win. At production scale the
+    * table arrives in thousands of splits and the pin is a cheap
+    * rebalance of an already-wide scan;
     * sites whose work is a plain aggregate keep [[t]] — repartitioning
     * raw rows ahead of a map-side partial combine only adds a shuffle.
     */
@@ -68,40 +68,24 @@ object Tables {
       key: String = "doc_id"): DataFrame =
     wide(t(spark, dir, name), col(key))
 
-  /** The width-pin POLICY in one place (quarter width, floor 2, keyed):
-    * a measured tuning decision — full width was A/B'd and lost to
-    * near-empty-task launch overhead on the dedup family — so a future
-    * retune edits one site. Every pin site (tWide, Dedup.shingledOf,
-    * Pipelines.curatedSurvivors, Similarity's quantized/covariance
-    * frames) routes through here.
+  /** The width-pin policy in one place (quarter width, floor 2, keyed):
+    * full width loses to near-empty-task launch overhead on the dedup
+    * family. Every pin site (tWide, Dedup.shingledOf,
+    * Pipelines.curatedSurvivors, Similarity's quantized/covariance frames)
+    * routes through here.
     *
-    * GATED on the input's ACTUAL partition count (r21, the r20 verdict's
-    * #2): the pin exists because the driver test parquet is a single
-    * row group — ONE scan task no matter what `maxPartitionBytes` says —
-    * but at production scale the same table arrives in thousands of
-    * splits, where an unconditional `repartition(cores/4)` is a
-    * corpus-wide shuffle that REDUCES the scan to a quarter of the
-    * cluster's cores ahead of exactly the heaviest per-row chains. Pin
-    * only when the input is NARROWER than the target: a no-op at bench
-    * scale (every test scan is 1–3 partitions, under the 32-core
-    * target of 8 — plan pairs unchanged), and at scale the already-wide
-    * scan passes through untouched. The probe reads the physical
-    * partition count without running anything — but only for
-    * exchange-free plans (every current call site is a narrow chain
-    * over a scan or a checkpoint): under AQE, materializing an
-    * exchange-bearing plan's RDD would EXECUTE its upstream stages
-    * eagerly, so those plans keep the unconditional pin instead of
-    * paying a probe that could run the query at construction time.
-    *
-    * A "no-op below 8 cores" CORE-COUNT gate was A/B'd at cpus=4/sf0.1
-    * and REJECTED (r20): the pins are individually mixed at 4 cores
-    * (lake2 2.7 unpinned vs 3.1 pinned, but sim16 2.6 unpinned vs 1.8
-    * pinned) and the 12-query subset totals tie within noise (20.2
-    * pinned / 20.6 gated, both well under the r19 base's 22.7) — while
-    * that gate would make the local[4] test suite exercise different
-    * plans than the 32-core bench. The partition-count gate has neither
-    * problem: it keys on the FRAME, not the session, and fires
-    * identically wherever the input is a single row group.
+    * Gated on the input's actual partition count: the pin exists because
+    * the driver test parquet is a single row group — one scan task no
+    * matter what `maxPartitionBytes` says — but at production scale an
+    * unconditional `repartition(cores/4)` would shrink an already-wide
+    * scan to a quarter of the cluster ahead of the heaviest per-row
+    * chains. Pin only when the input is narrower than the target. The
+    * probe reads the physical partition count without running anything,
+    * but only for exchange-free plans: under AQE, materializing an
+    * exchange-bearing plan's RDD would execute its upstream stages
+    * eagerly, so those plans keep the unconditional pin. The gate keys on
+    * the frame, not the session's core count, so the local[4] test suite
+    * exercises the same plans as a 32-core bench.
     */
   def wide(df: DataFrame, key: Column): DataFrame = {
     val target =

@@ -13,9 +13,9 @@ import org.apache.spark.storage.StorageLevel
   * when (and how often) to execute — so an operator that persists an
   * intermediate frame for plan-internal reuse cannot eagerly unpersist it:
   * the blocks must survive until the caller's action has actually run.
-  * Leaving them persisted forever (round-3 behavior) is the opposite
-  * failure: a long-lived session accumulates storage blocks and repeated
-  * invocations trip "already cached" warnings.
+  * Leaving them persisted forever is the opposite failure: a long-lived
+  * session accumulates storage blocks and repeated invocations trip
+  * "already cached" warnings.
   *
   * [[scopedPersist]] resolves the tension: it persists the frame and
   * registers a one-shot [[QueryExecutionListener]] that watches for the
@@ -59,8 +59,8 @@ object Caching {
     * handles and ContextCleaner drains its reference queue. Left alone,
     * a session running many graft jobs accumulates them: across a
     * 231-query sweep they pinned several GB of an 8 GB heap's storage
-    * pool and taxed every later query's memory budget (pipe1 measured
-    * 21.5 s in-suite vs 7.7 s isolated before Bench adopted this).
+    * pool and taxed every later query's memory budget (pipe1 21.5 s
+    * in-suite vs 7.7 s isolated without this release).
     *
     * Call BETWEEN jobs, never mid-plan: unpersisting a scoped cache
     * whose consuming action has not run yet is correctness-safe (the

@@ -135,47 +135,19 @@ object Pipelines {
     * benchmark; any training component touching it is leaked and dropped
     * whole) → per-language stratified sample (d4).
     *
-    * Scan discipline (the integration claim): `documents` is read from
-    * parquet exactly TWICE — once by the cleaning pass's fused validation
-    * aggregate (the P2 all-null and P7 all-or-nothing-cast decisions are
-    * data-dependent by definition, so no cleaner can skip that scan) and
-    * once to materialize the cleaned+scored corpus as a local checkpoint.
-    * Every later consumer (the shingle pass feeding label propagation,
-    * the keep-list join, the final sample) reads the checkpoint blocks;
-    * the FINAL action's plan contains zero parquet scans
-    * (PlanSpec-asserted). A scoped cache would not do here: the
+    * Scan discipline: `documents` is read from parquet exactly twice —
+    * once by the cleaning pass's fused validation aggregate (the P2
+    * all-null and P7 all-or-nothing-cast decisions are data-dependent, so
+    * no cleaner can skip that scan) and once to materialize the
+    * cleaned+scored corpus as a local checkpoint. Every later consumer
+    * reads the checkpoint blocks; the final action's plan contains zero
+    * parquet scans (PlanSpec-asserted). A scoped cache would not do: the
     * label-propagation rounds are separate actions, and the first would
     * release the cache before the caller's own action runs.
     *
     * Output: the sampled corpus manifest `(doc_id, lang_detected,
     * quality)` — k=5 docs per detected language, md5-permutation order
     * (D3's determinism convention), so the oracle checks exact membership.
-    *
-    * Cost budget (sf0.1, local[32], warm min-of-2, suite-context with
-    * inter-query reclaim; r14 box, Bench probe ≈ 0.44 s — divide by your
-    * box's probe to normalize): ≈ 7.1 s end-to-end. Stagewise: ~1.7 s
-    * clean + score + checkpoint (scan-bound, irreducible — the cleaning
-    * aggregate and the checkpoint write each need one pass), ~2.6–3.0 s
-    * canonical clustering over the full cleaned corpus (the dd5 budget:
-    * shingle/signature/band/verify + seeded label-propagation rounds),
-    * ~0.9 s contamination carve + keep-list joins + stratified sample.
-    * The round-7 seeding of label propagation (see
-    * [[graft.operators.Dedup.clustersOf]]) bought back the cost of
-    * widening clustering from the quality-filtered corpus to the full
-    * cleaned corpus; the remaining sum is the stages' inherent passes.
-    *
-    * Contention A/B (r14, the r13 "pipe1 inflates 3.6× under load"
-    * hypothesis, tested): with 32 CPU spinners saturating all cores for
-    * the WHOLE run (probe 0.63 s start AND end — steady load), pipe1
-    * inflated 1.24× and pipe3 1.11× against a 1.37× median over 8
-    * reference queries — the multi-action structure (label rounds +
-    * convergence counts) does NOT amplify sustained contention; it
-    * inflates LESS than shuffle-bound single-action queries (dd3 1.68×).
-    * r13's official 18.0 s was a transient co-tenant BURST landing on
-    * both min-of-2 samples, which the contract line's probe drift now
-    * exposes from the artifact alone (a load that died mid-suite
-    * reproduced the signature: probe 1.15 s → 0.53 s, drift 2.19×,
-    * flagged CONTENTION-SUSPECT by compare_bench.py).
     */
   def trainingCorpus(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -197,49 +169,23 @@ object Pipelines {
     import graft.functions.EvalOnce.once
     import graft.functions.TextFunctions.{langId, qualityScore}
 
-    // Clean the CONSUMED columns, not the whole table (r19, the pipe1
-    // checkpoint shave): the pipeline's output derives from (doc_id,
-    // text) only, and P9's dedup-on-all-columns blocks column pruning
-    // through the clean — so the full-table form shuffled and
-    // placeholder-scrubbed lang/source/n_chars just to drop them at the
-    // checkpoint projection. Pruning FIRST is also exactly the oracle's
-    // model (keptCtes' `cleaned` CTE cleans doc_id+text and nothing
-    // else); on any corpus with unique doc_id the two forms agree (P9
-    // then no-ops under both widths), and the composed pipelines' gates
-    // hash-pin that agreement every round. At 100 TB this is the
-    // difference between shuffling the 2 consumed columns and the whole
-    // row.
+    // Clean the consumed columns (doc_id, text), not the whole table:
+    // P9's dedup-on-all-columns blocks column pruning through the clean,
+    // and this is exactly the oracle's model (keptCtes' `cleaned` CTE).
+    // On any corpus with unique doc_id the two forms agree.
     val cleaned = Preprocess.clean(graft.Tables.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))).df
-    // NO quality filter before clustering: the held-out benchmark is
-    // carved from the FULL cleaned corpus, so an eval document below the
-    // quality bar must still poison its near-dup component — a kept train
-    // doc that near-dups a low-quality eval doc is still a leak. (Round 6
-    // clustered the filtered corpus, which let exactly that case through.)
-    // langId is NOT computed here (r19): quality gates eligibility so it
-    // must score every cleaned doc, but lang_detected is consumed only on
-    // the SURVIVORS (pipe1's stratified sample key; pipe3 never reads it)
-    // — deferring it to the post-window projection skips the detector
-    // over every dropped/duplicate doc and lets pipe3's plan prune it
-    // entirely.
-    // The checkpoint CARRIES the shingle array (r20): the cleaning pass's
-    // one tokenization now serves both scoring and the banded dedup —
-    // the r19 shape re-tokenized the checkpointed corpus into a separate
-    // scoped shingle cache (a second corpus-sized materialization plus
-    // its job). Docs too short to shingle keep a NULL sh (they stay in
-    // the corpus/nodes but can never be candidates — the same absence
-    // shingledOf's size filter produces). The keyed quarter-width
-    // repartition ahead of the projection is Tables.tWide's width pin:
-    // the cleaned frame is otherwise a single partition, so quality
-    // scoring AND shingling would run as one task (and every checkpoint
-    // consumer would inherit the single-partition layout).
-    // The when() guard around the shingle HOF is the shape shinglesOf's
-    // scaladoc prices at ~2x the row-level filter — but the filter form
-    // is unavailable HERE (short docs must stay in the corpus; only
-    // their shingles are absent), and the cost is paid once inside the
-    // checkpoint against the r19 shape's whole second tokenize pass +
-    // separate cache materialization: the A/B that accepted it (pipe1
-    // 28→22 stages, wall 3.19→3.04 warm Prof) includes it.
+    // No quality filter before clustering: the held-out benchmark is
+    // carved from the full cleaned corpus, so an eval document below the
+    // quality bar must still poison its near-dup component.
+    // langId is deferred to the survivors-only projection: only pipe1's
+    // stratified sample reads lang_detected.
+    // The checkpoint carries the shingle array, so the cleaning pass's one
+    // tokenization serves both scoring and the banded dedup. Docs too short
+    // to shingle keep a NULL sh (in the corpus, never a candidate). The
+    // keyed repartition is Tables.tWide's width pin: the cleaned frame is
+    // otherwise one partition. The when() guard around the shingle HOF
+    // stands in for a row filter, since short docs must stay in the corpus.
     val scored = graft.Tables.wide(cleaned, col("doc_id"))
       .select(col("doc_id"), col("text"),
         once(qualityScore(col("text"))).as("quality"),
@@ -257,31 +203,15 @@ object Pipelines {
     val eligibleBase = scored.filter(col("quality") >= 0.5 && !isEval)
     val outCols = Seq(col("doc_id"), col("text"), col("quality"),
       col("canonical_doc_id"))
-    // Regime-gated tail (r18, the pipe1 application of the gr-family
-    // driver finishes): in the driver regime the active assignment is
-    // already a collected broadcast-sized list, so the contamination
-    // carve runs on the DRIVER (Dedup.isEvalSplitLocal — a component is
-    // bad if any member, including its canonical, is eval; self-canonical
-    // eval docs need no entry because their only member is already
-    // dropped by the !isEval filter) and the label + keep-list joins
-    // collapse to ONE broadcast join plus a broadcast anti-join — no
-    // corpus shuffle, no corpus-sized scoped cache, ~3 fewer exchanges.
-    // The distributed regime keeps the prior shape: scoped-cached full
-    // label frame (consumed by two subtrees of the final plan), distinct
-    // carve, shuffle keep-join, anti-join. Same-box isolated A/B at
-    // sf0.1/local[32] (min-of-3, spin 0.32-0.35 on every run): pipe1
-    // 5.38 → 4.16/4.57 s across two quiet post-change runs, pipe3
-    // → 3.68 s (r17 official 4.13); the residual pipe1 cost is the
-    // scored checkpoint (~1.4 s of clean + scoring expression CPU over
-    // the corpus — shared work both regimes need) plus the banded dedup
-    // machinery (~1.6 s, dd5's floor) and a 0.4 s tail.
-    // r19 checkpoint shave (the r18 verdict's #4; same-box isolated
-    // min-of-4 A/B, spin 0.32-0.40 and probe 0.53-0.55 on BOTH runs):
-    // pruning the clean to the consumed (doc_id, text) and deferring
-    // langId to the survivors-only projection took pipe1 4.36 → 3.46 s
-    // and pipe3 3.93 → 3.50 s — pipe1's missed r17 target of ≤3.5 s
-    // reached isolated, oracle hashes unchanged (pipe1-4 PASS at
-    // sf0.01).
+    // Regime-gated tail: in the driver regime the active assignment is a
+    // collected broadcast-sized list, so the contamination carve runs on
+    // the driver (Dedup.isEvalSplitLocal — a component is bad if any
+    // member, including its canonical, is eval; self-canonical eval docs
+    // need no entry because the !isEval filter already dropped them) and
+    // the label + keep-list joins collapse to one broadcast join plus a
+    // broadcast anti-join. The distributed regime scoped-caches the full
+    // label frame (consumed by two subtrees of the final plan), then a
+    // distinct carve, shuffle keep-join and anti-join.
     val eligible = graft.operators.Dedup.clusterAssignmentPreShingled(
         scored.select(col("doc_id")),
         scored.filter(col("sh").isNotNull)
@@ -316,8 +246,8 @@ object Pipelines {
     // would vanish entirely). The rank-1 window compiles to map-side
     // WindowGroupLimits on the component key, so the exchange carries
     // ~one row per component, same shape as d4's stratified sample.
-    // text rides along (it was already in the eligible exchange before the
-    // round-8 refactor): pipe1 drops it before sampling, pipe3 tokenizes it
+    // text rides along in the eligible exchange: pipe1 drops it before
+    // sampling, pipe3 tokenizes it
     eligible
       .withColumn("rk", row_number().over(
         Window.partitionBy("canonical_doc_id").orderBy("doc_id")))
@@ -338,17 +268,8 @@ object Pipelines {
     * conserve tokens (InvariantSpec: per-doc manifest sums equal the
     * survivor's token count).
     *
-    * Bench budget: ≈ 7.1 s at sf0.1 local[32] (r14 box, probe ≈ 0.44 s,
-    * min-of-2 in suite context — r13's fast box measured 5.2 s at its
-    * own probe speed; normalize by the contract line's probe before
-    * comparing) — the full clean → score → banded-dedup → decontaminate
-    * → pack composition; the banded dedup inside [[curatedSurvivors]] is
-    * the dominant term (matches dd3's standalone ~2.4 s plus verify).
-    * A probe-normalized regression well past that budget means a stage
-    * re-materialized the scan (PlanSpec's scan-free pin is the
-    * structural guard). Contention behavior: see [[trainingCorpus]]'s
-    * A/B — pipe3 inflates 1.11× under full sustained saturation vs the
-    * 1.37× reference median; the multi-action loop is not an amplifier.
+    * A regression means a stage re-materialized the scan (PlanSpec's
+    * scan-free pin is the structural guard).
     */
   def packedCorpus(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._

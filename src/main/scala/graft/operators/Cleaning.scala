@@ -22,15 +22,6 @@ object Cleaning {
   def cleanDocuments(spark: SparkSession, dir: String): DataFrame =
     Preprocess.clean(t(spark, dir, "documents")).df.orderBy("doc_id")
 
-  /** r17 re-budget of the official r16 artifact's p_clean_messy flag
-    * (1.48 → 2.59 s with ZERO code change in its path — the one
-    * dual-ratio regression that wasn't the basket pin): isolated
-    * min-of-3 on a spin-clean box (0.351/0.325 s) read 1.605 s, dead on
-    * the r15 official level, and the first two r17 full-suite runs read
-    * it 1.97 s and 1.41 s in-suite. Verdict: NOISE (suite-position /
-    * box-state inflation, the class the env contract line now brackets),
-    * not a regression; no fix required.
-    */
   def cleanMessy(spark: SparkSession, dir: String): DataFrame = {
     val o = t(spark, dir, "orders")
     val messy = o.select(
@@ -42,13 +33,12 @@ object Cleaning {
       lit(null).cast("string").as("empty_col"),
       col("o_orderstatus").as("Unnamed: 5"),
       col("o_totalprice").as("total"))
-    // Width pin before the cleaning pass (r20, the shingledOf
-    // precedent): the orders scan is a single row group, so the fused
-    // try_cast validation aggregate and the cleaning projection ran as
-    // ONE task. Every downstream step is partition-insensitive (exact
-    // validation counts, hash dedup of identical rows, a total-order
-    // sort over all kept columns). Same-box isolated min-of-4 A/B at
-    // sf0.1: 1.833 -> 1.219 s.
+    // Width pin before the cleaning pass (the shingledOf precedent): a
+    // single-row-group orders scan would run the fused try_cast
+    // validation aggregate and the cleaning projection as one task. Every
+    // downstream step is partition-insensitive (exact validation counts,
+    // hash dedup of identical rows, a total-order sort over all kept
+    // columns).
     Preprocess.clean(graft.Tables.wide(messy, col("Order#Key!"))).df
       .orderBy(col("orderkey").asc_nulls_first, col("order_date").asc_nulls_first,
         col("priority_level"), col("total"))

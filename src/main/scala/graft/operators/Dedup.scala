@@ -10,17 +10,9 @@ import graft.functions.TextFunctions.{fingerprint, tokenSet}
 /** Deduplication operator family over `documents` (north-star extension,
   * SURVEY.md §2.5): exact, blocked n-gram Jaccard, MinHash+LSH, SimHash.
   *
-  * Scale design (100 TB): no operator ever builds an unblocked cross join.
-  *   - exact: one hash aggregate on the content fingerprint;
-  *   - jaccard: candidates routed through unigram MinHash band buckets
-  *     (equi-join on (band, bucket), unbounded bucket cardinality), then
-  *     verified by exact token-set Jaccard — candidate count tracks
-  *     duplicate density, not n²;
-  *   - minhash: explode shingles → per-doc signature aggregate → LSH band
-  *     buckets → equi-join on (band, bucket). Work is proportional to
-  *     corpus size + true-ish candidate count, the standard web-scale dedup
-  *     shape;
-  *   - simhash: same banding idea on 16-bit fingerprint chunks.
+  * Scale design: no operator ever builds an unblocked cross join; every
+  * near-dup scheme routes candidates through an equi-join on
+  * (band, bucket), so candidate count tracks duplicate density, not n².
   *
   * MinHash portability trick: a "permutation" is md5(seed || shingle) and
   * the signature entry is the lexicographic MIN of those hex strings — min
@@ -28,54 +20,23 @@ import graft.functions.TextFunctions.{fingerprint, tokenSet}
   * sides), so the full LSH pipeline has an exact DuckDB oracle with no
   * bespoke hash functions.
   *
-  * Caching note: the token/shingle frames are persisted for the duration
-  * of ONE consuming action via [[graft.engine.Caching.scopedPersist]] —
-  * the `(SparkSession, dir) => DataFrame` contract returns a lazy plan, so
-  * an eager unpersist would run before execution; the scoped form instead
-  * releases the blocks from a query-completion listener once the caller's
-  * action finishes, so a long-lived session does not accumulate storage.
-  * The one multi-action cache (dd5's edge frame, consumed by every
-  * label-propagation round) keeps an explicit persist/unpersist pair.
-  *
-  * Per-query budget (round-8 closure, sf0.1 local[32] warm min-of-3 in
-  * one session — round-8 BOX; later rounds' boxes run ~1.3-1.4× slower
-  * suite-wide, and r14+ bench contract lines carry a calibration probe
-  * (see Bench.probe) to normalize any cross-round compare — the
-  * convention every absolute budget in this library follows):
-  * dd2 1.6 s, dd3 2.4 s, dd4 1.4 s, dd5 3.6 s, dd7 2.3 s,
-  * dd8 2.3 s, dd9 0.4 s. r13 note: the session-wide cached-plan
-  * re-coalescing (GraftSession) initially moved dd3 1.65 → ~2.4 s in
-  * the suite — at sf0.1 the KB-sized candidate frame coalesced below
-  * CPU parallelism and the Jaccard-verify stage serialized. Closed by
-  * [[spreadVerify]] (explicit numeric repartition before the verify
-  * kernels): dd3 1.3 s, dd10 1.1 s in the final r13 suite, with the
-  * re-coalescing's suite-wide win kept. A global 64k
-  * minPartitionSize floor was A/B'd first and rejected (recovered dd3
-  * but cost gr5 3×; the knob remains in Bench for future A/Bs). Each query re-tokenizes/re-signatures because
-  * bench queries are deliberately independent; WITHIN each query the
-  * token/shingle/signature frames are computed once (scoped persists and
-  * the one-pass side emissions above), every persist decision carries its
-  * A/B numbers at the call site, and the remaining cost is the banded
-  * join + verify work itself, which tracks candidate count. The bench's
-  * higher per-query figures (e.g. dd9 ~2 s) are first-touch session costs
-  * (file listing, codegen) that amortize in any real deployment. Family
-  * closed: further trims need a cross-query signature cache, which the
-  * independent-query bench contract forbids.
+  * Caching: the token/shingle frames are persisted for the duration of
+  * ONE consuming action via [[graft.engine.Caching.scopedPersist]] — the
+  * `(SparkSession, dir) => DataFrame` contract returns a lazy plan, so an
+  * eager unpersist would run before execution. The one multi-action cache
+  * (dd5's edge frame, consumed by every label-propagation round) keeps an
+  * explicit persist/unpersist pair.
   */
 object Dedup {
 
   import graft.functions.TextFunctions.tokensOrdered
 
-  /** Distinct word-bigram shingles from an ALREADY-MATERIALIZED token
-    * array attribute. The token expression must not be inlined here: Spark
-    * does no common-subexpression elimination inside lambda bodies, so an
-    * inline split would re-tokenize the whole text for every shingle
-    * (measured ~6x slowdown on the LSH pipeline).
-    */
-  /** Distinct shingle set (see TextFunctions.rawShingles for the
-    * preconditions: materialized token attribute, size >= 2 filtered at
-    * the row level — a when/otherwise guard around the HOF measurably
-    * doubles the projection cost).
+  /** Distinct word-bigram shingles from an already-materialized token
+    * array attribute (see TextFunctions.rawShingles). The token expression
+    * must not be inlined: Spark does no common-subexpression elimination
+    * inside lambda bodies, so an inline split would re-tokenize the text
+    * for every shingle (~6x slower). Callers filter size >= 2 at the row
+    * level; a when/otherwise guard around the HOF doubles the projection.
     */
   private[graft] def shinglesOf(tokAttr: Column): Column =
     array_distinct(graft.functions.TextFunctions.rawShingles(tokAttr))
@@ -88,21 +49,12 @@ object Dedup {
     * pipelines can shingle a cleaned/filtered corpus, not just the raw
     * table.
     *
-    * Width pin BEFORE the expensive projection (r20, the supportPairsPlan
-    * precedent): the corpus parquet is a single row group at bench scale,
-    * so the scan — and with it the tokenize+shingle+distinct chain, the
-    * most expensive per-row work in the dedup family — ran as ONE task
-    * while 31 cores idled. The numeric repartition moves only the raw
-    * (doc_id, text) rows and is the one form AQE must respect; hashing on
-    * doc_id (not round-robin) makes the downstream verify joins'
-    * cached-side distribution explicit. At production scale a 100 TB
-    * corpus arrives in thousands of splits and the pin is a no-op-shaped
-    * rebalance; at toy scale it is the difference between serial and
-    * parallel shingling (measured r20 same-box warm min-of-3 together
-    * with the scan-local signature fusion below: dd3 2.24 → 1.88 s Prof,
-    * 1.42 s bench-isolated; full-width was ALSO tried and lost — 32
-    * near-empty tasks per downstream stage cost more than the extra
-    * parallelism bought, hence the quarter-width).
+    * Width pin before the expensive projection: a single-row-group corpus
+    * would run the tokenize+shingle+distinct chain as one task. The
+    * numeric repartition is the one form AQE must respect; hashing on
+    * doc_id makes the downstream verify joins' cached-side distribution
+    * explicit. Quarter width ([[graft.Tables.wide]]): full width fans
+    * downstream stages into near-empty tasks.
     */
   private[graft] def shingledOf(docs: DataFrame): DataFrame =
     graft.Tables.wide(docs, col("doc_id"))
@@ -146,7 +98,7 @@ object Dedup {
   private[graft] def sqlIsEvalSplit(id: String): String =
     s"substr(md5($id::VARCHAR), 1, 1) < '4'"
 
-  /** [[isEvalSplit]]'s DRIVER twin (r18) — the same md5-of-decimal-string
+  /** [[isEvalSplit]]'s driver twin — the same md5-of-decimal-string
     * first-hex-digit rule, for regime-gated tails that compute the
     * contamination carve on a collected assignment
     * ([[graft.engine.Pipelines]]'s curatedSurvivors). First hex digit
@@ -178,15 +130,12 @@ object Dedup {
     * signature; collisions are verified with the EXACT hashed-token-set
     * Jaccard and emitted at >= 0.6.
     *
-    * This replaces the round-1/2 fixed-cardinality (lang, n_chars DIV 50)
-    * blocking, whose within-block pair count grew quadratically with corpus
-    * size. Band buckets have unbounded cardinality (md5 of two 16-bit
-    * minhash windows), so candidate count tracks DUPLICATE DENSITY, not n²:
+    * Band buckets have unbounded cardinality (md5 of two 16-bit minhash
+    * windows), so candidate count tracks duplicate density, not n²:
     * unrelated documents collide in a band with probability j^2 per band
-    * (j = true Jaccard), vanishing for the non-dup mass. Recall at the 0.6
-    * threshold is 1-(1-0.36)^4 ~ 0.83 per the standard S-curve and rises
-    * steeply above it — the oracle replicates the identical candidate
-    * generation, so the gate checks the algorithm, not recall.
+    * (j = true Jaccard). Recall at the 0.6 threshold is 1-(1-0.36)^4 ~ 0.83
+    * per the standard S-curve; the oracle replicates the identical
+    * candidate generation, so the gate checks the algorithm, not recall.
     *
     * Hot buckets are CAPPED (same [[HotBucketCap]] rule as dd4): the driver
     * corpus is template-generated — ~60% of ALL doc pairs share unigram
@@ -264,15 +213,13 @@ object Dedup {
     * < 0.5 at sf0.01), so the 0.8 threshold is both non-vacuous and far
     * from the mass on either side.
     *
-    * Scale: Levenshtein is O(len_a * len_b) per pair — the expensive
-    * verifier — so it runs ONLY on band-routed, hot-capped candidates that
-    * ALSO survive a length-ratio prefilter (lev >= |len_a - len_b|, hence
-    * sim <= 1 - |diff|/max: pairs failing on lengths alone never pay for
-    * the DP matrix; the round-adjusted 0.79995 bound cannot drop a kept
-    * pair, so the oracle needs no guard) — and even then through the
-    * BANDED `levenshtein(l, r, threshold)` form, whose per-pair threshold
-    * provably returns the exact distance for every pair the 0.8 filter
-    * can keep (see the inline derivation).
+    * Scale: Levenshtein is O(len_a * len_b) per pair, so it runs only on
+    * band-routed, hot-capped candidates that also survive a length-ratio
+    * prefilter (lev >= |len_a - len_b|; the rounding-adjusted 0.79995
+    * bound cannot drop a kept pair, so the oracle needs no guard), and
+    * then through the banded `levenshtein(l, r, threshold)` form, whose
+    * per-pair threshold returns the exact distance for every pair the
+    * 0.8 filter can keep (see the inline derivation).
     */
   def editDistancePairs(spark: SparkSession, dir: String): DataFrame =
     editDistanceCore(
@@ -326,19 +273,14 @@ object Dedup {
     * portability: substr windows of the same lowercase hex are independent
     * orderings on both engines.
     *
-    * SCAN-LOCAL (r20): the shingle set already lives in one array per
-    * row, so the per-window minimum is an `array_min` over a lambda
-    * projection — no explode, no groupBy, no shuffle. The r2–r19 form
-    * exploded every shingle through a corpus-sized hash aggregate, which
-    * charged every banded query (dd3/dd5/dd7/dd9/dd11/pr1/pipe1/pipe3)
-    * one full exchange + AQE stage for an aggregation whose groups were
-    * exactly the input rows. `array_min` skips nulls like the `min`
-    * aggregate, and the md5 array is pinned behind [[graft.functions.EvalOnce]]
-    * so CollapseProject cannot inline the hashing 8x into the window
-    * minima. Rows with an empty shingle array produced no signature under
-    * the explode (and must produce none here — `concat_ws` would
-    * otherwise band their all-null signature as md5("")): the size guard
-    * reproduces that absence for any input frame.
+    * Scan-local: the shingle set already lives in one array per row, so
+    * the per-window minimum is an `array_min` over a lambda projection —
+    * no explode, no groupBy, no shuffle. `array_min` skips nulls like the
+    * `min` aggregate, and the md5 array is pinned behind
+    * [[graft.functions.EvalOnce]] so CollapseProject cannot inline the
+    * hashing 8x into the window minima. An empty shingle array produces no
+    * signature (`concat_ws` would otherwise band its all-null signature as
+    * md5("")).
     */
   private def signatures(sh: DataFrame): DataFrame = {
     val hashed = sh.filter(size(col("sh")) >= 1)
@@ -361,25 +303,13 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** MinHash+LSH near-dup pairs: candidates collide in >= 1 band; verified
-    * by exact shingle-Jaccard >= 0.7.
-    *
-    * The shingle frame is tokenized+shingled ONCE, cached, and feeds all
-    * three of its consumers (the signature explode and both verify sides) —
-    * round 2 re-ran the full tokenize+shingle projection three times, which
-    * tripled dd3's bench cost. MIN is duplicate-insensitive, so the
-    * signature path loses nothing by consuming the distinct shingles.
-    */
   /** Explicit verify-stage parallelism: candidate pair frames are
-    * KB-sized in BYTES but each row costs an expensive kernel
+    * KB-sized in bytes but each row costs an expensive kernel
     * (array_intersect over shingle sets, banded Levenshtein), so AQE's
-    * bytes-based coalescing serializes exactly the stage that needs
-    * every core — measured at sf0.1/local[32] (64k-floor A/B): dd3
-    * 2.4 → 1.5 s, dd10 3.2 → 1.2 s once the verify runs wide. A
-    * NUMERIC repartition is the one form AQE must respect;
-    * `defaultParallelism` scales with the cluster, and a candidate set
-    * far larger than it just means more rows per task (the kernel is a
-    * streamed projection — no spill surface).
+    * bytes-based coalescing would serialize exactly the stage that needs
+    * every core. A numeric repartition is the one form AQE must respect;
+    * a candidate set far larger than `defaultParallelism` just means more
+    * rows per task (the kernel is a streamed projection — no spill).
     */
   private def spreadVerify(cand: DataFrame): DataFrame =
     cand.repartition(
@@ -412,13 +342,10 @@ object Dedup {
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val sh = graft.engine.Caching.scopedPersist(shingled(spark, dir))
-    // The pair set IS persisted here even though the sort is its only
-    // consumer — MEASURED, not assumed: single-shot at sf0.1/local[32] on
-    // Spark 4.1.2, dd3 runs ~5.8 s with this persist vs 7.6–9.1 s without
-    // (three trials each). The cache boundary lets the verify joins
-    // finalize adaptively from the materialized pair stats instead of
-    // planning against the full join-tree estimates; the barrier it
-    // inserts is pair-set-sized and costs less than the re-planned work.
+    // The pair set is persisted even though the sort is its only
+    // consumer: the cache boundary lets the verify joins finalize
+    // adaptively from the materialized pair stats (dd3 ~5.8 s with it,
+    // 7.6–9.1 s without, sf0.1).
     graft.engine.Caching.scopedPersist(verifiedPairsOf(sh))
       .orderBy("doc_a", "doc_b")
   }
@@ -549,9 +476,9 @@ object Dedup {
           .toDF("doc_id", "canonical_doc_id")
     }
 
-  /** [[clustersOf]]'s regime-exposing form (r18): `Left` — the collected
+  /** [[clustersOf]]'s regime-exposing form: `Left` — the collected
     * active `(doc_id, canonical_doc_id)` pairs (canon ≠ id,
-    * broadcast-sized by the [[DriverFinishEdges]] bound); `Right` — the
+    * broadcast-sized by the [[RegimeGate.DriverRows]] bound); `Right` — the
     * full corpus-sized label frame, exactly [[clustersOf]]'s output.
     * pipe1/pipe3's tail uses the Left regime to replace two
     * corpus-shuffle joins, a distinct, and a corpus-sized scoped cache
@@ -565,7 +492,7 @@ object Dedup {
     clusterAssignmentPreShingled(docs.select(col("doc_id")),
       graft.engine.Caching.scopedPersist(shingledOf(docs)))
 
-  /** [[clusterAssignmentOf]] over a PRE-SHINGLED corpus (r20): callers
+  /** [[clusterAssignmentOf]] over a pre-shingled corpus: callers
     * that already materialized `(doc_id, sh)` — pipe1/pipe3's scored
     * checkpoint carries the shingle array so the cleaning pass's one
     * tokenization serves both scoring and dedup — feed it straight into
@@ -583,16 +510,6 @@ object Dedup {
         Right(reassemble(nodes, r).toDF("doc_id", "canonical_doc_id"))
     }
 
-  /** Edge-count bound under which [[componentsOf]] finishes on the driver
-    * ([[RegimeGate.DriverRows]]): sequential union-find labels a
-    * broadcast-sized edge list in O(E·α(E)) — microseconds per edge —
-    * replacing O(log diameter) distributed rounds that each cost two
-    * shuffle joins, a checkpoint, and a convergence action. sim16's driver
-    * eigen-solve (MLlib's RowMatrix precedent) is the house precedent for
-    * finishing bounded-size tails locally.
-    */
-  private[graft] val DriverFinishEdges = RegimeGate.DriverRows
-
   /** Generic min-label connected components over an undirected edge list —
     * THE one clustering implementation, shared by dd5/dd11/pipe1/pipe3
     * (shingle near-dup graph over documents) and sim6 (embedding near-dup
@@ -605,10 +522,11 @@ object Dedup {
     * - **Driver finish** (≤ `driverFinishMax` edges, all-long id columns):
     *   collect the pairs and run union-find with path halving + union-by-
     *   min, then label `nodes` through a broadcast join against the
-    *   resulting assignment. See [[DriverFinishEdges]] for why this is the
-    *   broadcast-join regime, not a driver-side anti-pattern.
+    *   resulting assignment. Union-find is O(E·α(E)) on a broadcast-sized
+    *   edge list, where each distributed round costs two shuffle joins, a
+    *   checkpoint and a convergence action.
     * - **Distributed loop** (above the bound, or non-long ids): min-label
-    *   propagation with pointer doubling, SEEDED at round 1's state —
+    *   propagation with pointer doubling, seeded at the first round's state —
     *   from all-self labels the first lower-then-halve round computes
     *   exactly label(v) = min(v, min neighbor id) (path halving is the
     *   identity on self-labels), so one aggregate over the edge frame
@@ -624,20 +542,15 @@ object Dedup {
     * touching at least one edge) — untouched ids are self-canonical by
     * definition and rejoin at the end (left join + coalesce).
     *
-    * Cost: the loop's per-round stages are latency-bound at any toy
-    * scale (each exchange is a driver re-plan round-trip, each round a
-    * count action); the driver finish cut dd5/dd11/sim6/pipe1/pipe3 by
-    * 5.3 s (−27%) at sf0.1, and DedupSpec runs every contract test in
-    * both regimes.
+    * DedupSpec runs every contract test in both regimes.
     */
   private[graft] def componentsOf(
       nodes: DataFrame, pairsIn: DataFrame,
-      driverFinishMax: Long = DriverFinishEdges): DataFrame =
+      driverFinishMax: Long = RegimeGate.DriverRows): DataFrame =
     reassemble(nodes, componentsAssignment(nodes, pairsIn, driverFinishMax))
 
-  /** THE one full-label-frame assembly over an active assignment (r18,
-    * per-round review — one copy, so the broadcast-vs-frame rejoin shape
-    * cannot drift between [[componentsOf]] and [[clusterAssignmentOf]]):
+  /** The one full-label-frame assembly over an active assignment, shared
+    * by [[componentsOf]] and [[clusterAssignmentOf]]:
     * every node not in the active assignment is self-canonical
     * (left join + coalesce); a `Left` ships the collected pairs as a
     * broadcast, a `Right` joins the distributed label frame.
@@ -660,9 +573,9 @@ object Dedup {
         coalesce(col("cmin"), col(idName)).as("canon"))
   }
 
-  /** [[componentsOf]]'s regime-exposing core (r18): `Left` — the
+  /** [[componentsOf]]'s regime-exposing core: `Left` — the
     * driver-finish ACTIVE assignment as collected `(id, canon)` pairs
-    * with `canon != id` (bounded by 2·[[DriverFinishEdges]] entries, so
+    * with `canon != id` (bounded by 2·[[RegimeGate.DriverRows]] entries, so
     * always broadcast-sized); `Right` — the distributed loop's converged
     * active label frame `(nid, canon)`. Exposed so pipeline tails in the
     * driver regime (pipe1/pipe3's contamination carve) can consume the
@@ -672,26 +585,21 @@ object Dedup {
     */
   private[graft] def componentsAssignment(
       nodes: DataFrame, pairsIn: DataFrame,
-      driverFinishMax: Long = DriverFinishEdges): Either[Seq[(Long, Long)], DataFrame] = {
+      driverFinishMax: Long = RegimeGate.DriverRows): Either[Seq[(Long, Long)], DataFrame] = {
     // Null endpoints are dropped up front so the two regimes agree: the
     // distributed loop would silently lose them to join/aggregate null
-    // semantics while the driver finish's getLong would NPE — same input
-    // must mean the same graph in both. A half-null edge is no edge.
-    // (A/B'd r17: 2.17 s with the na.drop vs 2.39 s without, same box.)
+    // semantics while the driver finish's getLong would NPE. A half-null
+    // edge is no edge.
     val gated = RegimeGate(pairsIn.toDF("pa", "pb").na.drop(), driverFinishMax,
         Some(nodes)) { pairs =>
       val adj = pairs.union(pairs.select(col("pb"), col("pa")))
         .toDF("src", "dst")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // EAGER seed checkpoint — the lazy form (folding block
-      // materialization into round 1's convergence count) was A/B'd in
-      // r14 and REJECTED: round 1 consumes the seed in two subtrees
-      // (neighbor aggregate + path-halving join), and without an eager
-      // materialization both compute the edges-sized seed aggregate
-      // concurrently — measured same-box min-of-2 at sf0.1/local[32]:
-      // sim6 1.89 → 2.37 s, pipe3 6.60 → 7.70 s lazy-vs-eager. The seed
-      // also materializes adj's blocks, so the pair cache (adj's union
-      // was its last reader) is released before the rounds run.
+      // Eager seed checkpoint: the first round consumes the seed in two subtrees
+      // (neighbor aggregate + path-halving join), so a lazy seed would
+      // compute the edges-sized aggregate twice concurrently. The seed
+      // also materializes adj's blocks, so the pair cache is released
+      // before the rounds run.
       (adj, adj.groupBy(col("src").as("nid"))
         .agg(min(col("dst")).as("m"))
         .select(col("nid"), least(col("nid"), col("m")).as("canon"))
@@ -758,11 +666,7 @@ object Dedup {
     * no planted cross-set dups, so the copy guarantees every eval doc has
     * exactly one hit to find).
     *
-    * Scale shape: one fingerprint projection of each side and a single
-    * shuffle equi-join on the fingerprint — the contaminated-pair output
-    * is eval-hit sized. No windows, no bands; exact containment needs
-    * nothing fancier (near-dup contamination is dd2/dd3's machinery
-    * pointed across corpora).
+    * Scale: one fingerprint equi-join; output is eval-hit sized.
     */
   def contamination(spark: SparkSession, dir: String): DataFrame = {
     val fps = t(spark, dir, "documents")
@@ -787,20 +691,16 @@ object Dedup {
     * guaranteed its verbatim hit at jaccard 1.0; the corpus's organic
     * near-dups supply the lightly-edited ones).
     *
-    * Scale shape: identical to dd3 — candidate count tracks cross-corpus
-    * duplicate density (band collisions), never |train| x |eval|; hot
-    * buckets share the one [[capHotBuckets]] rule; output is
-    * eval-hit-sized. The cross-side predicate on the banded equi-join
-    * costs nothing extra: eval ids < 1000000 <= train ids, so it is the
-    * same "ordered pair" shape with the split point fixed.
+    * Scale: as dd3 — never |train| x |eval|; hot buckets share the one
+    * [[capHotBuckets]] rule. The cross-side predicate costs nothing
+    * extra: eval ids < 1000000 <= train ids, so it is the same "ordered
+    * pair" shape with the split point fixed.
     */
   def nearContamination(spark: SparkSession, dir: String): DataFrame = {
-    // Shingle ONCE; both corpus sides and both verify sides derive from
-    // the cached frame with cheap projections. The signature aggregate
-    // deliberately runs over the 1.25x union rather than once + a cached
-    // filter/shift split: measured, the extra hashing of the eval quarter
-    // is cheaper than the cache materialization barrier that the split
-    // inserts before band bucketing (3.0 s vs 4.2 s at sf0.1).
+    // Shingle once; both corpus sides and both verify sides derive from
+    // the cached frame. The signature aggregate runs over the 1.25x union:
+    // hashing the eval quarter twice is cheaper than the cache barrier a
+    // filter/shift split would insert before band bucketing.
     val base = graft.engine.Caching.scopedPersist(
       shingled(spark, dir).select(shiftGuardedId.as("doc_id"), col("sh")))
     val evalSide = base.filter(isEvalSplit(col("doc_id")))
@@ -808,13 +708,8 @@ object Dedup {
     val corpus = evalSide.unionAll(trainSide)
     val verified = crossVerifiedPairs(corpus)
       .toDF("eval_doc_id", "train_doc_id", "shingle_jaccard")
-    // Persist-before-sort, same measured decision as dd3 (minhashLsh):
-    // single-shot at sf0.1/local[32], ~3.4 s with this persist vs
-    // 4.3–5.1 s without. The cache boundary lets the verify joins finalize
-    // adaptively from the materialized pair stats; the barrier is
-    // pair-set-sized. (dd2 was A/B-tested the same way and showed NO
-    // benefit — its verify side joins narrow hashed-token arrays, not
-    // shingle strings — so it stays unpersisted.)
+    // Persist-before-sort, as in dd3 (minhashLsh); dd2 does not benefit,
+    // because its verify side joins narrow hashed-token arrays.
     graft.engine.Caching.scopedPersist(verified).orderBy("eval_doc_id", "train_doc_id")
   }
 
@@ -861,14 +756,9 @@ object Dedup {
     * rest `unique`. Match ids are reported in the index's ORIGINAL id
     * space (shift removed), -1 for unique.
     *
-    * Scale shape: the exact layer is one fingerprint equi-join (batch-hit
-    * sized). The near layer is [[crossVerifiedPairs]] — at production
-    * scale the index side's signatures and band buckets are PRECOMPUTED
-    * and bucketed on (band, bucket), so an incoming batch only hashes
-    * itself and probes matching buckets (the equi-join shape is already
-    * exactly that); nothing in the plan touches |batch| × |index|. Both
-    * layers aggregate min() per batch doc before the final
-    * batch-frame-sized left joins.
+    * Scale: the exact layer is one fingerprint equi-join and the near
+    * layer is [[crossVerifiedPairs]]; nothing in the plan touches
+    * |batch| × |index|.
     */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
@@ -878,29 +768,13 @@ object Dedup {
       .filter(substring(md5(col("doc_id").cast("string")), 2, 1) < "8")
     val index = docs.filter(!isEvalSplit(col("doc_id"))).unionAll(planted)
       .select((col("doc_id") + IdShift).as("doc_id"), col("text"))
-    // ONE persisted (doc_id, fp, sh) pass over the union corpus (r21,
-    // the r20 verdict's #3 — share the batch/index split's signature
-    // frames across the exact and near layers): the r20 shape scanned
-    // `documents` separately for each fingerprint side, AGAIN for the
-    // shingle union, and once more for the final batch frame — seven
-    // scan+projection subtrees for one corpus. This frame carries the
-    // fingerprint AND the shingle array out of a single tokenize pass;
-    // the exact join, both banded/verify sides, and the final verdict
-    // frame all read the cached blocks. Short docs keep a NULL sh (they
-    // stay in the corpus for the exact layer but can never be
-    // candidates — signatures' size guard drops NULL exactly as
-    // shingledOf's row filter dropped the row; the pipe1 checkpoint
-    // precedent, including its priced when()-guard trade: one pass
-    // with the guard beats two passes without it). The r20 note that a
-    // TEXT-side cache showed no warm-run benefit priced caching the raw
-    // (doc_id, text) rows against re-scanning parquet; this caches the
-    // POST-tokenize artifacts, which the A/B shows is the paying side
-    // (isolated min-of-4 at sf0.1/local[32], two quiet cycles:
-    // 2.205/2.206 → 1.860/2.006 s; plan exchanges 25 → 20; Prof stage
-    // count rises 19 → 22 — the cache boundary adds stages while the
-    // wall time drops, so the residual cost is AQE stage latency, not
-    // data). The pin on the union base was itself A/B'd: pinned
-    // 1.86–2.01 vs unpinned 2.62.
+    // One persisted (doc_id, fp, sh) pass over the union corpus: the
+    // fingerprint and the shingle array come out of a single tokenize
+    // pass, and the exact join, both banded/verify sides and the final
+    // verdict frame all read the cached blocks. Short docs keep a NULL sh
+    // (in the corpus for the exact layer, never a candidate —
+    // signatures' size guard drops NULL as shingledOf's row filter
+    // would). The union base is width-pinned.
     val base = graft.engine.Caching.scopedPersist(
       graft.Tables.wide(batch.unionAll(index), col("doc_id"))
         .select(col("doc_id"), fingerprint(col("text")).as("fp"),
@@ -914,12 +788,10 @@ object Dedup {
       .select(col("doc_id"), lit(0).as("kind"), col("ix_id").as("mid"))
     val nearHits = crossVerifiedPairs(base.select(col("doc_id"), col("sh")))
       .select(col("lo_id").as("doc_id"), lit(1).as("kind"), col("hi_id").as("mid"))
-    // ONE verdict aggregate over the union of both hit layers (r20,
-    // replacing a per-layer groupBy + two left joins): min(struct(kind,
-    // mid)) orders lexicographically — any exact hit (kind 0) beats every
-    // near hit, and within a layer the minimum index id wins — exactly
-    // the old coalesce(exact_id, near_id) precedence, one exchange and
-    // one broadcast join cheaper.
+    // One verdict aggregate over the union of both hit layers:
+    // min(struct(kind, mid)) orders lexicographically — any exact hit
+    // (kind 0) beats every near hit, and within a layer the minimum index
+    // id wins.
     val best = exactHits.unionAll(nearHits)
       .groupBy("doc_id")
       .agg(min(struct(col("kind"), col("mid"))).as("b"))
@@ -953,29 +825,16 @@ object Dedup {
     * verbatim full-overlap hit; organic shared spans supply the partial
     * quotes).
     *
-    * Scale shape: tokenize once, one explode to DISTINCT window hashes
-    * (corpus-token-sized, the same cardinality t6's vocabulary explode
-    * handles), one equi-join on the window hash restricted to cross-side
-    * pairs, one count aggregate — never |train| x |eval|. Boilerplate
-    * windows shared by thousands of documents are capped per (window,
-    * SIDE) with the one [[capHotBuckets]] rule (constant band), so a hot
-    * window contributes at most Cap² pairs; the reported
-    * `n_shared_windows` counts cap-surviving windows, identically on both
-    * engines.
+    * Scale: one equi-join on the window hash restricted to cross-side
+    * pairs — never |train| x |eval|. Boilerplate windows are capped per
+    * (window, side) with the one [[capHotBuckets]] rule (constant band),
+    * so a hot window contributes at most Cap² pairs; `n_shared_windows`
+    * counts cap-surviving windows, identically on both engines.
     *
-    * The eval/train sides come out of ONE window pass: each window row
+    * The eval/train sides come out of one window pass: each window row
     * explodes into its shifted train id plus, for eval-split docs, the
-    * unshifted eval id — a filter+union of the window frame would instead
-    * run the scan+tokenize+md5 subtree once per branch (measured at
-    * sf0.1 warm min-of-3: 2.5 s two-subtree vs 2.0 s one-pass, and half
-    * the corpus scans — the version that matters at 100 TB).
-    *
-    * Bench budget: 1.5–1.9 s at sf0.1 local[32] (r13 box, single-query
-    * min-of-3; r14 in-suite 2.8 s at suite box factor — within the
-    * module header's box convention). BENCH_r12's 4.49 s was re-measured in isolation at
-    * 1.74 s with zero code change — full-suite contention, the t1/r11
-    * precedent; the 230-query suite runs dd8 amid the heavy t-family
-    * tail. Regression above ~3 s in a SINGLE-query run is real.
+    * unshifted eval id — a filter+union of the window frame would run the
+    * scan+tokenize+md5 subtree once per branch.
     */
   def spanContamination(spark: SparkSession, dir: String): DataFrame = {
     val k = SpanTokens
@@ -1015,45 +874,8 @@ object Dedup {
     * variant crawled first. Emits the full audit row (cluster, score,
     * keep bit) so the drop set is reviewable before deletion.
     *
-    * Scale shape: dd5's banded/bucketed cluster machinery unchanged
-    * (shingle → minhash band join with HotBucketCap → label
-    * propagation), one scan-local quality projection, and a row_number
-    * window partitioned by cluster id — clusters hash-partition evenly
-    * (they are near-dup groups, size-bounded in practice by the band
-    * cap), so no skew pathologies at 100 TB.
-    *
-    * Bench budget: 4.3 s at sf0.1 local[32] (r13 box, min-of-3, in
-    * suite — the module header's box convention applies) — dd5's
-    * cluster build (the dd3 band-route-and-verify machinery) plus one
-    * quality pass; tracks dd5's own cost, not a regression signal of
-    * its own unless the gap to dd5 grows.
-    *
-    * r19 A/B verdict on the r18 normalized-only flag (official
-    * 1.96→2.67 s, raw 1.36x / norm 1.58x at a 0.86 box factor): NOISE —
-    * no code change touched dd11 or dd5 between the rounds. Same-box
-    * isolated min-of-4, two runs: dd11 2.55 s with dd5 1.75 (spin
-    * 0.324/0.324, the quiet band) and 3.11 with dd5 2.26 (spin_end
-    * 0.434 — busier box, BOTH inflated; the dd11/dd5 ratio held at
-    * 1.37–1.45 across runs). The r18 official 2.67 sits inside today's
-    * isolated band; the r17 official 1.96 came from the artifact
-    * compare_bench retro-flags CONTENTION-SUSPECT (load1_start 8.49),
-    * whose per-query numbers are not adjudication anchors. Band
-    * re-pinned: 2.5–3.1 s isolated, tracking dd5 at ~1.4x.
-    *
-    * r16 A/B verdict on the r15 artifact's 1.77x suite-vs-isolated gap
-    * (6.07 s in-suite vs 3.42 isolated): NOT this query's plan and NOT
-    * cache debris from the dd family — it was the bench harness's
-    * inter-query reclaim. releaseAll's System.gc() kicks
-    * ContextCleaner into an asynchronous drain (block/broadcast
-    * removal RPCs + a GC tail) that lands inside the next query's
-    * samples, and dd11 pays the most because its in-suite predecessor
-    * dd10 generates the family's biggest garbage (DP-kernel self-join).
-    * Measured, probes stable: dd11-after-dd10 6.19 s with the bare
-    * reclaim; 4.48 with +10 s pause; 3.76 with reclaim skipped; 3.52
-    * with gc=false; 3.39 with the shipped fix (gc kept + 1 s
-    * post-reclaim settle after >=1 s queries, outside the timed
-    * window) vs 3.95 isolated under the old harness — in-suite now at
-    * or below isolated. See Bench.scala's settle comment.
+    * Scale: dd5's cluster machinery unchanged, one scan-local quality
+    * projection, and a row_number window partitioned by cluster id.
     */
   def qualityCanonical(spark: SparkSession, dir: String): DataFrame =
     qualityCanonicalCore(
@@ -1089,10 +911,8 @@ object Dedup {
     * an exact dup (same dd1 fingerprint as the canonical) or a
     * reorder-only dup (same bag, different exact fingerprint).
     *
-    * Scale shape: a per-row projection (sort ≤ doc-length tokens in
-    * place, one md5) plus ONE window over bag groups — the same
-    * hash-partition-by-fingerprint shape as dd1; no candidate
-    * generation, no joins.
+    * Scale: a per-row projection plus one window over bag groups (dd1's
+    * shape); no candidate generation, no joins.
     */
   def bagFingerprint(spark: SparkSession, dir: String): DataFrame =
     bagFingerprintCore(
@@ -1137,9 +957,6 @@ object Dedup {
     "dd10_edit_distance" -> editDistancePairs
   )
 
-  // Single-line on purpose: this fragment is interpolated into a larger
-  // string whose .stripMargin would otherwise eat the first '|' of any
-  // line-leading '||' concat operator.
   /** The unigram MinHash band candidate pipeline (tokens → 8-window
     * signature → 4 banded buckets → hot-cap → colliding id-ordered pairs)
     * as a reusable CTE chain — the oracle twin of

@@ -255,13 +255,8 @@ object Enrichment {
     * convention) and the uniform is the md5 pseudo-permutation (d7's
     * convention), so both engines materialize the identical multiset.
     *
-    * Scale shape: the per-source factor frame is domain-sized and
-    * broadcast; copy materialization is scan-local explode (no shuffle
-    * — output partitioning inherits the corpus partitioning, and the
-    * ≤ ceil(r)-way fanout is the unavoidable output size of an
-    * upsampled epoch). At 100 TB the plan frame (doc_id, n_copies) is
-    * the cheap artifact to persist; the explode runs inside the
-    * training-shard writer.
+    * Scale: the per-source factor frame is domain-sized and broadcast;
+    * copy materialization is a scan-local explode (no shuffle).
     */
   def epochMix(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -295,10 +290,8 @@ object Enrichment {
     * IDENTICAL double, so the sampled prefix (not just the set) is
     * oracle-checkable.
     *
-    * Scale shape: one scan-side projection (token count + key arithmetic,
-    * no shuffle) into a TakeOrderedAndProject top-k — the exchange
-    * carries k rows per partition, never the corpus. A weighted sample of
-    * k docs from 100 TB is one pass.
+    * Scale: one scan-side projection into a TakeOrderedAndProject top-k;
+    * the exchange carries k rows per partition, never the corpus.
     */
   def weightedSample(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.tokenCount
@@ -323,14 +316,9 @@ object Enrichment {
     * count ceil(n_d/2) arrives by broadcast join from a domain-sized
     * count aggregate.
     *
-    * Scale shape: exact per-domain quantiles need a per-domain sort —
-    * one shuffle partitioned by source, sort within domain (the honest
-    * cost of exact rank pruning; domains are the natural shards). The
-    * variable keep bound rules out WindowGroupLimit (literal-k only), so
-    * at 100 TB the cheaper variant swaps the rank for a per-domain
-    * `approx_percentile(quality, 0.5)` threshold join — same shape as
-    * `counts`, no sort — trading exactness for one aggregate; the exact
-    * form is what an oracle can gate.
+    * Scale: exact per-domain quantiles need one shuffle partitioned by
+    * source and a sort within domain; the variable keep bound rules out
+    * WindowGroupLimit (literal-k only).
     */
   def qualityPrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -357,11 +345,8 @@ object Enrichment {
     * document is kept, so every domain with any documents fills its
     * budget; nothing after it survives).
     *
-    * Scale shape: one projection (token count + md5 key), then a
-    * per-domain running sum — t10's sharded-prefix-sum shape, windows
-    * partitioned by domain, never a global ordered window. The output
-    * carries the running offset, so downstream sharding can split the
-    * kept stream without re-scanning.
+    * Scale: a per-domain running sum (t10's sharded-prefix-sum shape),
+    * never a global ordered window.
     */
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -386,13 +371,10 @@ object Enrichment {
     * before/after — the "how much did the tail move my statistic"
     * audit line.
     *
-    * Scale shape: TWO fact scans by construction — one exact-percentile
-    * aggregate for the cuts (a 1-row broadcast), one scan-local
-    * clip-and-aggregate (no shuffle beyond the final 1-row combine). At
-    * 100 TB the first pass swaps `percentile` for `approx_percentile`
-    * (prof2's sketch-cut convention) with no shape change. Cuts round to
-    * 4 (pct1's exact-percentile interpolation grain) before every
-    * comparison, so boundary rows clip identically on both engines.
+    * Scale: two fact scans — one exact-percentile aggregate for the cuts
+    * (a 1-row broadcast), one scan-local clip-and-aggregate. Cuts round
+    * to 4 (pct1's exact-percentile grain) before every comparison, so
+    * boundary rows clip identically on both engines.
     */
   def winsorize(spark: SparkSession, dir: String): DataFrame =
     winsorizeCore(
@@ -408,16 +390,8 @@ object Enrichment {
     * classify boundary docs identically); token-free docs land in an
     * explicit `empty` phase.
     *
-    * Scale shape: one explode into a vocabulary-sized hash aggregate
-    * (map-side combine), frequencies joined back on the token key, one
-    * per-doc aggregate, and a 1-row stats broadcast for the cuts —
-    * no corpus sort, no window. At 100 TB the vocabulary frame is the
-    * only shuffled artifact and it is Zipf-bounded.
-    *
-    * Bench budget: 1.0 s at sf0.1 local[32] (BENCH_r11 — r11 box,
-    * in-suite; later boxes run ~1.3-1.4× slower, normalize via the r14+
-    * bench probe) — one corpus scan + Zipf-bounded vocab aggregate;
-    * tracks t8's shape and should stay within ~2x of it.
+    * Scale: no corpus sort, no window; the Zipf-bounded vocabulary frame
+    * is the only shuffled artifact.
     */
   def curriculum(spark: SparkSession, dir: String): DataFrame =
     curriculumCore(t(spark, dir, "documents"))
@@ -460,11 +434,9 @@ object Enrichment {
     * a known tail and checks the exact clip counts and the clamped mean.
     */
   private[graft] def winsorizeCore(v: DataFrame): DataFrame = {
-    // r17 rework: the old form's ONE exact `percentile(v, array(...))`
-    // aggregate builds and merges a per-partition value→count hash map
-    // over the whole column — memory-heavy and the reason d10 priced at
-    // 2.1–3.9 s across box states (CPU+allocation-bound; it was the
-    // single most expensive plan among the sub-3 s queries). Tail cuts
+    // The exact `percentile(v, array(...))` aggregate builds and merges a
+    // per-partition value→count hash map over the whole column
+    // (CPU+allocation-bound). Tail cuts
     // only need the DISTRIBUTION EDGES: the p-th order statistics for
     // p ∈ {1%, 99%} live in the smallest/largest ~1% of values, which
     // TakeOrderedAndProject retrieves with a bounded per-partition heap
@@ -472,14 +444,14 @@ object Enrichment {
     // driver then replays Spark's own exact-percentile interpolation
     // (position p·(n−1); lower·(hi−pos) + upper·(pos−lo); the
     // BigDecimal-HALF_UP round) on those order statistics, so the cut
-    // values are bit-identical to the old aggregate's. Empty input
+    // values are bit-identical to the exact aggregate's. Empty input
     // falls back to the percentile form to preserve its null/0-row
     // semantics exactly.
     //
     // Scale: the heads are min(p, 1−p)·n rows — fine at bench scale,
     // driver-unbounded at 100 TB, where the documented swap (prof2's
     // convention) replaces BOTH exact forms with approx_percentile;
-    // the old exact map had the same (worse) corpus-scale ceiling.
+    // exact map has the same (worse) corpus-scale ceiling.
     val base = v.filter(col("v").isNotNull)
     val nv = base.count()
     if (nv == 0L) {
@@ -513,12 +485,11 @@ object Enrichment {
       else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     val posLo = 0.01 * (nv - 1)
     val posHi = 0.99 * (nv - 1)
-    // Cast to double BEFORE collecting (r18, per-round review): the old
-    // exact-percentile aggregate accepted any numeric `v` (its buffer
-    // promotes internally), so the heads must too — `getDouble` on a
-    // decimal/float column would throw where the fallback plan computed.
-    // Matches Percentile's own toDoubleValue promotion; ordering is
-    // value-order either way.
+    // Cast to double before collecting: the exact-percentile aggregate
+    // accepts any numeric `v` (its buffer promotes internally), so the
+    // heads must too — `getDouble` on a decimal/float column would throw
+    // where the fallback plan computes. Matches Percentile's own
+    // toDoubleValue promotion; ordering is value-order either way.
     val baseD = base.select(col("v").cast("double").as("v"))
     val kAsc = math.ceil(posLo).toInt + 1
     val ascHead = baseD.orderBy(col("v").asc).limit(kAsc)
@@ -608,10 +579,8 @@ object Enrichment {
     * from exact integer cents, so the per-row scale is deterministic
     * IEEE arithmetic on identical operands).
     *
-    * Scale shape: one scan, a broadcast nation dimension, a 1-row
-    * min/max broadcast, and a 3-way scan-local explode — no shuffle
-    * except the output sort. The long format IS the sparse-matrix
-    * ingest format a trainer consumes.
+    * Scale: no shuffle except the output sort. The long format is the
+    * sparse-matrix ingest format a trainer consumes.
     */
   def hashedFeatures(spark: SparkSession, dir: String): DataFrame = {
     def bucket(c: org.apache.spark.sql.Column) =
@@ -653,11 +622,9 @@ object Enrichment {
     * proportional to exp(weight) IS importance resampling; the weight
     * frame composes directly with d7's weighted sampler.
     *
-    * Scale shape: one explode into a K-sized hash aggregate (map-side
-    * combine — the bucket frame is 256 rows at ANY corpus size; that
-    * fixed-dimension profile is DSIR's whole point), a broadcast of the
-    * 256-row log-ratio table back onto the token stream, and a per-doc
-    * aggregate. No vocabulary-sized shuffle, no joins between corpora.
+    * Scale: the bucket frame is 256 rows at any corpus size (that
+    * fixed-dimension profile is DSIR's whole point); no vocabulary-sized
+    * shuffle, no joins between corpora.
     *
     * Determinism: buckets ride the md5 pseudo-hash (D3's convention);
     * the log-ratio's operands are identical exact integers on both
@@ -748,10 +715,8 @@ object Enrichment {
     * contamination-avoidance stance as d11's leakproof split.
     * Encodes `c_mktsegment` against the account-balance target.
     *
-    * Scale shape: one hash aggregate on the category domain (map-side
-    * combine), the category-sized stats frame broadcast back, then pure
-    * row-local arithmetic — no window over the fact table, no
-    * per-category shuffle of rows.
+    * Scale: one aggregate on the category domain, broadcast back; no
+    * window over the fact table.
     *
     * Determinism: Σ_seg is a parallel double sum, but every output
     * DIVIDES it by n_seg, shrinking the summation error back under the
@@ -797,10 +762,8 @@ object Enrichment {
     * capped predicate — is EXACT BIGINT arithmetic on token counts;
     * only the final uncapped share divides, under the 6-grid.
     *
-    * Scale shape: one explode-free token-count aggregate over documents
-    * (map-side combine to a source-sized frame), then windows over the
-    * SOURCE domain — metadata-sized at any corpus size (the d12/d13
-    * policy-frame convention).
+    * Scale: windows run over the source domain — metadata-sized at any
+    * corpus size.
     */
   def unimaxAllocation(spark: SparkSession, dir: String): DataFrame =
     unimaxCore(t(spark, dir, "documents"))

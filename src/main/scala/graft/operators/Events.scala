@@ -60,14 +60,9 @@ object Events {
     * standard product-analytics funnel, which a plain per-type count
     * overstates — a purchase before the first view is not a conversion).
     *
-    * Scale shape: each stage is one hash aggregate on user_id (partial
-    * combine map-side, shuffle carries one row per user) and each
-    * stage-to-stage dependency is an equi-join on user_id against the
-    * previous stage's user-count-sized frame — broadcastable at any
-    * events:users ratio, and AQE picks broadcast here. The events table is
-    * scanned once per stage with the event_type filter pushed to parquet;
-    * no window over the full event stream and no self-join of events
-    * against events.
+    * Scale: each stage is one user_id aggregate joined to the previous
+    * stage's user-count-sized frame; no window over the event stream and
+    * no self-join of events.
     */
   def funnel(spark: SparkSession, dir: String): DataFrame =
     funnelCore(t(spark, dir, "events"))
@@ -97,11 +92,9 @@ object Events {
     * every incremental pipeline maintains (compact an append-only change
     * log into current state; Delta/Hudi merge semantics in plain Spark).
     *
-    * Scale shape: the rank-1 filter compiles to WindowGroupLimit, so each
-    * map task forwards ONE row per user it sees — the exchange carries
-    * O(users x partitions) pre-deduped rows, never the event log. No
-    * self-join against max(ts) (two scans + a shuffle join) and no
-    * driver-side state; PlanSpec pins the map-side limit.
+    * Scale: the rank-1 filter compiles to a map-side WindowGroupLimit
+    * (PlanSpec), so the exchange carries O(users x partitions) rows,
+    * never the event log.
     */
   def latestState(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -125,12 +118,9 @@ object Events {
     * applies: users ≡ 0 (mod 7) are treated as new arrivals — their
     * pre-split history is excluded from the base snapshot.
     *
-    * Scale shape: the delta side is ev7's map-side rank-1 compaction of
-    * the post-split slice (the split predicate pushes to the scan); the
-    * base side is one DISTINCT hash aggregate of user ids (map-side
-    * combine, user-count-sized output) — never the full pre-split log.
-    * The classify join is user-count x user-count; AQE broadcasts the
-    * base side. No event-log self-join at any point.
+    * Scale: the delta side is ev7's map-side rank-1 compaction of the
+    * post-split slice and the base side one distinct user-id aggregate —
+    * never the full pre-split log, no event-log self-join.
     */
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -165,11 +155,8 @@ object Events {
     * (deletes there CLOSE validity intervals — StreamingSpec drives a
     * delete arriving in a later micro-batch).
     *
-    * Scale shape: identical to ev8 — rank-1 delta compaction is map-side
-    * (WindowGroupLimit), the base is one DISTINCT user-id aggregate, the
-    * classify join is user-count-sized and AQE-broadcast; the tombstone
-    * predicate and the unmatched-delete drop are scan-local arithmetic
-    * on that tiny frame. No event-log self-join.
+    * Scale: as ev8; the tombstone predicate and the unmatched-delete drop
+    * are scan-local arithmetic on the user-count-sized frame.
     */
   def mergeFull(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -199,12 +186,8 @@ object Events {
     * (cohort), counted on each later active day as an offset from the
     * cohort day — the product-analytics retention triangle.
     *
-    * Scale shape: the event log collapses FIRST to one row per
-    * (user, active day) — a hash aggregate with map-side combine, the only
-    * pass over the raw log. Cohort assignment is a second aggregate of
-    * that user×day frame (min day per user, user-count-sized) joined back
-    * on user_id — AQE broadcasts it at any realistic events:users ratio.
-    * The retention matrix itself is days² rows. No window over the event
+    * Scale: the event log collapses first to one row per (user, active
+    * day), the only pass over the raw log; no window over the event
     * stream, no self-join of events.
     */
   def retention(spark: SparkSession, dir: String): DataFrame = {
@@ -268,14 +251,9 @@ object Events {
     * the time-series regularization every downstream model/report needs
     * from an irregular event stream.
     *
-    * Scale shape: the daily aggregate collapses the event log first (hash
-    * aggregate, map-side combine) and is scoped-persisted — its THREE
-    * consumers (the span aggregate, the distinct user list, the grid
-    * join) all read the users×days cache, so the raw event log is scanned
-    * exactly once. The calendar span is a broadcast 1-row aggregate
-    * sequence-exploded per user (the grid is |users| × |days| rows, never
-    * event-sized); the forward fill is one `last(_, ignoreNulls)` window
-    * per user over the grid. Rounding precedes the fill, so propagated
+    * Scale: the users×days aggregate is scoped-persisted for its three
+    * consumers, so the raw event log is scanned exactly once; the grid is
+    * |users| × |days| rows. Rounding precedes the fill, so propagated
     * values are the already-rounded cells.
     */
   def resample(spark: SparkSession, dir: String): DataFrame = {
@@ -306,12 +284,9 @@ object Events {
     * arrives (null = currently valid); consecutive repeats of the same
     * value collapse into the earlier row's interval.
     *
-    * Scale shape: change detection (lag) and interval close (lead) are
-    * two window passes over the SAME user_id key with a filter between —
-    * the filter preserves the hash partitioning, so both ride ONE
-    * exchange (PlanSpec-pinned). No self-join, no state: the history
-    * rebuilds idempotently from the log, and the same plan windowed by
-    * (user_id, day) shards arbitrarily at 100 TB.
+    * Scale: lag and lead run over the same user_id key with a filter
+    * between, so both ride one exchange (PlanSpec-pinned); the history
+    * rebuilds idempotently from the log.
     */
   def scd2History(spark: SparkSession, dir: String): DataFrame =
     scd2Core(t(spark, dir, "events"))
@@ -341,15 +316,10 @@ object Events {
     * distincts, which is also why it complements ev13's mergeable
     * rollups).
     *
-    * Scale shape: events collapse ONCE to the (day, user) ACTIVITY
-    * DOMAIN (hash aggregate, map-side combine — the frame is
-    * days × active-users, not event-sized); DAU is a domain-sized
-    * aggregate, and the 7-day windows come from a broadcast range join
-    * of the tiny observed-day dimension against the domain (each
-    * activity row lands in ≤7 windows — bounded expansion, never a
-    * corpus self-join). At 100 TB the same plan serves with
-    * approx_count_distinct sketches per (day, user-bucket) if exactness
-    * is waived; the exact form is what the oracle can gate.
+    * Scale: events collapse once to the (day, user) activity domain; the
+    * 7-day windows come from a broadcast range join of the observed-day
+    * dimension (each activity row lands in ≤7 windows), never a corpus
+    * self-join.
     */
   def rollingActive(spark: SparkSession, dir: String): DataFrame =
     rollingActiveCore(t(spark, dir, "events"))
@@ -384,10 +354,8 @@ object Events {
     * scheme rests on (store daily partials, serve any coarser grain
     * without touching raw data again).
     *
-    * Scale: this is the pattern that turns a 100 TB weekly report into a
-    * scan of day×type partial rows. Both aggregations are ordinary hash
-    * aggregates with map-side combine; the second one runs on the
-    * already-tiny daily frame. Monday-start ISO weeks in both engines.
+    * Both aggregations are ordinary hash aggregates; the second runs on
+    * the daily frame. Monday-start ISO weeks in both engines.
     */
   def rollupMerge(spark: SparkSession, dir: String): DataFrame =
     weeklyFromDaily(dailyPartialsOf(t(spark, dir, "events")))
@@ -422,11 +390,9 @@ object Events {
     * next-event prediction, anomaly scoring (ev10's complement on the
     * SEQUENCE axis rather than the value axis), and path simulation.
     *
-    * Scale shape: ONE exchange on user_id serves the lead() window (the
-    * only full-data pass); the adjacency aggregate has map-side combine
-    * down to the |types|² alphabet (25 here), and the row normalization
-    * is a window over that tiny frame — never over events. No self-join
-    * of events against events.
+    * Scale: one exchange on user_id serves the lead() window; the row
+    * normalization is a window over the |types|²-sized frame, never over
+    * events.
     */
   def transitions(spark: SparkSession, dir: String): DataFrame =
     transitionsCore(t(spark, dir, "events"))
@@ -453,13 +419,9 @@ object Events {
     * to `session_window`, but expressed so the oracle can reproduce it
     * verbatim).
     *
-    * Scale shape: one exchange on user_id serves ALL THREE windows — the
-    * lag, the running session counter, and the within-session row_number
-    * (hash(user_id) satisfies the (user_id, sess) clustering, so Catalyst
-    * inserts only a re-sort, no second shuffle). The path aggregate is a
-    * hash aggregate whose cardinality is bounded by the event-type
-    * alphabet (≤ |types|³ + |types|² + |types| rows), so the final frame
-    * is tiny at any corpus size.
+    * Scale: one exchange on user_id serves all three windows
+    * (hash(user_id) satisfies the (user_id, sess) clustering); the path
+    * frame is bounded by the event-type alphabet.
     */
   def sessionPaths(spark: SparkSession, dir: String): DataFrame =
     sessionPathsCore(t(spark, dir, "events"))
@@ -498,12 +460,10 @@ object Events {
     * exact integer sum divided once, so no double-summation order can
     * shift it (a naive avg over double seconds at ~1e6 magnitude would
     * sit exactly at the 6-decimal grain's noise floor). Percentiles
-    * follow pct1's exact-percentile + round-4 convention (swap to
-    * approx_percentile at 100 TB, prof2's convention).
+    * follow pct1's exact-percentile + 4-decimal rounding convention (swap
+    * to approx_percentile at 100 TB, prof2's convention).
     *
-    * Scale shape: two filtered aggregates on user_id and one
-    * user-frame-sized join — ev6's funnel shape; the final readout is a
-    * 1-row aggregate over the converted-user frame.
+    * Scale: ev6's funnel shape into a 1-row readout.
     */
   def conversionLag(spark: SparkSession, dir: String): DataFrame =
     conversionLagCore(t(spark, dir, "events"))
@@ -532,11 +492,8 @@ object Events {
     * event type under both models — the "which channel drives
     * purchases" readout.
     *
-    * Scale shape: ONE exchange on user_id serves both IGNORE-NULLS
-    * navigation windows (running first/last over the masked touch
-    * column — w5's machinery pointed at attribution); the credit
-    * aggregate is a hash aggregate onto the |types|-bounded frame. No
-    * self-join of events against events.
+    * Scale: one exchange on user_id serves both IGNORE-NULLS navigation
+    * windows; no self-join of events.
     */
   def attribution(spark: SparkSession, dir: String): DataFrame =
     attributionCore(t(spark, dir, "events"))
@@ -566,20 +523,6 @@ object Events {
       .orderBy("touch_type")
   }
 
-  /** ev21 — longest activity streak per user: the classic
-    * gaps-and-islands reduction (consecutive active days share
-    * `day − row_number`, so each run collapses to one group) serving the
-    * engagement metric every retention team tracks — longest run of
-    * consecutive active days, current-activity day count, and the streak
-    * count. ev9's retention matrix measures RETURN; this measures
-    * PERSISTENCE.
-    *
-    * Scale shape: events collapse once to the (user, day) activity
-    * domain (hash aggregate, map-side combine); the window runs per
-    * user over day-domain rows (≤ calendar-sized per user), and the
-    * island aggregate is another domain-sized hash aggregate. The raw
-    * event stream is scanned exactly once.
-    */
   /** ev22 — inactivity/churn readout: per user, last activity, lifetime
     * event count, whole days inactive at the corpus watermark, and a
     * churn flag — the per-USER complement of dq5's per-event-type
@@ -592,8 +535,7 @@ object Events {
     * q22 lesson); InvariantSpec drives the production-style 14-day bar
     * on a planted stale user.
     *
-    * Scale shape: one hash aggregate to the user domain (map-side
-    * combine), a 1-row watermark broadcast, scan-local arithmetic.
+    * Scale: one user-domain aggregate, a 1-row watermark broadcast.
     */
   def churn(spark: SparkSession, dir: String): DataFrame =
     churnCore(t(spark, dir, "events"), barDays = 1)
@@ -610,6 +552,17 @@ object Events {
       .orderBy("user_id")
   }
 
+  /** ev21 — longest activity streak per user: the classic
+    * gaps-and-islands reduction (consecutive active days share
+    * `day − row_number`, so each run collapses to one group) serving the
+    * engagement metric every retention team tracks — longest run of
+    * consecutive active days, current-activity day count, and the streak
+    * count. ev9's retention matrix measures RETURN; this measures
+    * PERSISTENCE.
+    *
+    * Scale: the raw event stream is scanned exactly once, into the
+    * (user, day) activity domain.
+    */
   def streaks(spark: SparkSession, dir: String): DataFrame =
     streaksCore(t(spark, dir, "events"))
 
@@ -645,8 +598,7 @@ object Events {
     * days keeps the weight < 1e46 — fine in double; an unbounded
     * stream would swap to the recursive streaming form).
     *
-    * Scale shape: one raw scan into the (day × type) aggregate; the
-    * smoother is calendar-sized window work.
+    * Scale: one raw scan into the (day × type) aggregate.
     */
   def ewmaDaily(spark: SparkSession, dir: String): DataFrame =
     ewmaDailyCore(t(spark, dir, "events"))
@@ -679,14 +631,10 @@ object Events {
     * holds nothing and contributes no weight). Reported next to the
     * unweighted mean so the gap IS the irregularity readout.
     *
-    * Scale shape: one lead() window per user (shuffle keyed on user_id
-    * — the same partitioning every ev-family session op uses, reusable
-    * across them in a composed pipeline), then a hash aggregate.
-    * Durations are exact epoch-ms integers; the weighted sum divides by
-    * Σ Δt, shrinking parallel-summation error under the 6-grid (the
-    * avg-rescue convention). A single-event user has no held interval:
-    * null TWAP on both engines (sum-of-empty is null, and the zero-span
-    * divisor is nullif-guarded — drift4's degenerate convention).
+    * Scale: one lead() window per user, then a hash aggregate. Durations
+    * are exact epoch-ms integers; the weighted sum divides by Σ Δt. A
+    * single-event user has no held interval: null TWAP on both engines
+    * (sum-of-empty is null, and the zero-span divisor is nullif-guarded).
     */
   def twap(spark: SparkSession, dir: String): DataFrame =
     twapCore(t(spark, dir, "events"))
@@ -720,14 +668,11 @@ object Events {
     * (the execution-quality / fair-transfer-price readout; reported next
     * to the unweighted mean so the gap IS the size-concentration signal).
     *
-    * Scale shape: a pure scan → project (from_json is codegen'd) → hash
-    * aggregate with map-side combine — no window, no join, one shuffle
-    * on the tiny (type, day) key space. The price·quantity sum
-    * accumulates as EXACT integer cent·units (`round(value·100)` is
-    * exact for the 2-decimal price domain; dq6's convention), so the
-    * only double op is the final division — association-order-proof at
-    * any parallelism. Zero total quantity on a group (all k=0) yields a
-    * null VWAP via the nullif guard, not a division error.
+    * Scale: scan → project → one aggregate, no window or join. The
+    * price·quantity sum accumulates as exact integer cent·units
+    * (`round(value·100)`, dq6's convention), so the only double op is
+    * the final division. Zero total quantity on a group yields a null
+    * VWAP via the nullif guard, not a division error.
     */
   def vwap(spark: SparkSession, dir: String): DataFrame =
     vwapCore(t(spark, dir, "events"))
@@ -784,10 +729,9 @@ object Events {
     * enough evidence); ΣG = 0 with ≥ 2 gaps (a duplicate-timestamp
     * burst) → null CV but verdict TRUE — maximal regularity.
     *
-    * Scale shape: one lag() window per user (the ev-family session
-    * partitioning, reusable across ops in a composed pipeline) into a
-    * per-user hash aggregate; tied timestamps need no tiebreak — the
-    * gap MULTISET is invariant under tie order, so the sums are too.
+    * Scale: one lag() window per user into a per-user aggregate; tied
+    * timestamps need no tiebreak — the gap multiset is invariant under
+    * tie order, so the sums are too.
     */
   def botScore(spark: SparkSession, dir: String): DataFrame =
     botScoreCore(t(spark, dir, "events"))

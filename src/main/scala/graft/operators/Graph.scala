@@ -63,20 +63,13 @@ object Graph {
     * the set; everything downstream is shape-identical.
     */
   private[graft] def basketArrays(lineitem: DataFrame): DataFrame =
-    // Plain aggregate, DELIBERATELY un-pinned (r17 re-adjudication of the
-    // r16 pin): r16 put an explicit `repartition(defaultParallelism,
-    // l_orderkey)` HERE to kill an AQE-coalescing coin flip that made gr2
-    // bimodal (2.79 / 1.34 / 1.47 s isolated across sessions). That pin
-    // is exchange-reused by this aggregate, which DELETES the map-side
+    // Plain aggregate, deliberately un-pinned: a pin here is
+    // exchange-reused by this aggregate, which deletes the map-side
     // partial collect_set (the shuffle carries every raw (order, part)
-    // row) and fuses the collect_set reduce + downstream pair explode +
-    // support partial into ONE post-shuffle stage — and while the
-    // builder's sessions read it fast (gr2 1.27–1.41 s), the OFFICIAL
-    // spin-clean r16 artifact read gr2 3.87 s / gr3 4.71 s / gr5 4.21 s,
-    // worse than every pre-pin mode (compare_bench r15→r16: VERDICT FAIL,
-    // gr2 2.3× raw). The width guarantee the pin bought is instead
-    // provided one operator up ([[supportPairs]]) at a boundary that
-    // keeps this aggregate's partial aggregation and AQE freedom intact.
+    // row) and fuses the reduce, the pair explode and the support partial
+    // into one post-shuffle stage. The width guarantee lives one operator
+    // up ([[supportPairsPlan]]), which keeps this aggregate's partial
+    // aggregation and AQE freedom intact.
     lineitem.select(col("l_orderkey"), col("l_partkey"))
       .groupBy("l_orderkey")
       .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, MaxBasketItems)
@@ -88,8 +81,7 @@ object Graph {
     * Plan: [[basketArrays]] (one wide stage), scan-local i<j pair
     * generation from each order's sorted array (fanout bounded at
     * C(256,2) per order by the cap), one hash aggregate to support
-    * counts. Two shuffles total; the old form's distinct + window +
-    * self-join needed three wide stages before the support aggregate.
+    * counts. Two shuffles total.
     */
   private[graft] def supportPairs(lineitem: DataFrame): DataFrame =
     graft.engine.Caching.scopedPersist(supportPairsPlan(lineitem))
@@ -100,37 +92,15 @@ object Graph {
   private[graft] def supportPairsPlan(lineitem: DataFrame): DataFrame =
     (
       basketArrays(lineitem)
-        // Width pin at the cheap-in/expensive-out boundary (r17, replacing
-        // the r16 pin inside [[basketArrays]] — see its scaladoc for the
-        // official-artifact evidence): the frame BELOW this line is one
-        // array row per order (~|orders| rows, a few MB at bench scale —
-        // exactly the size AQE's coalescer rounds down to ONE task, the
-        // measured bimodality), while the stage ABOVE it explodes to
-        // C(basket,2) pairs per row and partial-aggregates support — the
-        // expensive work whose width the coin flip was deciding. An
-        // explicit numeric repartition is the one form AQE must respect:
-        // the explode + support map side is pinned at defaultParallelism
-        // regardless of how the collect_set exchange below was coalesced,
-        // the aggregate below keeps its map-side partial collect_set, and
-        // the pin's own shuffle moves only the small array frame once.
-        //
-        // r17 same-box ABAB adjudication (this pin vs the r16 agg-pin vs
-        // the r15 no-pin; 2 alternating cycles, min-of-3 per invocation,
-        // spin 0.32–0.36 s throughout, gr2/gr3/gr5 family sums):
-        //   explode-pin 5.66 / 6.09 s; agg-pin 4.82 / 5.73 s;
-        //   no-pin 6.64 / 6.19 s.
-        // The agg-pin is ~0.5 s faster in THIS box state — but it is the
-        // form the OFFICIAL spin-clean r16 artifact read at 12.8 s family
-        // (gr2 3.87 s, worse than every pre-pin mode; compare_bench
-        // r15→r16 VERDICT FAIL), while the no-pin form's official r15
-        // record was healthy (1.67/2.47/3.10). The explode pin is chosen
-        // because it keeps the no-pin form's shuffle profile — map-side
-        // partial collect_set, combined-buffer shuffle volumes — so the
-        // official environment's agg-pin failure mechanism (raw-row
-        // shuffle into one fused mega-stage) structurally cannot apply,
-        // and it still removes the AQE bimodality (no-pin gr2 measured
-        // 2.79/1.34/1.47 s across r16 sessions; explode-pin 1.61/1.81 s
-        // across cycles).
+        // Width pin at the cheap-in/expensive-out boundary: the frame
+        // below is one array row per order (a few MB at bench scale —
+        // exactly the size AQE's coalescer rounds down to one task), while
+        // the stage above explodes to C(basket,2) pairs per row and
+        // partial-aggregates support. An explicit numeric repartition is
+        // the one form AQE must respect: the explode + support map side
+        // runs at defaultParallelism however the collect_set exchange was
+        // coalesced, and the pin's own shuffle moves only the small array
+        // frame once.
         .repartition(
           lineitem.sparkSession.sparkContext.defaultParallelism,
           col("l_orderkey"))
@@ -142,7 +112,7 @@ object Graph {
         .filter(col("support") >= 2)
         .select(col("pa"), col("pb")))
 
-  /** Driver wedge budget (r18, per-round review): the edge bound
+  /** Driver wedge budget: the edge bound
     * ([[RegimeGate.DriverRows]]) was sized for the O(V+E) finishes
     * (gr5/pr1/componentsOf union-find and label rounds),
     * but the WEDGE-shaped finishes — gr2/gr4's per-edge neighbor-set
@@ -226,14 +196,10 @@ object Graph {
     * n-scaled (mean ~1) so 6-decimal rounding keeps real precision at any
     * corpus size.
     *
-    * Scale shape: the edge list is built ONCE (band-routed, hot-capped —
-    * dd3's machinery) and persisted with its out-degrees attached; each
-    * iteration is one rank-vs-edges equi-join plus one dst-keyed hash
-    * aggregate (map-side combine) — the standard edge-partitioned
-    * PageRank round, no driver loop, no lineage blowup at 3 unrolled
-    * steps. The per-node (1-d)/n term rides a broadcast 1-row count. At
-    * 100 TB both joins hash-partition on doc id; pre-bucketing the edge
-    * list by src makes the rank join shuffle-free across iterations.
+    * Scale: the edge list is built once (dd3's band-routed, hot-capped
+    * machinery) and persisted with its out-degrees; each iteration is one
+    * rank-vs-edges equi-join plus one dst-keyed aggregate, unrolled with
+    * no driver loop. The per-node (1-d)/n term rides a broadcast count.
     *
     * Determinism: the only order-sensitive op is the per-dst contribution
     * sum (~1e-17 association error against a 1e-6 rounding grid); the
@@ -253,8 +219,7 @@ object Graph {
     // The gate persists the pair set before fan-out: the undirected union
     // reads it twice and the degree aggregate a third time, so an
     // unpersisted pair plan runs the whole band-route-and-verify pipeline
-    // 4x inside the one materialization below (A/B at sf0.1/local[32]:
-    // ~25% CPU drop, 2m59s -> 2m11s).
+    // 4x inside the one materialization below (~25% CPU).
     val pairs = Dedup.verifiedPairsOf(
         graft.engine.Caching.scopedPersist(Dedup.shingledOf(docs)))
       .select(col("doc_a"), col("doc_b"))
@@ -295,7 +260,7 @@ object Graph {
           }
           r = next
         }
-        val floor = 0.15 / n // every isolated node after round 1, exactly
+        val floor = 0.15 / n // every isolated node after the first round, exactly
         val spark = docs.sparkSession
         import spark.implicits._
         val active = r.toSeq.map { case (k, v) => (k, v) }
@@ -336,27 +301,11 @@ object Graph {
     * community detection and recommendation ("parts bought together in
     * threes"), and the graph-analytics complement to pr1's centrality.
     *
-    * Scale shape: basket pairing via [[supportPairs]] — one collect_set
-    * shuffle on the order key, scan-local i<j pair generation from each
-    * order's sorted capped array (fanout bounded by basket size²), one
-    * hash aggregate to the support counts; the support-≥2 filter is the
-    * hub-explosion guard that keeps the edge list at affinity scale
-    * (3.6–3.9k edges across sf0.01→0.1 — it grows with true co-purchase
-    * affinity, not with corpus size).
-    * Triangle enumeration works on ORIENTED edges (pa < pb), so each
-    * triangle is produced exactly once by construction — no /3
-    * correction, no symmetric-edge duplication; the two enumeration
-    * joins run over the tiny oriented edge frame. At 100 TB the same
-    * shape holds with the support threshold as the knob; the classic
-    * degree-ordered orientation is exactly this plan with rank instead
-    * of id order.
-    *
-    * Bench budget: 2.4-2.9 s isolated min-of-3 / 1.7-2.9 s in-suite at
-    * sf0.1 local[32] (r13 box, normalize cross-box via the r14+ bench
-    * probe — dominated by the shared [[supportPairs]]
-    * basket pairing, the gr family's fixed cost; the triangle joins on
-    * the cached edge frame are noise). Regression matters only if gr2
-    * moves WITHOUT gr3/gr4/gr5 moving with it.
+    * Scale: basket pairing via [[supportPairs]]; the support-≥2 filter is
+    * the hub-explosion guard that keeps the edge list at affinity scale
+    * (3.6–3.9k edges across sf0.01→0.1). Triangle enumeration works on
+    * oriented edges (pa < pb), so each triangle is produced exactly once
+    * by construction — no /3 correction.
     */
   def triangles(spark: SparkSession, dir: String): DataFrame =
     trianglesCore(t(spark, dir, "lineitem"))
@@ -371,35 +320,45 @@ object Graph {
       wedgeBudget: Long = DriverWedgeBudget): DataFrame =
     supportEdgesOrFrame(lineitem, driverFinishMax, wedgeBudget) match {
       case Left(es) =>
-        // Driver finish: oriented-neighbor intersection per edge — each
-        // triangle x<y<z found exactly once via its (x,y) edge, all
-        // integer counts (zero arithmetic drift vs the join form).
-        val fwd = new scala.collection.mutable.LongMap[Set[Long]]()
-        es.foreach { case (a, b) => fwd(a) = fwd.getOrElse(a, Set.empty) + b }
-        val cnt = new scala.collection.mutable.LongMap[Long]()
-        es.foreach { case (a, b) =>
-          for (z <- fwd.getOrElse(a, Set.empty) & fwd.getOrElse(b, Set.empty)) {
-            cnt(a) = cnt.getOrElse(a, 0L) + 1
-            cnt(b) = cnt.getOrElse(b, 0L) + 1
-            cnt(z) = cnt.getOrElse(z, 0L) + 1
-          }
-        }
         val spark = lineitem.sparkSession
         import spark.implicits._
-        cnt.toSeq.map { case (k, n) => (k, n) }
+        driverTriangles(es).toSeq
           .toDF("l_partkey", "n_triangles")
           .orderBy(col("n_triangles").desc, col("l_partkey"))
       case Right(pairs) =>
-        val tri = pairs.as("e1")
-          .join(pairs.as("e2"), col("e1.pb") === col("e2.pa"))
-          .join(pairs.as("e3"),
-            col("e3.pa") === col("e1.pa") && col("e3.pb") === col("e2.pb"))
-          .select(col("e1.pa").as("x"), col("e1.pb").as("y"),
-            col("e2.pb").as("z"))
-        tri.select(explode(array(col("x"), col("y"), col("z"))).as("l_partkey"))
-          .groupBy("l_partkey").agg(count(lit(1)).as("n_triangles"))
-          .orderBy(col("n_triangles").desc, col("l_partkey"))
+        triangleFrame(pairs).orderBy(col("n_triangles").desc, col("l_partkey"))
     }
+
+  /** gr2's driver finish: per-node triangle counts from oriented-neighbour
+    * intersection per edge. Each triangle x<y<z is found exactly once, via
+    * its (x, y) edge, in integer counts.
+    */
+  private def driverTriangles(es: Array[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
+    val fwd = new scala.collection.mutable.LongMap[Set[Long]]()
+    es.foreach { case (a, b) => fwd(a) = fwd.getOrElse(a, Set.empty) + b }
+    val cnt = new scala.collection.mutable.LongMap[Long]()
+    es.foreach { case (a, b) =>
+      for (z <- fwd.getOrElse(a, Set.empty) & fwd.getOrElse(b, Set.empty)) {
+        cnt(a) = cnt.getOrElse(a, 0L) + 1
+        cnt(b) = cnt.getOrElse(b, 0L) + 1
+        cnt(z) = cnt.getOrElse(z, 0L) + 1
+      }
+    }
+    cnt
+  }
+
+  /** gr2's distributed form: `(l_partkey, n_triangles)` over the oriented
+    * edge frame, each triangle produced once by the three-way join.
+    */
+  private def triangleFrame(pairs: DataFrame): DataFrame =
+    pairs.as("e1")
+      .join(pairs.as("e2"), col("e1.pb") === col("e2.pa"))
+      .join(pairs.as("e3"),
+        col("e3.pa") === col("e1.pa") && col("e3.pb") === col("e2.pb"))
+      .select(col("e1.pa").as("x"), col("e1.pb").as("y"),
+        col("e2.pb").as("z"))
+      .select(explode(array(col("x"), col("y"), col("z"))).as("l_partkey"))
+      .groupBy("l_partkey").agg(count(lit(1)).as("n_triangles"))
 
   /** gr4 — local clustering coefficient per node on the same
     * support-pruned co-purchase graph as gr2: `C(v) = 2·T(v) /
@@ -410,11 +369,9 @@ object Graph {
     * excluded (the coefficient is undefined, not zero — emitting 0
     * would conflate leaf parts with genuinely open neighborhoods).
     *
-    * Scale shape: everything after the basket pairing runs on gr2's
-    * tiny oriented edge frame (persisted ONCE, feeding both the
-    * triangle enumeration and the degree count — the scoped-persist
-    * discipline); the final join is affinity-scale. The coefficient is
-    * an exact integer ratio, so the 6-decimal grid is exact.
+    * Scale: everything after the basket pairing runs on gr2's oriented
+    * edge frame and gr2's per-node triangle counts. The coefficient is an
+    * exact integer ratio, so the 6-decimal grid is exact.
     */
   def clusteringCoefficient(spark: SparkSession, dir: String): DataFrame =
     clusteringCoefficientCore(t(spark, dir, "lineitem"))
@@ -429,28 +386,13 @@ object Graph {
       wedgeBudget: Long = DriverWedgeBudget): DataFrame =
     supportEdgesOrFrame(lineitem, driverFinishMax, wedgeBudget) match {
       case Left(es) =>
-        // Driver finish: gr2's triangle counts + degree counts locally;
-        // the coefficient replays the distributed expression
+        // The coefficient replays the distributed expression
         // (2.0·T / (deg·(deg−1))) on the same integers, then the same
         // BigDecimal-HALF_UP 6-round — bit-identical by construction.
-        val fwd = new scala.collection.mutable.LongMap[Set[Long]]()
-        val deg = new scala.collection.mutable.LongMap[Long]()
-        es.foreach { case (a, b) =>
-          fwd(a) = fwd.getOrElse(a, Set.empty) + b
-          deg(a) = deg.getOrElse(a, 0L) + 1
-          deg(b) = deg.getOrElse(b, 0L) + 1
-        }
-        val cnt = new scala.collection.mutable.LongMap[Long]()
-        es.foreach { case (a, b) =>
-          for (z <- fwd.getOrElse(a, Set.empty) & fwd.getOrElse(b, Set.empty)) {
-            cnt(a) = cnt.getOrElse(a, 0L) + 1
-            cnt(b) = cnt.getOrElse(b, 0L) + 1
-            cnt(z) = cnt.getOrElse(z, 0L) + 1
-          }
-        }
+        val cnt = driverTriangles(es)
         val spark = lineitem.sparkSession
         import spark.implicits._
-        deg.toSeq.filter(_._2 >= 2)
+        degrees(es).toSeq.filter(_._2 >= 2)
           .map { case (k, d) =>
             val t = cnt.getOrElse(k, 0L)
             (k, d, t, round6(2.0 * t / (d * (d - 1))))
@@ -458,15 +400,7 @@ object Graph {
           .toDF("l_partkey", "degree", "n_triangles", "clustering")
           .orderBy("l_partkey")
       case Right(pairs) =>
-        val tri = pairs.as("e1")
-          .join(pairs.as("e2"), col("e1.pb") === col("e2.pa"))
-          .join(pairs.as("e3"),
-            col("e3.pa") === col("e1.pa") && col("e3.pb") === col("e2.pb"))
-          .select(col("e1.pa").as("x"), col("e1.pb").as("y"),
-            col("e2.pb").as("z"))
-        val triPer = tri
-          .select(explode(array(col("x"), col("y"), col("z"))).as("l_partkey"))
-          .groupBy("l_partkey").agg(count(lit(1)).as("n_triangles"))
+        val triPer = triangleFrame(pairs)
         val deg = pairs.select(col("pa").as("l_partkey"))
           .unionAll(pairs.select(col("pb").as("l_partkey")))
           .groupBy("l_partkey").agg(count(lit(1)).as("degree"))
@@ -488,21 +422,9 @@ object Graph {
     * The recommender reading: parts never yet bought together whose
     * shared basket-mates most strongly suggest they will be.
     *
-    * Scale shape: runs entirely on gr2's support-pruned edge list
-    * (3.6–3.9 k edges across sf0.01→0.1 — affinity-scale, never the
-    * fact table): symmetrize, one node-sized degree aggregate, one
-    * edge-edge wedge join keyed on the center vertex, an anti-join to
-    * drop existing edges, and a TakeOrdered top-20. A wedge center's
-    * degree is ≥ 2 by construction, so `ln(deg)` never divides by zero.
-    * The basket self-join feeding the edge list is hub-capped
-    * ([[basketItems]]) so one degenerate order cannot explode the pair
-    * frame.
-    *
-    * Bench budget: 2.2 s at sf0.1 local[32] (BENCH_r11 — r11 box,
-    * in-suite; normalize cross-box via the r14+ bench probe) — dominated by
-    * the lineitem pairing shuffle; the wedge join runs on the ~4k-edge
-    * affinity frame and is noise. Regression above ~3.5 s means the
-    * support filter or the basket cap stopped pruning.
+    * Scale: runs entirely on gr2's support-pruned edge list, never the
+    * fact table. A wedge center's degree is ≥ 2 by construction, so
+    * `ln(deg)` never divides by zero.
     */
   def linkPrediction(spark: SparkSession, dir: String): DataFrame =
     linkPredictionCore(t(spark, dir, "lineitem"))
@@ -526,7 +448,7 @@ object Graph {
         val edgeSet = es.map { case (a, b) => (a, b) }.toSet
         val acc = scala.collection.mutable.Map[(Long, Long), (Long, Double)]()
         adj.foreach { case (_, ns) =>
-          // Array, not List (r18, per-round review): positional List
+          // Array, not List: positional List
           // indexing made the i<j enumeration O(deg³) per center; the
           // degree for the weight is the materialized array's length,
           // not a second O(deg) List walk.
@@ -588,12 +510,6 @@ object Graph {
     * not sufficient for global fixpoint (a diameter->6 chain would still
     * be moving). The loop that iterates to fixpoint is
     * [[Dedup.componentsOf]]; GraphSpec checks it on this graph.
-    *
-    * Bench budget: ~1.7–2.0 s isolated at sf0.1 on 32 cores, dominated
-    * by the lineitem basket pairing (the whole gr family's fixed cost);
-    * the three label rounds run on the ~4k-edge cached frame. Regression
-    * above ~5 s means the support filter or basket cap stopped pruning
-    * (gr3's budget convention).
     */
   def components(spark: SparkSession, dir: String): DataFrame =
     componentsCore(t(spark, dir, "lineitem"))
@@ -663,15 +579,12 @@ object Graph {
     val l0 = adj.filter(col("src") === col("dst"))
       .select(col("src").as("id"), col("src").as("lbl"))
     val l2 = step(step(l0))
-    // Round 3 carries BOTH labels out of ONE aggregate: every group src
-    // contains its self-loop row (dst = src), whose joined p.lbl IS
-    // src's own round-2 label — so `min` over just that row recovers
-    // l2(src) without a second l2 join (the r12 judge flag was l3
-    // re-computed once per consumer; this leaves l2 and l3 with ONE
-    // consumer each, no persist needed). component_size is a
-    // lbl-partitioned window count over the same frame — the
-    // groupBy+join-back form costs an extra aggregate and join on a
-    // frame this size shaped purely of scheduler overhead.
+    // The third round carries both labels out of one aggregate: every
+    // group src contains its self-loop row (dst = src), whose joined p.lbl
+    // is src's own second-round label — so `min` over just that row
+    // recovers l2(src) without a second l2 join, leaving l2 and l3 with
+    // one consumer each. component_size is a lbl-partitioned window count
+    // over the same frame, cheaper than a groupBy + join-back.
     val l3 = adj.as("a").join(l2.as("p"), col("a.dst") === col("p.id"))
       .groupBy(col("a.src").as("id"))
       .agg(min(col("p.lbl")).as("lbl"),

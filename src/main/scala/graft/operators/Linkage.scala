@@ -35,11 +35,8 @@ import graft.Tables.{r6, t}
   *     variants from near-key neighbours (consecutive customer numbers
   *     are 1 edit apart by construction; their balances differ).
   *
-  * Scale shape: the band explode is 3× the record count (scan-local);
-  * the candidate join shuffles on (band, nation, key) with bounded
-  * buckets; verification is a projection over the distinct pair set.
-  * LinkageSpec plants a matching variant, a near-key neighbour that must
-  * NOT match, and a cross-nation twin that blocking must never pair.
+  * Scale: the band explode is 3× the record count and the candidate
+  * join shuffles on (band, nation, key) with bounded buckets.
   */
 object Linkage {
 
@@ -118,10 +115,8 @@ object Linkage {
     * so a regression in either shows up as a hash change, and on a real
     * corpus the same operator reports the honest tradeoff.
     *
-    * Scale shape: one aggregate over the record frame and one over the
-    * candidate frame (both with map-side combine), crossed as 1-row
-    * broadcasts; the candidate frame is the audit's dominant cost and is
-    * exactly er1's — bounded buckets, no all-pairs.
+    * Scale: the candidate frame is er1's — bounded buckets, no
+    * all-pairs.
     */
   def er3BlockingMetrics(spark: SparkSession, dir: String): DataFrame =
     blockingMetrics(dirtyContacts(t(spark, dir, "customer")))
@@ -161,10 +156,7 @@ object Linkage {
     * pass to convergence — dd5's log-round component machinery on er1's
     * edge list (shared shape, documented there).
     *
-    * Scale shape: the pair frame is entity-sized (bounded by er1's
-    * blocking), records left-join it once on each side (AQE picks the
-    * join), and the golden projection is one aggregate keyed on the
-    * entity id.
+    * Scale: the pair frame is entity-sized (bounded by er1's blocking).
     */
   def er2GoldenRecords(spark: SparkSession, dir: String): DataFrame =
     goldenRecords(dirtyContacts(t(spark, dir, "customer")))
@@ -201,8 +193,7 @@ object Linkage {
     * candidate is emitted; 6-decimal rounding absorbs formula-order
     * ulps).
     *
-    * Scale shape: exactly er1's — the scoring is one scan-local
-    * expression over the bounded candidate frame.
+    * Scale: er1's — one scan-local expression over the candidate frame.
     */
   def er4JaroWinkler(spark: SparkSession, dir: String): DataFrame =
     jwScores(dirtyContacts(t(spark, dir, "customer")))

@@ -302,10 +302,9 @@ object Multimodal {
     * text column (one byte per char by construction), so a mis-walked
     * chunk list or off-by-one data offset breaks the hash.
     *
-    * Scale shape: map-only decode (mapPartitions batch, payload pruned
-    * after the stage); sums are exact integers, the two divisions and
-    * the sqrt are single correctly-rounded IEEE ops under the 6-decimal
-    * grid — no accumulation-order sensitivity on either engine.
+    * Scale: map-only decode; sums are exact integers, and the two
+    * divisions and the sqrt are single correctly-rounded IEEE ops under
+    * the 6-decimal grid.
     */
   def audioStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -354,15 +353,11 @@ object Multimodal {
     * to pick which frames feed the (expensive) captioning or embedding
     * stage; everything downstream reads only keyframes.
     *
-    * Scale shape: map-only like mm3 — frames of one payload are adjacent
-    * in memory, so the pairwise walk never crosses rows, no window, no
-    * shuffle; the output carries per-frame statistics, never rasters.
-    * The oracle recomputes every byte difference from the text column,
-    * so a misaligned frame walk shifts the sums and breaks the hash.
-    * Threshold 28.0 sits at the observed inter-frame diff median for
-    * ASCII payloads, so both verdicts appear in the gated output;
-    * MultimodalSpec plants a repeated frame (diff 0 → not a keyframe)
-    * and a hard cut (diff ≫ threshold → keyframe).
+    * Scale: map-only like mm3 — frames of one payload are adjacent, so
+    * the pairwise walk never crosses rows. The oracle recomputes every
+    * byte difference from the text column. Threshold 28.0 sits at the
+    * observed inter-frame diff median for ASCII payloads, so both
+    * verdicts appear in the gated output.
     */
   def keyframes(spark: SparkSession, dir: String): DataFrame =
     keyframesOf(syntheticMedia(spark, dir), spark)
@@ -418,9 +413,8 @@ object Multimodal {
     * byte from the text payload: a wrong stride or channel offset shifts
     * every fingerprint.
     *
-    * Scale shape: map-only like every decode stage (decode → resize →
-    * stats inside one mapPartitions pass, payload pruned after); output
-    * rows carry statistics and a 32-char fingerprint, never rasters.
+    * Scale: map-only; rows carry statistics and a 32-char fingerprint,
+    * never rasters.
     */
   def imageResize(spark: SparkSession, dir: String): DataFrame =
     resizeForTest(syntheticMedia(spark, dir), spark)
@@ -623,15 +617,11 @@ object Multimodal {
     * truncated (mm10's edge convention); a clip with no active frames
     * emits no rows.
     *
-    * Scale shape: map-only decode emitting one row per FRAME (output is
-    * corpus-samples/80 sized — statistics, never PCM), then the classic
-    * gaps-and-islands: one window over (media_id, frame_idx) assigns
-    * `frame_idx − row_number()` island keys, one hash aggregate folds
-    * islands into segments — a single shuffle keyed on media_id, the
-    * same partitioning every mm-family per-clip op uses. Frame energy
-    * sums are exact integers carried as micro-rms units end-to-end
-    * (see [[VadThresholdMicroRms]]), so no cross-frame float
-    * accumulation exists anywhere in the plan.
+    * Scale: map-only decode emitting one row per frame, then
+    * gaps-and-islands (`frame_idx − row_number()` island keys) in a
+    * single shuffle keyed on media_id. Frame energy sums are exact
+    * integers carried as micro-rms units end-to-end
+    * ([[VadThresholdMicroRms]]).
     *
     * The oracle recomputes every frame's energy from the text column
     * (one byte per char by construction), so a mis-strided frame walk
@@ -707,12 +697,10 @@ object Multimodal {
     * AUDIO modality (mm8 is the image analogue; the near-match extension
     * is mm8's banded Hamming walk, documented not duplicated).
     *
-    * Scale shape: map-only decode emitting one 4-field row per CLIP
-    * (energies fold in place; no per-frame rows, no PCM shuffles), then
-    * one window over the fingerprint key — the dd1 plan shape exactly.
-    * Everything is exact integer arithmetic end-to-end; the oracle
-    * recomputes every energy bit from the text payload, so an off-by-one
-    * frame stride or bit index breaks the hash.
+    * Scale: map-only decode emitting one row per clip, then one window
+    * over the fingerprint key (dd1's shape). Everything is exact integer
+    * arithmetic; the oracle recomputes every energy bit from the text
+    * payload.
     */
   def audioFingerprint(spark: SparkSession, dir: String): DataFrame =
     audioFingerprintOf(syntheticMedia(spark, dir), spark)
@@ -781,12 +769,9 @@ object Multimodal {
     * engine op). The oracle recomputes the grid from the text-derived
     * payload, so a wrong raster offset or patch index breaks the hash.
     *
-    * Scale shape: map-only decode (the mm-family batch stage), then the
-    * engine convention — posexplode into a hash aggregate keyed on the
-    * patch grid (map-side combine collapses each patch's ≤12 bytes in
-    * place); payloads never shuffle, patch rows are bounded by raster
-    * size. Sums are exact integers; the one division lands on the
-    * 6-grid.
+    * Scale: map-only decode, then a posexplode into an aggregate keyed on
+    * the patch grid; payloads never shuffle. Sums are exact integers; the
+    * one division lands on the 6-grid.
     */
   def patchify(spark: SparkSession, dir: String): DataFrame =
     patchifyOf(syntheticMedia(spark, dir), spark)

@@ -161,13 +161,10 @@ object Quality {
     * argument at the day grain: one bad day in the window cannot drag
     * its own baseline.
     *
-    * Scale shape: the fact table collapses ONCE to the day dimension
-    * (one hash aggregate, map-side combined); the trailing window is a
-    * range self-join of that calendar-sized frame (≤7 partners per day,
-    * both sides tiny regardless of fact size — broadcast under AQE).
+    * Scale: the fact table collapses once to the day dimension; the
+    * trailing window is a range self-join of that calendar-sized frame.
     * Days with fewer than 3 trailing observations emit a null verdict
-    * (warm-up, not alarm). QualitySpec plants a dropped day and a
-    * double-fire day and asserts exactly those flag.
+    * (warm-up, not alarm).
     */
   def dq4VolumeAnomaly(spark: SparkSession, dir: String): DataFrame =
     volumeAnomalyReport(t(spark, dir, "events"))
@@ -238,11 +235,9 @@ object Quality {
     * assignment is then per-row scalar IEEE arithmetic on identical
     * operands.
     *
-    * Scale shape: one lineitem hash aggregate keyed on orderkey
-    * (map-side combine), an equi-join to orders on the same key (both
-    * sides shuffle-partitioned by orderkey — co-located), scan-local
-    * band assignment, and a band-cardinality final aggregate. The share
-    * window runs over the ≤ 5-row band frame.
+    * Scale: one lineitem aggregate keyed on orderkey and a co-located
+    * equi-join to orders; the share window runs over the ≤ 5-row band
+    * frame.
     */
   def dq6Reconciliation(spark: SparkSession, dir: String): DataFrame =
     reconciliationReport(t(spark, dir, "orders"), t(spark, dir, "lineitem"))
@@ -301,12 +296,9 @@ object Quality {
     * number of rows whose B must change for the FD to hold exactly —
     * reported with its rate and the holds verdict.
     *
-    * Scale shape: per candidate, ONE hash aggregate on the (A,B) value
-    * domain (map-side combine collapses the row domain immediately),
-    * then two domain-sized aggregates — the fact table is scanned once
-    * per pair and never shuffled row-wise. The candidate list is static
-    * and column-metadata-sized, so the unioned report plan carries
-    * one-row frames into the final union (dq1's report discipline).
+    * Scale: per candidate, one aggregate on the (A,B) value domain then
+    * two domain-sized aggregates — the fact table is scanned once per
+    * pair and never shuffled row-wise.
     */
   def dq7FdDiscovery(spark: SparkSession, dir: String): DataFrame =
     fdDiscoveryCore(t(spark, dir, "part"), Dq7Pairs)

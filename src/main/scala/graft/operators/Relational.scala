@@ -255,16 +255,13 @@ object Relational {
 
   /** prof7 — prof1's 100 TB sketch path as a first-class gated query.
     *
-    * Partial oracle (r19, finishing the prof8/drift3 graduation from
-    * r18): no DuckDB oracle can hash-match HLL++ internals, so the OLD
-    * gate was rows-only — the weakest check in the suite. The gated
-    * output now carries every EXACT profile column (row/null counts and
-    * extrema, hash-checked against DuckDB) plus `nd_ok`, the in-query
+    * Partial oracle: no DuckDB oracle can hash-match HLL++ internals, so
+    * the gated output carries every exact profile column (row/null counts
+    * and extrema, hash-checked against DuckDB) plus `nd_ok`, the in-query
     * sketch bound: the HLL++ estimate (rsd 0.02) must land within 5% of
-    * the exact distinct count (SketchSpec's bound, now enforced on the
-    * gated corpus every round). DuckDB emits literal TRUE, so an
-    * estimator drifting out of tolerance hash-FAILS the round instead of
-    * passing rows-only. The raw estimate itself stays out of the hash
+    * the exact distinct count (SketchSpec's bound, enforced on the gated
+    * corpus). DuckDB emits literal TRUE, so an estimator drifting out of
+    * tolerance hash-fails. The raw estimate itself stays out of the hash
     * (engine-specific — prof8's convention).
     *
     * The exact count_distinct here is GATE INSTRUMENTATION: it plans
@@ -278,24 +275,18 @@ object Relational {
     val src = t(spark, dir, "customer")
     val numCols = Seq("c_custkey", "c_nationkey", "c_acctbal")
     val strCols = Seq("c_name", "c_mktsegment")
-    // TWO 1-row aggregates joined, NOT one: mixing the 5 DISTINCT
+    // Two 1-row aggregates joined, not one: mixing the 5 distinct
     // aggregates with 5 HLL sketches in a single agg trips Spark's
-    // RewriteDistinctAggregates into a pathological plan — measured
-    // 14.8 s isolated min-of-3 at sf0.1/local[32] vs 0.83 s for prof1's
-    // exact-only aggregate and ~0.3 s for the sketch-only one. Keeping
-    // each family in its known-good shape (the exact side on prof1's
-    // Expand path, the sketch side as one plain hash aggregate — the
-    // same Expand-free plan SketchSpec pins for profileApprox) costs one
-    // extra scan of the profiled table and runs ~13x faster.
+    // RewriteDistinctAggregates into a pathological plan (~13x slower).
+    // Each family keeps its known-good shape (the exact side on prof1's
+    // Expand path, the sketch side as one plain hash aggregate) at the
+    // cost of one extra scan of the profiled table.
     val exactAggs = profileBaseAggs(numCols, strCols) ++
       (numCols ++ strCols).map(c => count_distinct(col(c)).as(s"ndx_$c"))
     val approxAggs = (numCols ++ strCols)
       .map(c => approx_count_distinct(col(c), 0.02).as(s"nda_$c"))
-    // NOT width-pinned (r20 A/B, quiet box, isolated min-of-4 with the
-    // prof1 twin pin): prof1 1.114 -> 1.226, prof7 1.351 -> 1.347 —
-    // the distinct-rewrite's cost here is planning + the Expand's
-    // per-row constant, not task parallelism; the pin's extra exchange
-    // only adds wall.
+    // Not width-pinned: the distinct rewrite's cost is planning + the
+    // Expand's per-row constant, not task parallelism.
     val one = src.agg(exactAggs.head, exactAggs.tail: _*)
       .crossJoin(broadcast(src.agg(approxAggs.head, approxAggs.tail: _*)))
     profileRows(one, numCols, strCols,
@@ -307,17 +298,16 @@ object Relational {
   /** prof8 — prof2's 100 TB sketch path as a first-class gated query:
     * [[equiDepthApprox]] over the same events.value, 8 buckets.
     *
-    * Partial oracle (r18, upgrading the old rows-only gate): the
+    * Partial oracle: the
     * sketch's cut/lo/hi VALUES are engine-specific (DuckDB's t-digest
     * cuts differ), but the histogram's load-bearing invariants are not —
     * the gated output is `(bucket 1..8, n_total, depth_ok)` where
     * `n_total` is the EXACT non-null row count (hash-checked against
     * DuckDB) and `depth_ok` asserts the sketch's depth contract in-query:
-    * every bucket within 10% of n/8 (SketchSpec's bound, now enforced on
-    * the gated corpus every round — accuracy 10000 ⇒ rank error ≤
-    * n/10000, two orders inside it). DuckDB emits literal TRUE, so a
-    * sketch drifting out of tolerance (or a vanished bucket) hash-FAILS
-    * instead of passing rows-only. The value-carrying histogram remains
+    * every bucket within 10% of n/8 (SketchSpec's bound, enforced on the
+    * gated corpus — accuracy 10000 ⇒ rank error ≤ n/10000, two orders
+    * inside it). DuckDB emits literal TRUE, so a sketch drifting out of
+    * tolerance (or a vanished bucket) hash-fails. The value-carrying histogram remains
     * [[equiDepthApprox]] (SketchSpec: Window-free plan, error bound vs
     * [[equiDepthExact]]).
     *
@@ -490,15 +480,11 @@ object Relational {
     * what a profiling layer reports when the relationship is nonlinear
     * or outlier-heavy.
     *
-    * Scale shape: a global rank would need a corpus sort; instead each
-    * column's AVERAGE RANKS are derived on its DISTINCT-VALUE frame
-    * (50 × 11 rows here — the single-partition window is over that tiny
-    * frame, d5's count-frame convention) as `cum_before + (cnt+1)/2`,
-    * then broadcast back onto one fact scan feeding a single corr
-    * aggregate. Three column-pruned scans total (two 1-column rank
-    * builds + the pair scan); ranks are exact halves of integers, so
-    * only corr's co-moment summation needs the 6-decimal grid, and the
-    * signed ρ follows the ±0 convention.
+    * Scale: each column's average ranks derive on its distinct-value
+    * frame as `cum_before + (cnt+1)/2`, broadcast back onto one fact scan
+    * feeding a single corr aggregate — no corpus sort. Ranks are exact
+    * halves of integers, so only corr's co-moment summation needs the
+    * 6-decimal grid, and the signed ρ follows the ±0 convention.
     */
   def prof6Spearman(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -532,14 +518,10 @@ object Relational {
     * answers "where are the quantiles", equi-width "what does the shape
     * look like" — a profiling layer needs both.
     *
-    * Scale shape: ONE stats aggregate (quartiles, min, max, count — the
-    * quartiles swap to approx_percentile at 100 TB, prof2's convention)
-    * broadcasts a 1-row cut spec; bin assignment is scan-local
-    * arithmetic into an ordinary hash aggregate. Determinism: the width
-    * rounds to 4 (the exact-percentile grain) before any division, and
-    * `floor((v − min)/w)` on identical doubles is bit-identical on both
-    * engines; the max value falls in its own (partial) terminal bin
-    * rather than being clamped, so no boundary rule can diverge.
+    * Determinism: the width rounds to 4 (the exact-percentile grain)
+    * before any division, and `floor((v − min)/w)` on identical doubles
+    * is bit-identical on both engines; the max value falls in its own
+    * (partial) terminal bin rather than being clamped.
     */
   def prof5FdHistogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -575,12 +557,9 @@ object Relational {
     * timezone codec on either engine), and each cell's share WITHIN its
     * hour so rows are comparable across traffic volumes.
     *
-    * Scale shape: one stats aggregate (min/max — a 1-row broadcast),
-    * then ONE fact-table hash aggregate to the ≤ 24×10 cell frame;
-    * the share window runs over that tiny frame (prof4's count-frame
-    * convention). Bin edges are identical IEEE expressions on both
-    * engines; the max value clamps into bin 9 (`least`), and a
-    * constant column degenerates to bin 0 (prof5's width-guard stance).
+    * Bin edges are identical IEEE expressions on both engines; the max
+    * value clamps into bin 9 (`least`), and a constant column degenerates
+    * to bin 0.
     */
   def prof10JointHistogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -615,9 +594,7 @@ object Relational {
     * engine-portable where double log10 near a power of 10 is a
     * last-ulp coin flip.
     *
-    * Scale shape: one scan, digit extraction map-side, hash aggregate
-    * onto a 9-row frame; expected counts and chi-square terms ride a
-    * window total over those 9 rows.
+    * Scale: one scan into a 9-row frame.
     */
   def prof9Benford(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -746,15 +723,10 @@ object Relational {
     * [[graft.functions.Sketches.bloomPrefilter]] from spec-only to a
     * first-class hash-checked operator.
     *
-    * Scale shape: the filter is sketch-sized driver traffic (one small
-    * aggregate over the already-filtered dimension side) and the probe
-    * is a codegen'd scan-local `might_contain` — at 1000-executor scale
-    * the ~95% of fact rows with non-urgent orders never enter the join
-    * exchange. This is what AQE's runtime bloom injection does; stating
-    * it explicitly makes the prefilter available where the optimizer's
-    * heuristics would not fire (PlanSpec pins the might_contain filter
-    * below the join). The dimension-side `count()` is the index-side
-    * cardinality a real system reads from its metastore.
+    * Scale: the filter is sketch-sized driver traffic and the probe a
+    * scan-local `might_contain`, so the ~95% of fact rows with
+    * non-urgent orders never enter the join exchange (PlanSpec pins the
+    * filter below the join).
     */
   def j4BloomJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -862,15 +834,13 @@ object Relational {
     * Growth then divides identical operands, so the 6-decimal ratio
     * cannot drift.
     *
-    * Scale shape: the fact scan aggregates straight to the
-    * (nation × month) frame (map-side combine; dimension joins
-    * broadcast), and the lag window runs over that tiny frame — never
+    * Scale: the lag window runs over the (nation × month) frame, never
     * over lineitem.
     */
   def q23MomGrowth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Pre-aggregate the fact side BY ORDER KEY before the join (r21,
-    // guide §2.3 — aggregate before you shuffle): the join only needs
+    // Pre-aggregate the fact side by order key before the join: the join
+    // only needs
     // each order's revenue-unit total, so the map-side partial combine
     // collapses ~4 lines/order ahead of the exchange and the join+final
     // aggregate run on order-grain rows. The per-order long sums re-sum
@@ -1319,17 +1289,10 @@ object Relational {
     * the lineitem fact is the supplier↔part bridge: a (part, supplier)
     * unit cost is the average observed `l_extendedprice / l_quantity`.
     *
-    * Scale shape: both dimension filters broadcast INTO the fact scan
-    * (region-filtered suppliers, size/type-filtered parts), so the hash
-    * aggregate only sees qualifying lines; the per-part MIN then
-    * self-joins the (part × supplier)-sized cost frame on p_partkey —
-    * co-partitioned, never a global sort. Winners compare on the
-    * 6-rounded cost so both engines pick identical suppliers; ties all
-    * surface (Q2 semantics). The final sort appends s_suppkey after
-    * p_partkey — within one part, tied winners differ only by supplier —
-    * so the LIMIT-100 prefix is unique BY CONSTRUCTION (both engines),
-    * not by accident of unique s_name in the testdata; the key is
-    * dropped from the projection after the TakeOrdered.
+    * Winners compare on the 6-rounded cost so both engines pick
+    * identical suppliers; ties all surface (Q2 semantics). The final sort
+    * appends s_suppkey after p_partkey, so the LIMIT-100 prefix is unique
+    * by construction; the key is dropped after the TakeOrdered.
     */
   def q2MinCostSupplier(spark: SparkSession, dir: String): DataFrame =
     q2Core(t(spark, dir, "lineitem"), t(spark, dir, "part"),
@@ -1384,14 +1347,10 @@ object Relational {
     * multiplicatively) are order-independent integer arithmetic on both
     * engines — no float summation near the HAVING boundary.
     *
-    * Scale shape: nation's suppliers broadcast into the fact scan; ONE
-    * hash aggregate keyed by part; the grand total re-aggregates the
-    * per-part frame (map-side combine) into a 1-row broadcast. The
-    * per-part frame is scope-persisted: the total's HAVING threshold and
-    * the probe side both consume it, and exchange reuse does NOT fire
-    * across a global-aggregate branch (measured — the unpersisted plan
-    * scans lineitem twice), so the cache is what keeps the fact table
-    * single-scan.
+    * Scale: the per-part frame is scope-persisted: the total's HAVING
+    * threshold and the probe side both consume it, and exchange reuse
+    * does not fire across a global-aggregate branch, so the cache keeps
+    * lineitem single-scan.
     */
   def q11ImportantParts(spark: SparkSession, dir: String): DataFrame =
     q11Core(t(spark, dir, "lineitem"), t(spark, dir, "supplier"),
@@ -1433,12 +1392,8 @@ object Relational {
     * l_quantity is integral, so both sums are exact integer-valued
     * doubles and the comparison is order-independent on both engines.
     *
-    * Scale shape: the name-filtered part dimension broadcasts into the
-    * year-pruned fact scan; the per-part total REUSES the per-(part,
-    * supplier) partial aggregate (a second map-side-combined hash
-    * aggregate over the already-small frame, not a second fact scan);
-    * the threshold join is co-partitioned on l_partkey. The distinct
-    * supplier set then broadcast-joins the supplier dimension.
+    * Scale: the per-part total reuses the per-(part, supplier) partial
+    * aggregate, not a second fact scan.
     */
   def q20ExcessSuppliers(spark: SparkSession, dir: String): DataFrame =
     q20Core(t(spark, dir, "lineitem"), t(spark, dir, "part"),
@@ -1706,12 +1661,8 @@ object Relational {
     * Balance accumulates as exact integer cents (dq6's convention)
     * inside the recursion; the single division lands on the 2-grid.
     *
-    * Scale shape: each recursive step is one equi-join of the frontier
-    * against the edge list plus a union — exactly the iterated-join plan
-    * gr5/pr1 unroll by hand, here delegated to the engine's recursion
-    * operator (Spark plans it as a UnionLoop). Frontier rows carry only
-    * (root, node, depth, cents); the edge list would be broadcast or
-    * bucketed at scale.
+    * Scale: each recursive step is one equi-join of the frontier
+    * against the edge list plus a union (Spark plans a UnionLoop).
     */
   private[operators] val SharedRecursiveSql: String =
     """WITH RECURSIVE
@@ -1735,10 +1686,8 @@ object Relational {
       |FROM walk GROUP BY root, depth
       |ORDER BY root, depth""".stripMargin
 
-  /** Bench budget: 1.0 s at sf0.1 local[32] (r13 box, in-suite
-    * min-of-3; normalize cross-box via the r14+ bench probe) — UnionLoop
-    * over the 3-level region→nation→customer walk; cost is the loop's
-    * fixed per-iteration planning, not data.
+  /** sql4 — UnionLoop over the 3-level region→nation→customer walk; cost
+    * is the loop's fixed per-iteration planning, not data.
     */
   def sql4RecursiveRollup(spark: SparkSession, dir: String): DataFrame = {
     Seq("region", "nation", "customer")
@@ -1757,17 +1706,12 @@ object Relational {
     * reading: the same recency-frequency-volume triage, applied to data
     * SOURCES, prioritizes which feeds a crawl scheduler revisits.
     *
-    * Scale shape: one shuffle on o_custkey (hash aggregate with map-side
-    * combine), then three window ranks over the CUSTOMER-domain frame.
-    * This exact form is the ORACLE-SEMANTICS twin: its three global
+    * This exact form is the oracle-semantics twin: its three global
     * ntile sorts are single-partition by definition, so the deployable
-    * path is [[seg1RfmApproxCore]] — percentile_approx cuts broadcast
-    * into scan-local CASE scoring, no global sort anywhere (the
-    * prof2/prof8 exact-vs-sketch convention; InvariantSpec pins
-    * tie-free agreement).
-    * Recency counts exact integer days in pure DATE arithmetic (no
-    * timezone codec on either engine — the orders column is NTZ);
-    * spend accumulates exact integer cents (dq6's convention).
+    * path is [[seg1RfmApproxCore]] (InvariantSpec pins tie-free
+    * agreement). Recency counts exact integer days in pure DATE
+    * arithmetic (the orders column is NTZ); spend accumulates exact
+    * integer cents (dq6's convention).
     */
   /** Per-customer RFM metric frame shared by the exact ([[seg1Rfm]]) and
     * production ([[seg1RfmApproxCore]]) paths: ONE shuffle on o_custkey
@@ -1847,15 +1791,12 @@ object Relational {
     * under heavy ties the rank-based ntile splits tied customers across
     * buckets by the custkey tiebreak while the value-based CASE keeps
     * ties together — the usual sketch-vs-exact trade, documented not
-    * hidden. The driver gate is [[seg1RfmApproxGate]] (r19): the scores'
-    * cut placement has no cross-engine mirror, so the gate hash-checks
-    * the exact metric columns plus the GK rank-error bound as an
-    * in-query boolean; this value-carrying form stays the API surface,
-    * pinned against its exact twin in InvariantSpec.
+    * hidden. The driver gate is [[seg1RfmApproxGate]]: the scores' cut
+    * placement has no cross-engine mirror, so the gate hash-checks the
+    * exact metric columns plus the GK rank-error bound as an in-query
+    * boolean; InvariantSpec pins this value-carrying form against its
+    * exact twin.
     */
-  def seg1RfmApprox(spark: SparkSession, dir: String): DataFrame =
-    seg1RfmApproxCore(t(spark, dir, "orders"))
-
   private[graft] def seg1RfmApproxCore(orders: DataFrame): DataFrame = {
     val per = rfmPerCustomer(orders)
     val qs = array(lit(0.2), lit(0.4), lit(0.6), lit(0.8))
@@ -1882,8 +1823,8 @@ object Relational {
       .orderBy("o_custkey")
   }
 
-  /** seg1_rfm_approx's PARTIAL-oracle gate (r19, the prof8/drift3
-    * graduation pattern, closing the last rows-only row): the gated
+  /** seg1_rfm_approx's partial-oracle gate (the prof8/drift3 pattern):
+    * the gated
     * output is the per-customer EXACT metric frame `(o_custkey,
     * recency_days, frequency, monetary)` — hash-checked against DuckDB,
     * byte-identical to seg1_rfm's non-score columns — plus `cuts_ok`,
@@ -1901,10 +1842,7 @@ object Relational {
     * out of the hash — [[seg1RfmApproxCore]] carries them and
     * InvariantSpec pins them against the exact ntile twin.
     *
-    * Plan shape: the scoped-persisted per-customer frame feeds the cut
-    * sketch, ONE rank-stat aggregate (24 conditional sums + n against
-    * the broadcast 1-row cut frame — scan-local, no extra shuffle), and
-    * the output projection; nothing sorts globally.
+    * Plan: nothing sorts globally.
     */
   def seg1RfmApproxGate(spark: SparkSession, dir: String): DataFrame =
     seg1RfmApproxGateCore(t(spark, dir, "orders"))
@@ -2014,7 +1952,7 @@ object Relational {
   )
 
   val oracle: Map[String, String] = Map(
-    // prof8's PARTIAL oracle (r18): exact total hash-gates the carve;
+    // prof8's partial oracle: exact total hash-gates the carve;
     // depth_ok is Spark's in-query sketch-depth bound, TRUE by contract
     // (see prof8EquidepthSketch's scaladoc) — DuckDB emits the literal,
     // so an out-of-tolerance sketch hash-FAILS.
@@ -2025,7 +1963,7 @@ object Relational {
         |FROM (SELECT unnest(generate_series(1, 8)) AS bucket) b
         |CROSS JOIN tot
         |ORDER BY bucket""".stripMargin,
-    // prof7's PARTIAL oracle (r19): every exact profile column
+    // prof7's partial oracle: every exact profile column
     // hash-gates; nd_ok is Spark's in-query HLL-vs-exact bound, TRUE by
     // contract (see prof7ProfileSketch's scaladoc) — DuckDB emits the
     // literal, so an out-of-tolerance estimate hash-FAILS.
@@ -2054,7 +1992,7 @@ object Relational {
         |  SELECT 'c_mktsegment', count(*), count(*) - count(c_mktsegment),
         |    NULL, NULL, min(c_mktsegment), max(c_mktsegment), TRUE FROM s)
         |ORDER BY column_name""".stripMargin,
-    // seg1_rfm_approx's PARTIAL oracle (r19): the exact per-customer
+    // seg1_rfm_approx's partial oracle: the exact per-customer
     // metric frame hash-gates (identical to seg1_rfm minus the scores);
     // cuts_ok is Spark's in-query GK rank-error bound, TRUE by contract
     // (see seg1RfmApproxGate's scaladoc).

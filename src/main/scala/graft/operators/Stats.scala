@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{r2, r2s, r6, r6s, t}
 
-/** Experiment / monitoring statistics — the A/B-readout and
+/** Experiment / monitoring statistics — the experiment-readout and
   * distribution-drift layer an analytics engine serves on top of its
   * aggregates (north-star scope: the reference has no statistics at all;
   * its nearest neighbor is P2's null counting). Both operators are single
@@ -215,7 +215,7 @@ object Stats {
     * counting tail is THE SAME CODE as drift1 ([[psiBucketCounts]]), so
     * only the cut source differs.
     *
-    * Partial oracle (r18, upgrading the old rows-only gate): the sketch
+    * Partial oracle: the sketch
     * CUT VALUES are engine-specific (no DuckDB mirror), but the
     * monitor's load-bearing invariants are not — the gated output is
     * per-bucket `(bucket 1..10, n_ref_total, n_cur_total, ref_depth_ok)`
@@ -243,16 +243,14 @@ object Stats {
       graft.Tables.t(spark, dir, "events")
         .select(unix_millis(col("ts")).as("ts_ms"), col("value")))
 
-  /** The sketch-cut monitor's FULL smoothed-PSI readout (drift1's tail
-    * over the sketch cuts) — the pre-r18 gated shape, retained for
-    * SketchSpec's tracking contract (sketch total PSI ≈ exact total PSI
+  /** The sketch-cut monitor's full smoothed-PSI readout (drift1's tail
+    * over the sketch cuts), for SketchSpec's tracking contract (sketch
+    * total PSI ≈ exact total PSI
     * on the same corpus) and for callers that want the sketch monitor's
     * values rather than the gated bound checks.
     */
   private[graft] def psiDriftSketchFull(src: DataFrame): DataFrame = {
-    // ONE tagged frame feeds both the cut sketch and the counting tail
-    // (r19 ADVICE: building psiTagged twice re-ran the min-ts aggregate
-    // and the corpus scan — test-only path, but no reason to pay it).
+    // One tagged frame feeds both the cut sketch and the counting tail.
     val tagged = psiTagged(src)
     psiFromCuts(tagged, sketchCuts(tagged))
   }
@@ -291,7 +289,7 @@ object Stats {
     * ref/current counts.
     */
   private def psiBucketCounts(tagged: DataFrame, cuts: DataFrame): DataFrame =
-    // Scoped-cached (r18, per-round review): every consumer reads the
+    // Scoped-cached: every consumer reads the
     // bucket-count frame in TWO subtrees of one action (the totals
     // aggregate and the per-bucket scoring/check), and without the cache
     // each subtree re-runs the corpus-sized bucket assignment.
@@ -382,12 +380,9 @@ object Stats {
     * DESIGNED ratio on unit counts, not arm×category independence on
     * event counts.
     *
-    * Scale shape: events collapse once to the distinct (event_type,
-    * user) domain (one hash aggregate with map-side partials), arm
-    * counts are conditional aggregates on that domain frame. The
-    * verdict derives from the ROUNDED statistic so both engines agree
-    * on boundary bits. StatsSpec plants a clean 50/50 (no alarm) and a
-    * starved arm (alarm).
+    * Scale: one aggregate to the distinct (event_type, user) domain. The
+    * verdict derives from the rounded statistic so both engines agree on
+    * boundary bits.
     */
   def abSrm(spark: SparkSession, dir: String): DataFrame =
     abSrmCore(t(spark, dir, "events"))
@@ -417,14 +412,9 @@ object Stats {
     * time range (pre = first half, post = second half), derived from the
     * data so the operator is parameter-free and engine-portable.
     *
-    * Scale shape: one tiny bounds aggregate (broadcast 1 row), then ONE
-    * events scan into a per-user conditional aggregate (map-side combine;
-    * shuffle carries one row per user), then one aggregate over the
-    * user frame. The adjusted variance derives algebraically
-    * (`var_y − cov²/var_x`) from the same moment aggregates — no second
-    * pass over the user frame, no join. All statistics are O(1)-to-
-    * O(100) magnitudes under the shared rounding grain (variances at
-    * cents grain; ratios at 6 decimals).
+    * Scale: one events scan into a per-user conditional aggregate, then
+    * one aggregate over the user frame; the adjusted variance derives
+    * algebraically (`var_y − cov²/var_x`) from the same moment aggregates.
     */
   def abCuped(spark: SparkSession, dir: String): DataFrame =
     abCupedCore(t(spark, dir, "events"))
@@ -512,11 +502,8 @@ object Stats {
     * every number is a ratio of exact integers and ties carry no
     * ambiguity (both ECDFs are right-continuous at the same points).
     *
-    * Scale shape: one hash aggregate to the value domain (map-side
-    * combine), one window over the domain frame (the exact-path global
-    * sort, prof2's acknowledged convention — the sketch swap is
-    * drift3's binned variant), one 1-row max. The raw stream is
-    * scanned once.
+    * Scale: one aggregate to the value domain and one window over the
+    * domain frame; the raw stream is scanned once.
     */
   def ksDrift(spark: SparkSession, dir: String): DataFrame =
     ksDriftCore(
@@ -570,9 +557,8 @@ object Stats {
     * 6-ROUNDED p-values (dq3's threshold convention); the one
     * cross-engine transcendental (`exp`) sits 6 decimals above its ulp.
     *
-    * Scale shape: everything after ab1's one-pass aggregate runs on the
-    * m-row hypothesis frame (m = event types) — the rank window is
-    * m-sized, never data-sized.
+    * Scale: after ab1's one-pass aggregate everything runs on the m-row
+    * hypothesis frame (m = event types).
     */
   def abFdr(spark: SparkSession, dir: String): DataFrame =
     abFdrCore(t(spark, dir, "events"))
@@ -610,8 +596,8 @@ object Stats {
   }
 
   /** ab9 — mixture sequential probability ratio test (mSPRT): the
-    * ALWAYS-VALID p-value of Johari et al. 2017 ("Peeking at A/B
-    * Tests"), the statistic an experimentation platform serves when
+    * always-valid p-value of Johari et al. 2017 ("Peeking at A-B
+    * Tests", KDD), the statistic an experimentation platform serves when
     * analysts peek at a running test — unlike ab1's fixed-horizon t, it
     * keeps its type-I guarantee under continuous monitoring. Closed
     * form under the normal mixture prior with tuning variance τ² = 1:
@@ -628,9 +614,8 @@ object Stats {
     * single-populated arm (var_samp null) nulls V and the whole readout
     * nulls through — the family's degenerate convention.
     *
-    * Scale shape: identical to ab1 — ONE scan, ONE hash aggregate keyed
-    * on event_type, map-side partials; the sequential-ness is in the
-    * STATISTIC (valid at any stopping time), not in any extra pass.
+    * Scale: as ab1 — one scan, one aggregate; the sequential-ness is in
+    * the statistic (valid at any stopping time), not in any extra pass.
     */
   def abMsprt(spark: SparkSession, dir: String): DataFrame =
     abMsprtCore(t(spark, dir, "events"))
@@ -687,7 +672,7 @@ object Stats {
   )
 
   val oracle: Map[String, String] = Map(
-    // drift3's PARTIAL oracle (r18): the exact reference-window totals
+    // drift3's partial oracle: the exact reference-window totals
     // hash-gate the carve; ref_depth_ok is Spark's KLL rank-error bound
     // check, TRUE by contract (see psiDriftSketch's scaladoc) — DuckDB
     // emits the literal, so an out-of-tolerance sketch hash-FAILS.

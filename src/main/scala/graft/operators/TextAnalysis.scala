@@ -11,32 +11,18 @@ import graft.functions.TextFunctions._
   * ID, fingerprinting. Pure per-row projections — no shuffle except the
   * deterministic output sort / small aggregations — so throughput at 100 TB
   * is scan-bound.
-  *
-  * t1 bench budget: 1.4 s at sf0.1 local[32] single-query (min-of-3,
-  * r12 A/B; the r13/r14 box runs ~1.3-1.4× slower suite-wide — r14+
-  * bench contract lines carry a calibration probe, normalize by it
-  * before cross-round compares). BENCH_r11's 2.27 s reading was SESSION NOISE, not a
-  * regression: no code touched t1 since f0767c2 (1.41 s), and the r12
-  * re-measure reproduces the round-8 figure both standalone (1.425 s)
-  * and inside the full 204-query bench session (1.222 s). No
-  * re-tokenization exists across its subtrees (the t18 scope-persist
-  * audit found one token frame feeding all aggregates).
   */
 object TextAnalysis {
 
   /** Per-document analysis columns (the profile a training-data pipeline
     * attaches before filtering).
     */
-  // NOT tWide (r20 A/B): the hash pin left t1's wall unchanged (1.47 s
-  // both forms, warm min-of-3 at sf0.1) while quadrupling taskTime —
-  // orderBy AFTER the projection makes the range sampler replay the
-  // heavy chain, so the pin only multiplied launch overhead. The
-  // range-FIRST form below is the shape that works: repartitionByRange
-  // on the RAW scan (the sampler reads only the column-pruned doc_id),
-  // then the heavy chain runs ONCE post-exchange in parallel, and
-  // sortWithinPartitions restores exactly orderBy's physical output
-  // (ascending range partitions, locally sorted). Same-box isolated
-  // min-of-4 A/B at sf0.1: 1.447 -> 0.617 s.
+  // Range-first instead of tWide: repartitionByRange on the raw scan (the
+  // sampler reads only the column-pruned doc_id), then the heavy chain
+  // runs once post-exchange in parallel, and sortWithinPartitions restores
+  // exactly orderBy's physical output (ascending range partitions, locally
+  // sorted). A hash pin before an orderBy makes the range sampler replay
+  // the heavy chain.
   def profile(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .repartitionByRange(math.max(2,
@@ -92,7 +78,7 @@ object TextAnalysis {
     * The score/lang trees are pinned with [[graft.functions.EvalOnce]]:
     * without the barrier the filter is pushed below the projection and the
     * ~full expression tree (4 stopword intersects + ratios) evaluates
-    * twice per surviving row — measured ~2x on this query at sf0.1.
+    * twice per surviving row (~2x on this query).
     */
   def qualityFilter(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.EvalOnce.once
@@ -150,12 +136,10 @@ object TextAnalysis {
     * synthetic spam bend the curve). Also exercises the SQL regression-
     * aggregate family (regr_slope, corr) the rest of the surface lacks.
     *
-    * Scale shape: one corpus-token explode into a hash aggregate with
-    * map-side combine (t6's shape) produces the VOCABULARY-sized frequency
-    * frame; the ranking window and the regression aggregate then run over
-    * that vocab frame, never the corpus. The ln() inputs differ across
-    * engines by at most 1 ulp (libm vs java.lang.Math), ~1e-16 relative —
-    * absorbed by the 6-decimal rounding like s1's price_ln.
+    * Scale: the ranking window and the regression aggregate run over the
+    * vocabulary-sized frequency frame, never the corpus. The ln() inputs
+    * differ across engines by at most 1 ulp, absorbed by the 6-decimal
+    * rounding.
     */
   def zipf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -182,11 +166,8 @@ object TextAnalysis {
     * share; natural prose holds both up). Complements t14's corpus-global
     * Zipf fit with the per-domain breakdown a mixture builder acts on.
     *
-    * Scale shape: t6's explode-into-hash-aggregate produces the
-    * (source, token) frequency frame (map-side combine carries the
-    * explode); the diversity stats are a SECOND aggregate over that
-    * vocabulary-sized frame — the corpus is scanned once and never
-    * re-joined.
+    * Scale: the corpus is scanned once into the (source, token) frame and
+    * never re-joined.
     */
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
     val perTok = t(spark, dir, "documents")
@@ -211,14 +192,9 @@ object TextAnalysis {
     * fluent in-distribution text. Deterministic by construction — no
     * external LM, the corpus is its own model.
     *
-    * Scale shape: the model is VOCABULARY-sized, not corpus-sized — bigram
-    * counts (one explode + hash agg, map-side combine), prefix counts
-    * derived FROM the bigram table (vocab²-bounded, one tiny agg — a
-    * single source of truth, no drift), vocabulary size as a broadcast
-    * 1-row frame. Scoring is one corpus-side shuffle join (exploded
-    * bigrams against the model) + one per-doc aggregate. At 100 TB the
-    * model table is the thing you'd broadcast or count-min-sketch; the
-    * corpus never joins itself.
+    * Scale: the model is vocabulary-sized (prefix counts derive from the
+    * bigram table — one source of truth); scoring is one corpus-side join
+    * against it, and the corpus never joins itself.
     */
   def lmSurprise(spark: SparkSession, dir: String): DataFrame =
     surpriseScores(spark, dir).orderBy("doc_id")
@@ -228,17 +204,10 @@ object TextAnalysis {
     */
   private def surpriseScores(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.rawShingles
-    // The tokenized frame feeds four plan subtrees and is deliberately NOT
-    // cached: measured at sf0.1, scoped-persisting docs+c2 made the query
-    // ~50% SLOWER (1.25 s -> 1.86 s) — the cache materialization barriers
-    // and in-memory-columnar round-trips cost more than re-running the
-    // fully-pipelined tokenize projection per subtree (same lesson as
-    // dd7's signature split; contrast dd2/dd3, where the REUSED side is a
-    // pairwise-join input, not a linear projection).
-    // NOT tWide (r20): the uncached frame feeds FOUR plan subtrees, so a
-    // width-pin exchange replays once per subtree and measurably loses to
-    // the pipelined single-task tokenize (A/B warm min-of-3 at sf0.1:
-    // 1.14 s unpinned vs 1.85 s pinned).
+    // The tokenized frame feeds four plan subtrees and is deliberately not
+    // cached or width-pinned: re-running the fully-pipelined tokenize per
+    // subtree is cheaper than a cache barrier (~50% slower) or a pin
+    // exchange replayed once per subtree.
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
     val bi = docs.filter(size(col("tk")) >= 2)
@@ -335,12 +304,9 @@ object TextAnalysis {
     * cuts (the standard packing semantics) and long documents span
     * multiple sequences.
     *
-    * Scale shape: the running offset is a prefix sum WINDOWED PER SHARD
-    * (doc_id mod 8) — a sharded packing job, never a global single-
-    * partition ordered window over the corpus; sequence ids are
-    * shard-local (shard, seq_id) for the same reason. The explode emits
-    * one row per (doc, sequence) overlap — output is manifest-sized, and
-    * everything after tokenCount is integer arithmetic.
+    * Scale: the running offset is a prefix sum windowed per shard
+    * (doc_id mod 8), never a global ordered window; sequence ids are
+    * shard-local (shard, seq_id) for the same reason.
     */
   def packing(spark: SparkSession, dir: String): DataFrame =
     packManifest(t(spark, dir, "documents")
@@ -372,25 +338,6 @@ object TextAnalysis {
       .orderBy("shard", "seq_id", "doc_id")
   }
 
-  /** t11 — BPE merge-pair counting: the frequency table of ADJACENT
-    * character pairs across all token occurrences, top-50 — exactly the
-    * statistic the first iteration of byte-pair-encoding tokenizer
-    * training maximizes over (subsequent iterations re-run the same count
-    * over re-segmented text; the counting plan is identical, so this pins
-    * the shape that matters). Complements t6 (word vocabulary) and the
-    * BPE-ish token COUNT in t1 with the merge-TRAINING statistic.
-    *
-    * Scale shape: one explode to tokens, one to character pairs
-    * (corpus-character-sized — the same cardinality class as t6's token
-    * explode), then a hash aggregate with map-side partial combine and a
-    * TakeOrderedAndProject top-k; the shuffle carries distinct pairs
-    * (bounded by 26² here), not occurrences.
-    *
-    * Bench budget: 0.5 s at sf0.1 local[32] (r13 box, min-of-3, warm
-    * parquet cache; 4.6 s cold in the r12 230-query suite — the tokenize
-    * explode is scan-bound, so the cold/warm spread is I/O, not plan
-    * work; normalize cross-box via the r14+ bench probe).
-    */
   /** The (>= 2-char) token stream and its adjacent character-pair counts —
     * ONE definition shared by t11 (the top-50 listing) and t15 (the merge
     * election), so the tokenization, length filter, and tie-break that
@@ -410,6 +357,17 @@ object TextAnalysis {
       .groupBy("pair")
       .agg(count(lit(1)).as("n_occurrences"))
 
+  /** t11 — BPE merge-pair counting: the frequency table of ADJACENT
+    * character pairs across all token occurrences, top-50 — exactly the
+    * statistic the first iteration of byte-pair-encoding tokenizer
+    * training maximizes over (subsequent iterations re-run the same count
+    * over re-segmented text; the counting plan is identical, so this pins
+    * the shape that matters). Complements t6 (word vocabulary) and the
+    * BPE-ish token COUNT in t1 with the merge-TRAINING statistic.
+    *
+    * Scale: the shuffle carries distinct character pairs (bounded by 26²
+    * here), not occurrences.
+    */
   def bpeMergePairs(spark: SparkSession, dir: String): DataFrame =
     pairCounts(tokenStream(spark, dir))
       .orderBy(col("n_occurrences").desc, col("pair"))
@@ -428,12 +386,9 @@ object TextAnalysis {
     * decode the sentinel back. No array-of-units state, no fold: the
     * re-segmentation is ONE string replace per token.
     *
-    * Scale shape: t11's explode/aggregate twice (once to elect the merge,
-    * once to recount), with the 1-row winner broadcast into the second
-    * pass; the token frame is tokenized once and scoped-persisted for its
-    * two consumers. Further iterations repeat the same plan with k
-    * sentinels. The recount shuffle carries distinct labels (≤27²), not
-    * occurrences.
+    * Scale: the token frame is tokenized once and scoped-persisted for
+    * its two consumers; the recount shuffle carries distinct labels
+    * (≤27²), not occurrences.
     */
   def bpeStep(spark: SparkSession, dir: String): DataFrame = {
     val toks = graft.engine.Caching.scopedPersist(tokenStream(spark, dir))
@@ -473,23 +428,13 @@ object TextAnalysis {
     * preserves (decode is injective per symbol: units are ≥2 chars, so
     * no unit collides with a letter).
     *
-    * Scale shape — the Zipf crush: the corpus is aggregated ONCE to the
-    * DISTINCT-token frequency table (the word-frequency dict real BPE
-    * trainers iterate on), so every one of the k steps is VOCAB-sized,
-    * not occurrence-sized — pair counts are weighted sums over distinct
-    * tokens (map-side combine; the shuffle carries ≤(26+k)² symbol
-    * pairs), and the replace+regroup touches only distinct strings (the
-    * regroup also merges post-replace collisions, keeping the frame a
-    * true vocabulary). Iteration machinery follows sim6's rounds, not a
-    * single lazy plan: each step reads back exactly ONE row (the elected
-    * winner — bounded driver traffic, the D2 convention) and
-    * `localCheckpoint`s the re-segmented vocab so lineage stays one
-    * generation deep — a fully-lazy chain embeds the previous
-    * generation's plan in each of its 2-3 consumers and goes EXPONENTIAL
-    * in analysis/planning cost (measured: 20-35 s at sf0.1 lazy vs ~2 s
-    * checkpointed; the time was driver-side planning, not compute). At
-    * 100 TB the vocab is bounded by distinct words, orders below the
-    * corpus; the single occurrence pass is the only corpus-width stage.
+    * Scale — the Zipf crush: the corpus is aggregated once to the
+    * distinct-token frequency table, so every one of the k steps is
+    * vocab-sized; the replace+regroup also merges post-replace
+    * collisions, keeping the frame a true vocabulary. Each step reads
+    * back exactly one row (the elected winner) and `localCheckpoint`s the
+    * re-segmented vocab so lineage stays one generation deep: a lazy
+    * chain goes exponential in planning cost (20-35 s vs ~2 s).
     * Invariant (InvariantSpec, planted + real corpus): elected counts
     * are monotone non-increasing — a merge only removes old adjacencies,
     * and every new pair contains the new unit, whose occurrence count is
@@ -520,12 +465,10 @@ object TextAnalysis {
     * applies `replace(t, rp, digit)` in step order).
     *
     * Two regimes, picked by [[graft.engine.RegimeGate]] on the
-    * distinct-token frame (r20): the k-step elect→merge→recount loop
-    * iterates on VOCAB-sized data (the Zipf crush above), yet the
-    * distributed form paid 2 jobs / ~4 AQE stages per step — ~24
-    * sequential driver round-trips for t21/t22/t31 each, the dominant
-    * cost of all three at bench scale (t31 profiled at 33 stages with
-    * 0.7 s of task time). At or below the gate's bound the loop runs in
+    * distinct-token frame: the k-step elect→merge→recount loop iterates
+    * on vocab-sized data (the Zipf crush above), where the distributed
+    * form pays 2 jobs / ~4 AQE stages per step. At or below the gate's
+    * bound the loop runs in
     * plain Scala on the collected vocab — integer weights, the same
     * 2-char windows, the same (n desc, decoded-pair asc) election and the
     * same non-overlapping left-to-right `replace` (`String.replace` and
@@ -540,12 +483,10 @@ object TextAnalysis {
   private[graft] def bpeTrainRaw(tokens: DataFrame, k: Int,
       driverVocabMax: Long = graft.engine.RegimeGate.DriverRows): Seq[BpeMerge] = {
     require(k >= 1 && k <= 10, "sentinel alphabet is '0'-'9'")
-    // r20 ADVICE: both regimes ignore length-1 tokens (the driver loop
-    // counts no pairs for them and drops them on merge; the distributed
-    // elect's sequence(1, length-1) would instead DESCEND and fabricate
-    // bogus "pairs") — enforce the precondition here so the regimes stay
-    // equivalent by construction for any caller, not just the two that
-    // already filter.
+    // Both regimes ignore length-1 tokens (the driver loop counts no pairs
+    // for them and drops them on merge; the distributed elect's
+    // sequence(1, length-1) would instead descend and fabricate bogus
+    // "pairs"), enforced here for any caller.
     val vocab0 = tokens.select(col("token").as("t"))
       .filter(length(col("t")) >= 2)
       .groupBy("t").agg(count(lit(1)).as("w"))
@@ -605,7 +546,7 @@ object TextAnalysis {
     merges.result()
   }
 
-  /** Distributed-regime trainer (the pre-r20 form, unchanged): one
+  /** Distributed-regime trainer: one
     * elect job + one re-segment checkpoint per step over the
     * checkpointed vocab frame.
     */
@@ -659,14 +600,10 @@ object TextAnalysis {
     * under a trained tokenizer, what every context-budget and
     * cost-estimate pass runs).
     *
-    * Scale shape: the merge table applies to the DISTINCT-token frame
-    * (t21's Zipf crush — k nested `replace`es on vocab-sized data; every
-    * post-merge symbol is one char, so units = length), then one
-    * occurrence-level join tags each token occurrence with its unit
-    * count and a per-doc hash aggregate sums it — AQE broadcasts the
-    * vocab side at any realistic corpus:vocab ratio. Zero-token
-    * documents report 0/0/0 with null compression (mirrored CASE in the
-    * oracle).
+    * Scale: the merge table applies to the distinct-token frame; one
+    * occurrence-level join tags each token with its unit count (every
+    * post-merge symbol is one char, so units = length). Zero-token
+    * documents report 0/0/0 with null compression.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame =
     bpeEncodeCore(t(spark, dir, "documents"), BpeTrainSteps)
@@ -716,11 +653,8 @@ object TextAnalysis {
     * chars-per-unit compression so "long words" and "bad merges" are
     * distinguishable.
     *
-    * Scale shape: t22's per-doc segmentation frame ([[bpeDocUnits]] —
-    * vocab-sized merge application, one occurrence join, one per-doc
-    * aggregate) joined to the documents' language column and re-agged to
-    * the LANGUAGE domain: the second aggregate is language-cardinality,
-    * map-side combined. All sums are exact integers; the two divisions
+    * Scale: t22's per-doc segmentation ([[bpeDocUnits]]) re-aggregated to
+    * the language domain. All sums are exact integers; the two divisions
     * are final, nullif-guarded single IEEE ops.
     */
   def fertility(spark: SparkSession, dir: String): DataFrame = {
@@ -745,18 +679,11 @@ object TextAnalysis {
     * document (tf × ln(N/df)), the classic relevance statistic a corpus
     * pipeline attaches for retrieval, topic labeling, or near-dup triage.
     *
-    * Scale shape: everything derives from t6's `(token, doc_id)`-level
-    * hash aggregate (map-side partial combine — the shuffle carries
-    * distinct pairs, not occurrences). Document frequency is a second,
-    * vocabulary-sized aggregate OF that frame; the corpus-wide doc count
-    * is a broadcast 1-row frame (t8's convention); the idf join is
-    * pair-frame × vocabulary — the corpus text is never re-tokenized and
-    * never self-joined. The final top-3-per-doc rank compiles to map-side
-    * WindowGroupLimits (PlanSpec), so the last exchange carries ≤3 rows
-    * per document. Scoring: tf and df are exact integers and the tfidf
-    * product is ONE rounded double expression, identical in both engines;
-    * ranking is on the rounded value with a token tiebreak so both
-    * engines rank identically.
+    * Scale: everything derives from t6's `(token, doc_id)` aggregate; the
+    * corpus text is never re-tokenized or self-joined, and the top-3 rank
+    * compiles to map-side WindowGroupLimits (PlanSpec). tf and df are
+    * exact integers and tfidf is one rounded double expression; ranking
+    * is on the rounded value with a token tiebreak.
     */
   def tfidfKeywords(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -786,12 +713,10 @@ object TextAnalysis {
     * deficit per unique word but a dominant bigram) — the complementary
     * repetition signal quality filters threshold on.
     *
-    * Scale shape: explode to (doc_id, bigram), ONE hash aggregate with
-    * map-side combine (the shuffle carries distinct per-doc bigrams, not
-    * occurrences), then the per-doc top-1 compiles to map-side
-    * WindowGroupLimits (PlanSpec) — the final exchange carries one row
-    * per document. Ties break lexicographically so the winner is unique;
-    * the share is one rounded double of two exact integers.
+    * Scale: one (doc_id, bigram) aggregate; the per-doc top-1 compiles to
+    * map-side WindowGroupLimits (PlanSpec). Ties break lexicographically
+    * so the winner is unique; the share is one rounded double of two
+    * exact integers.
     */
   def topBigram(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -824,15 +749,11 @@ object TextAnalysis {
     * are bound ACROSS the corpus" — the phrase-mining signal a tokenizer
     * or stopword-phrase list is built from.
     *
-    * Scale shape: unigram and bigram counts are each ONE hash aggregate
-    * with map-side combine; both model frames are VOCABULARY-sized (t8's
-    * convention), so the unigram joins broadcast and the corpus totals
-    * are 1-row aggregates OF the model frames (no extra corpus pass).
-    * The min-support filter (n_ab >= 5) lands before the joins, so the
-    * scored frame is the frequent-bigram slice, not the long tail. PMI
-    * is one ln-of-exact-integers expression, identical term order in
-    * both engines; the top-50 ranks on the ROUNDED score with a bigram
-    * tiebreak — one TakeOrderedAndProject.
+    * Scale: both model frames are vocabulary-sized and the min-support
+    * filter (n_ab >= 5) lands before the joins. PMI is one
+    * ln-of-exact-integers expression with identical term order in both
+    * engines; the top-50 ranks on the rounded score with a bigram
+    * tiebreak.
     */
   def pmiCollocations(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.rawShingles
@@ -902,17 +823,9 @@ object TextAnalysis {
     * lexical leg of corpus search — t12 scores a document's OWN terms;
     * this ranks documents AGAINST a query.
     *
-    * Scale shape: the query-term filter lands immediately after the
-    * explode, so the (doc, term) aggregate's shuffle carries only rows
-    * matching the |Q|=3 query terms — a |matching docs| x |Q| frame, not
-    * the corpus. Document length rides the exploded rows (no doc-sized
-    * length join); document frequency is a |Q|-row aggregate OF the tf
-    * frame, broadcast back; corpus-wide N and avgdl are a broadcast 1-row
-    * frame (t8's convention). The final top-10 is one
-    * TakeOrderedAndProject — nothing doc-sized ever sorts globally. At
-    * 100 TB the tf frame is the posting-list slice for Q, which is
-    * exactly what an inverted index would serve; the plan IS the
-    * index-less equivalent with one scan.
+    * Scale: the query-term filter lands right after the explode, so the
+    * (doc, term) shuffle carries only |matching docs| x |Q| rows; nothing
+    * doc-sized sorts globally.
     *
     * Determinism: tf/df/dl are exact integers, avgdl is an exact-integer
     * sum divided once; the score is ONE rounded double expression ranked
@@ -1009,16 +922,11 @@ object TextAnalysis {
   private[graft] def freqIndexFrames(src: DataFrame): (DataFrame, DataFrame) = {
     import graft.functions.TextFunctions.tokensOrdered
     val docs = src.select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
-    // Scope-persist the doc-length table: t18 consumes it TWICE (the
-    // N/avgdl stats aggregate and the score-join spine), and each
-    // consumer otherwise re-reads parquet and re-tokenizes the corpus
-    // just to take size(tk). The cached frame is two longs per doc —
-    // d10/dq3's narrow-frame trick, NOT t8's measured anti-pattern of
-    // caching a wide tokenized projection. Measured at sf0.1/local[32]:
-    // t18 1.59 s -> 1.21 s. Audit note (r11): t3/t13's second consumer
-    // of their tokenized frame prunes to doc_id-only (no re-tokenize),
-    // and t7 is one scan with 6 inherent regex passes — t18 was the one
-    // real re-tokenizer in the 0.9 s cluster.
+    // Scope-persist the doc-length table: t18 consumes it twice (the
+    // N/avgdl stats aggregate and the score-join spine), and each consumer
+    // otherwise re-reads parquet and re-tokenizes the corpus just to take
+    // size(tk). The cached frame is two longs per doc (d10/dq3's
+    // narrow-frame trick), not a wide tokenized projection.
     val docLens = graft.engine.Caching.scopedPersist(
       docs.select(col("doc_id"), size(col("tk")).cast("long").as("dl")))
     val index = docs
@@ -1039,11 +947,9 @@ object TextAnalysis {
     * TextAnalysisSpec pins t16 ≡ t18 row-for-row; the gate pins the
     * driver corpus against t16's oracle (identical output contract).
     *
-    * Scale: the index-side filter selects |Q| token groups — a
-    * token-prefix range scan on the materialized table, never a corpus
-    * scan; the exploded slice joins the doc-length table with the SLICE
-    * broadcast (the norms table is corpus-sized, the slice is |Q|-bounded
-    * per shard), so serving cost is posting-slice-sized end to end.
+    * Scale: the index-side filter selects |Q| token groups and the
+    * |Q|-bounded slice is broadcast, so serving cost is
+    * posting-slice-sized end to end.
     */
   def bm25FromIndex(spark: SparkSession, dir: String): DataFrame = {
     val (index, docLens) = freqIndexFrames(t(spark, dir, "documents"))
@@ -1071,12 +977,10 @@ object TextAnalysis {
     * is where this corpus actually grows (β ≈ 0.8 at sf0.01), and the
     * n-gram order is the natural parameter of the operator.
     *
-    * Scale shape: ONE tokenize pass; prefix vocabularies are NOT 10
-    * rescans — each type records its FIRST prefix bucket (a hash
-    * aggregate on type), and both curves come from cumulative sums over
-    * the 10-row bucket frame. The fit is regr_slope/intercept over those
-    * 10 points. Prefix buckets derive arithmetically from doc_id against
-    * a broadcast max, so no global sort anywhere.
+    * Scale: one tokenize pass; each type records its first prefix bucket
+    * and both curves are cumulative sums over the 10-row bucket frame.
+    * Prefix buckets derive from doc_id against a broadcast max, so no
+    * global sort anywhere.
     */
   def heapsFit(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1141,15 +1045,11 @@ object TextAnalysis {
     * span-contamination signal read as a per-doc score). Documents with
     * fewer than two tokens carry zero bigrams and a null novelty.
     *
-    * Scale shape: one explode into the distinct (doc, shingle) domain,
-    * `min(doc_id)` over a window partitioned by shingle, and a per-doc
-    * aggregate, so the tokenize+shingle+explode chain runs once; no
-    * corpus self-join. At 100 TB "first" stays well-defined because
-    * doc_id is the global ingest order.
+    * Scale: one explode into the distinct (doc, shingle) domain and a
+    * `min(doc_id)` window partitioned by shingle; no corpus self-join.
     *
-    * Width pin (r21): the tokenize+shingle+explode chain ran as one task
-    * under the row-group pin. Isolated min-of-4 ABAB at sf0.1/local[32],
-    * quiet cycles: pinned 0.84/0.93 s vs unpinned 1.42/1.47 s.
+    * Width-pinned: on a single-row-group corpus the
+    * tokenize+shingle+explode chain would otherwise run as one task.
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.rawShingles
@@ -1190,8 +1090,7 @@ object TextAnalysis {
     * rationals of integers (identical IEEE division on both engines);
     * thresholds compare the 6-ROUNDED values (dq3's convention).
     *
-    * Scale shape: pure per-row projection — no shuffle except the output
-    * sort; scan-bound at 100 TB like the rest of the family.
+    * Scale: pure per-row projection — no shuffle except the output sort.
     */
   def gopherRules(spark: SparkSession, dir: String): DataFrame =
     gopherRulesCore(tWide(spark, dir, "documents"))
@@ -1236,10 +1135,8 @@ object TextAnalysis {
     * K is deliberately tiny relative to this corpus so the rate is
     * non-degenerate at every sf.
     *
-    * Scale shape: ONE token explode feeds both sides — the vocab is a
-    * K-row TakeOrdered off the token-count aggregate (broadcast back as
-    * a left join; K rows at any corpus size), and the per-doc aggregate
-    * is a hash agg on doc_id. The corpus is scanned once, never
+    * Scale: one token explode feeds both sides (the vocab is a K-row
+    * TakeOrdered broadcast back); the corpus is scanned once, never
     * self-joined.
     */
   def oovRate(spark: SparkSession, dir: String): DataFrame =
@@ -1280,10 +1177,8 @@ object TextAnalysis {
     * syllables = vowel-group runs `[aeiouy]+` (the standard heuristic;
     * exact hyphenation is dictionary-bound and non-portable).
     *
-    * Scale shape: pure per-row projection over three regex counts — no
-    * shuffle except the output sort; scan-bound at 100 TB (the t1/t27
-    * family discipline). Zero-word or zero-sentence docs null through
-    * (nullif-guarded divisors on both engines).
+    * Scale: pure per-row projection; zero-word or zero-sentence docs null
+    * through (nullif-guarded divisors on both engines).
     */
   def readability(spark: SparkSession, dir: String): DataFrame =
     readabilityCore(t(spark, dir, "documents"))
@@ -1322,12 +1217,9 @@ object TextAnalysis {
     * curation pass uses to strip or down-weight templated text.
     * Within-corpus complement to dd8's cross-corpus span contamination.
     *
-    * Scale shape: one compiled shingle explode ([[graft.functions.KgramMd5]],
-    * per-doc distinct), the document frequency as `count(*)` over a
-    * window partitioned by shingle hash — the distinct rows ARE the
-    * (doc, shingle) pairs, so no aggregate has to be joined back and the
-    * scan+tokenize+shingle chain runs once — then the per-doc rollup.
-    * Nothing is broadcast: the shingle domain grows with the corpus.
+    * Scale: document frequency is `count(*)` over a window partitioned by
+    * shingle hash, so the scan+tokenize+shingle chain runs once and no
+    * aggregate is joined back.
     */
   def boilerplate(spark: SparkSession, dir: String): DataFrame =
     boilerplateCore(tWide(spark, dir, "documents"))

@@ -45,8 +45,7 @@ object Artifacts {
     * own I/O), and the local ChecksumFileSystem otherwise writes hidden
     * `.crc` side-files next to every artifact — an out-of-band rewrite of
     * the JSON (the reference's Python pipeline regenerating its cache, a
-    * hand edit) then fails every later read with ChecksumException, a
-    * read that always succeeded before the Hadoop port.
+    * hand edit) would then fail every later read with ChecksumException.
     */
   private[sources] def withFs[T](path: org.apache.hadoop.fs.Path)(
       f: org.apache.hadoop.fs.FileSystem => T): T = {

@@ -26,7 +26,7 @@ import graft.Tables.{r2, t}
 object Lake {
 
   /** Control-plane filesystem handle for a layout path — the Hadoop
-    * `FileSystem` API (the round-6 Workbook/Artifacts convention), so
+    * `FileSystem` API (the Workbook/Artifacts convention), so
     * every manifest / listing / vacuum below works identically against
     * `file:`, `hdfs:` or `s3a:` stores. Data-plane I/O already goes
     * through `spark.read`/`write`; this closes the control-plane gap.
@@ -162,14 +162,12 @@ object Lake {
       .drop("mnu", "mxu", "mnv", "mxv")
   }
 
-  // Width pin (r20, the shingledOf precedent): the events parquet is a
-  // single row group at bench scale, so the 64-term interleave
-  // projection — and the range sampler's replay of it — ran as ONE
-  // task. The pin feeds both the stats aggregate (map-side partials)
-  // and the keyed projection; min/max and the Morton code are exact
-  // integers, so the result is order-insensitive. Same-box isolated
-  // min-of-4 A/B at sf0.1: 2.402 -> 1.654 s (lake3's write pin A/B'd
-  // in the same pair: 3.111 -> 1.061 s).
+  // Width pin (the shingledOf precedent): a single-row-group events
+  // parquet would run the 64-term interleave projection — and the range
+  // sampler's replay of it — as one task. The pin feeds both the stats
+  // aggregate (map-side partials) and the keyed projection; min/max and
+  // the Morton code are exact integers, so the result is
+  // order-insensitive.
   def zorderKeys(spark: SparkSession, dir: String): DataFrame =
     withZKey(graft.Tables.wide(
         t(spark, dir, "events")
@@ -213,14 +211,11 @@ object Lake {
     * the first observed partition", standing in for the value a real
     * scheduler persists in its run metadata.
     *
-    * Scale shape: resolving the watermark is a control-plane read — the
-    * partition-values listing (no data columns touched), one value to
-    * the driver, exactly what a metastore lookup costs. The increment
-    * scan then carries `day > watermark` as a PLANNING-TIME literal, so
-    * whole directories prune before any I/O (LakeSpec pins the
-    * predicate into PartitionFilters with nothing row-level pushed) —
-    * the difference between re-reading 100 TB nightly and reading one
-    * day's slice.
+    * Scale: resolving the watermark is a control-plane read (the
+    * partition-values listing); the increment scan carries
+    * `day > watermark` as a planning-time literal, so whole directories
+    * prune before any I/O (LakeSpec pins the predicate into
+    * PartitionFilters with nothing row-level pushed).
     */
   def incrementalRead(spark: SparkSession, dir: String): DataFrame = {
     val scan = incrementalScan(spark, dir)
@@ -237,12 +232,12 @@ object Lake {
     */
   private[graft] def incrementalScan(spark: SparkSession, dir: String): DataFrame = {
     val out = GraftSession.scratchDir(spark, "events_by_day")
-    // Keyed width pin on the ingest write (r20): the single-row-group
-    // scan otherwise funnels every day's file through ONE dynamic-
-    // partitioning writer task. Hashing on `day` keeps one writer per
-    // day (same file count, parallel writers); within-file row order
-    // becomes fetch-ordered, which only the r2-rounded value sum could
-    // see — the same ulp class the cross-engine gate already absorbs.
+    // Keyed width pin on the ingest write: a single-row-group scan would
+    // funnel every day's file through one dynamic-partitioning writer
+    // task. Hashing on `day` keeps one writer per day (same file count,
+    // parallel writers); within-file row order becomes fetch-ordered,
+    // which only the rounded value sum could see — the ulp class the
+    // cross-engine gate already absorbs.
     graft.Tables.wide(
         t(spark, dir, "events").withColumn("day", to_date(col("ts"))),
         col("day"))
@@ -268,25 +263,16 @@ object Lake {
     * the production knob is the same pair of writer options with a
     * bytes-derived record budget.
     *
-    * Scale shape: compaction is ONE shuffle keyed on the partition
-    * column (each day lands wholly in one task — the single-writer-per-
-    * partition discipline), file rolling is writer-local, and the
-    * listings are control-plane directory reads (no data I/O). At 100 TB
-    * this is exactly a table-format OPTIMIZE pass: shuffle by partition,
-    * roll at the size budget, swap the directory.
-    *
-    * Bench budget: 2.1–2.6 s at sf0.1 on 32 cores with a quiet box: ~400
-    * fragment files written and rewritten plus two directory listings.
-    * Above ~4 s on a quiet box the writer width or the fragment budget
-    * scaling broke; under co-tenant filesystem load it reads 5–13 s.
+    * Scale: compaction is one shuffle keyed on the partition column (each
+    * day lands wholly in one task), file rolling is writer-local, and the
+    * listings are control-plane directory reads.
     */
   def compactionReport(spark: SparkSession, dir: String): DataFrame = {
     // Budgets scale with the corpus (total/400 rows per fragment file,
-    // floored at 25) so the DEMONSTRATED pathology stays ~400 fragment
-    // files at any sf instead of the file count growing linearly with
-    // data — the fixed-25 form put 4 000 files on disk at sf0.1 and the
-    // bench paid 49 s of filesystem churn for no extra coverage. The
-    // sizing count is a control-plane scan (no shuffle, column-less).
+    // floored at 25) so the demonstrated pathology stays ~400 fragment
+    // files at any sf instead of growing linearly with data (a fixed 25
+    // put 4 000 files on disk at sf0.1). The sizing
+    // count is a control-plane scan (no shuffle, column-less).
     val total = t(spark, dir, "events").count()
     val fragTarget = math.max(25L, math.ceil(total / 400.0).toLong)
     val target = 4L * fragTarget
@@ -297,7 +283,7 @@ object Lake {
     // (hash on day), so single-writer-per-day and the per-day file
     // counts are unchanged — but the writers run `defaultParallelism`
     // wide instead of letting AQE's bytes-based coalescing serialize
-    // the file churn (measured: 5.8 → ~2 s at sf0.1 local[32]).
+    // the file churn (5.8 → ~2 s at sf0.1).
     val writers = spark.sparkContext.defaultParallelism
     val frag = GraftSession.scratchDir(spark, "events_frag")
     ev.repartition(writers, col("day"))
@@ -333,12 +319,8 @@ object Lake {
     * recomputation from the raw events, so a manifest that leaks files
     * across versions (the snapshot-isolation bug) breaks the hash.
     *
-    * Scale shape: a commit is one write plus a file-list record (the
-    * control-plane cost of a real table-format commit); an as-of read
-    * plans exactly the manifest's files — no directory listing of the
-    * whole table, which is the point of manifests at 100 TB (a million-
-    * file table resolves its snapshot without touching the filesystem
-    * tree). Aggregates are ordinary one-pass hash aggregates.
+    * Scale: an as-of read plans exactly the manifest's files — no
+    * directory listing of the whole table.
     */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = GraftSession.scratchDir(spark, "events_versions")
@@ -397,10 +379,8 @@ object Lake {
     * misaligns columns by position, or invents non-null defaults breaks
     * the hash.
     *
-    * Scale shape: schema resolution reads footers (mergeSchema's cost is
-    * per-FILE metadata, the reason real tables keep the union schema in
-    * the manifest instead — lake5's mechanism); the aggregate is one
-    * hash aggregate per generation partition.
+    * Scale: schema resolution reads footers (per-file metadata, the
+    * reason real tables keep the union schema in the manifest).
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val root = GraftSession.scratchDir(spark, "events_evolving")
@@ -485,11 +465,9 @@ object Lake {
     * production systems add an age threshold before a file becomes
     * eligible — same diff, extra predicate.
     *
-    * Scale shape: the candidate set comes from a directory listing and
-    * a manifest read (control-plane only — no data I/O); deletes are
-    * per-file metadata ops that at 100 TB fan out as a distributed
-    * foreach over the listing diff. The verification read plans exactly
-    * the manifest's files, lake5's mechanism.
+    * Scale: the candidate set comes from a directory listing and a
+    * manifest read (control-plane only); the verification read plans
+    * exactly the manifest's files.
     */
   def vacuum(spark: SparkSession, dir: String): DataFrame = {
     val root = GraftSession.scratchDir(spark, "events_vacuum")
@@ -497,13 +475,10 @@ object Lake {
     val ev = t(spark, dir, "events")
       .select(col("ts"), col("user_id"), col("value"))
       .withColumn("day", to_date(col("ts")))
-    // ONE control-plane action (r20, replacing three): the per-day count
-    // histogram — bounded by the table's day span, control-plane sized at
-    // any scale — answers the cut (min day + 15), v1's row count, and the
-    // total in a single aggregate where the old shape paid a min()
-    // aggregate, a filtered count() and a full count() as three separate
-    // jobs. Null-day rows (none in practice) count toward the total but
-    // not the cut/v1 window, matching the old min()/predicate semantics.
+    // One control-plane action: the per-day count histogram — bounded by
+    // the table's day span — answers the cut (min day + 15), v1's row
+    // count, and the total in a single aggregate. Null-day rows count
+    // toward the total but not the cut/v1 window.
     val hist = ev.groupBy("day").agg(count(lit(1)).as("n")).collect()
       .map(r => (Option(r.getDate(0)), r.getLong(1)))
     val n = hist.map(_._2).sum

@@ -15,12 +15,8 @@ import org.apache.spark.sql.types._
 /** Binary `.xlsx` workbook codec — dependency-free SpreadsheetML over the
   * JDK's `java.util.zip` + StAX, closing the S2/S7 binary halves
   * (reference `preprocess.py:17-20` `pd.read_excel(sheet_name=None)`,
-  * `mapper.py:123-136` `pd.ExcelWriter` one-sheet-per-table). Earlier
-  * rounds marked the binary codec environment-blocked ("no xlsx library
-  * offline"); the block was illusory — an xlsx file is a ZIP of XML
-  * parts, both of which the JDK parses natively, so the same
-  * dependency-free-parser approach that produced
-  * [[graft.operators.MediaCodecs]] (PNM/RIFF-WAVE) applies here.
+  * `mapper.py:123-136` `pd.ExcelWriter` one-sheet-per-table): an xlsx
+  * file is a ZIP of XML parts, both of which the JDK parses natively.
   *
   * Format notes (ECMA-376 SpreadsheetML, the parts every producer emits):
   *   - `[Content_Types].xml`, `_rels/.rels` → `xl/workbook.xml` →
@@ -56,10 +52,9 @@ import org.apache.spark.sql.types._
   * directory-of-parquet representation — both implement the same
   * [[WorkbookSource]] seam, so pipelines choose per artifact.
   *
-  * Measured soak (100k rows × 4 mixed columns, local[4] test session,
-  * probe-0.44-class box, single-shot): write 2.5 s, read 3.1 s, 2.2 MB
-  * file, bit-exact aggregate round-trip — ~40k rows/s each way, which
-  * prices even a maximum-size 1M-row sheet in well under a minute.
+  * Soak (100k rows × 4 mixed columns, local[4]): write 2.5 s, read 3.1 s,
+  * ~40k rows/s each way, so a maximum-size 1M-row sheet takes well under
+  * a minute.
   */
 object Xlsx {
 

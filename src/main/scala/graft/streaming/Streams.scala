@@ -470,12 +470,9 @@ object AnomalyMonitor {
   * ([[graft.operators.Events.weeklyFromDaily]]) without ever re-reading
   * raw events.
   *
-  * Scale shape: per batch, one hash aggregate over the batch (map-side
-  * combine) plus one full-outer merge join keyed on (day, event_type) —
-  * both frames are day×type-sized, never raw-event-sized. The store is
-  * eagerly `localCheckpoint`ed each batch so its lineage stays one merge
-  * deep instead of growing a union chain across the stream's lifetime
-  * (in production the checkpoint is the table write itself).
+  * Scale: per batch, one aggregate plus one full-outer merge keyed on
+  * (day, event_type) — both frames day×type-sized. The store is eagerly
+  * `localCheckpoint`ed each batch so its lineage stays one merge deep.
   */
 object RollupStream {
 
@@ -868,11 +865,9 @@ object CdcScd2Stream {
   * Precondition: ingest doc_ids are globally unique (any real ingest id
   * satisfies this; the id order is the deterministic tiebreak).
   *
-  * Scale shape per micro-batch: one fingerprint equi-join and one banded
-  * shingle join, both against (index ∪ batch) — at production scale the
-  * index side's signatures and band buckets are the PRECOMPUTED store
-  * (bucketed on (band, bucket)) so a batch only hashes itself and probes
-  * its buckets; nothing touches |batch| × |index|.
+  * Scale per micro-batch: one fingerprint equi-join and one banded
+  * shingle join against (index ∪ batch); nothing touches
+  * |batch| × |index|.
   */
 object AdmissionStream {
 

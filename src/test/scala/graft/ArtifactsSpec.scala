@@ -14,7 +14,7 @@ class ArtifactsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, "a", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
       .toDF("id", "s", "ts")
-    val path = Files.createTempDirectory("graft-art").toString + "/frame"
+    val path = TestSpark.tempDir("graft-art").toString + "/frame"
     Artifacts.store(df, path)
     val back = Artifacts.load(spark, path)
     assert(back.count() == 1)
@@ -26,7 +26,7 @@ class ArtifactsSpec extends AnyFunSuite {
   test("map artifact roundtrip matches the golden-map shape") {
     val m = Map("merchant" -> Map("Aral Autohof" -> "Aral truck stop"),
       "col2" -> Map("a" -> "b", "c" -> "d"))
-    val path = Files.createTempDirectory("graft-art").toString + "/map.json"
+    val path = TestSpark.tempDir("graft-art").toString + "/map.json"
     Artifacts.storeMap(m, path)
     assert(Artifacts.loadMap(path) == m)
     // interoperates with the translator loader
@@ -37,7 +37,7 @@ class ArtifactsSpec extends AnyFunSuite {
   test("map artifact I/O goes through the Hadoop FileSystem API (file: URI)") {
     spark // force a session so the artifact resolves the session's Hadoop conf
     val m = Map("col" -> Map("k" -> "v"))
-    val path = s"file:${Files.createTempDirectory("graft-art-fs")}/map.json"
+    val path = s"file:${TestSpark.tempDir("graft-art-fs")}/map.json"
     Artifacts.storeMap(m, path)
     assert(Artifacts.loadMap(path) == m)
     assert(graft.engine.DictionaryTranslator.fromJson(path).translateOne("k") == "v")
@@ -45,7 +45,7 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("map artifacts survive out-of-band rewrites (no checksum side-files)") {
     spark
-    val dir = Files.createTempDirectory("graft-art-crc")
+    val dir = TestSpark.tempDir("graft-art-crc")
     val path = dir.toString + "/map.json"
     Artifacts.storeMap(Map("a" -> Map("k" -> "v")), path)
     // the local ChecksumFileSystem must NOT leave a hidden .crc side-file:

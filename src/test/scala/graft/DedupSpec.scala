@@ -173,7 +173,7 @@ class DedupSpec extends AnyFunSuite {
     */
   private lazy val boilerplateCorpusDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hotbucket").toString
+    val dir = TestSpark.tempDir("graft-hotbucket").toString
     (1L to 300L).map(i => (i, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -220,7 +220,7 @@ class DedupSpec extends AnyFunSuite {
     // coincidentally match. Doc 6 is the only eval-side id (md5 carve);
     // its id-shifted self shares all 15 of its windows.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dd8").toString
+    val dir = TestSpark.tempDir("graft-dd8").toString
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliett"
     val fillA = "kilo lima mike november oscar papa quebec romeo sierra tango uniform victor"
     val fillB = "whiskey xray yankee zulu apple banana cherry date elder fig grape honey"
@@ -242,7 +242,7 @@ class DedupSpec extends AnyFunSuite {
   // and driverFinishMax = 0 forces the distributed label-propagation
   // loop — so neither implementation can rot behind the other.
   private val componentRegimes: Seq[(String, Long)] =
-    Seq("driver-finish" -> graft.operators.Dedup.DriverFinishEdges,
+    Seq("driver-finish" -> graft.engine.RegimeGate.DriverRows,
       "distributed-loop" -> 0L)
 
   test("componentsOf converges on a long path graph (multi-round pointer doubling)") {
@@ -334,7 +334,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("clustersOf on a dup-free corpus assigns every doc to itself") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nodup").toString
+    val dir = TestSpark.tempDir("graft-nodup").toString
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "one two three four five six seven"),

@@ -62,7 +62,7 @@ class EnrichSpec extends AnyFunSuite {
     // direction: rare sources must get weight > 1.
     val spark = TestSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-d5").toString
+    val dir = TestSpark.tempDir("graft-d5").toString
     (Seq((1L, "a"), (2L, "b")) ++ (3L to 7L).map(i => (i, "c")))
       .toDF("doc_id", "source")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -83,7 +83,7 @@ class EnrichSpec extends AnyFunSuite {
     // T=2, weight = sqrt(N/n): sqrt(7/1) vs d5's 7/3 for the rare domains.
     val spark = TestSpark.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-d6").toString
+    val dir = TestSpark.tempDir("graft-d6").toString
     (Seq((1L, "a"), (2L, "b")) ++ (3L to 7L).map(i => (i, "c")))
       .toDF("doc_id", "source")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

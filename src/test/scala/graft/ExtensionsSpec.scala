@@ -86,6 +86,29 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"name session scratch through GraftSession.scratchDir: $hits")
   }
 
+  test("no comment in src/main cites a round or an A/B run") {
+    import scala.jdk.CollectionConverters._
+    val cites = """\br[12]\d\b|(?i:round)[- ]\d|A/B""".r
+    // bench record file names, not history
+    val artifacts = """BENCH_r\d+|bench_full_r\d+""".r
+    def commentOf(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")) t
+      else line.indexOf(" // ") match { case -1 => ""; case k => line.substring(k) }
+    }
+    val walked = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val hits = try walked.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if cites.findFirstIn(artifacts.replaceAllIn(commentOf(line), "")).isDefined =>
+            s"$p:${i + 1}"
+        }
+      }.toList
+    finally walked.close()
+    assert(hits.isEmpty, s"history belongs in OPTIMIZATION_r*.md / CHANGES.md: $hits")
+  }
+
   test("extensions object injects without error at construction") {
     // smoke: applying the extensions hook to a fresh container must not
     // throw (full wiring needs a new session, which local tests share)

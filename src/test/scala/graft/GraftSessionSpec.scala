@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
 
   test("stop's cleanup removes the session's own root and dead roots, not young ones") {
-    val parent = java.nio.file.Files.createTempDirectory("graft-scratch").toFile
+    val parent = TestSpark.tempDir("graft-scratch").toFile
     val hour = 3600L * 1000
     /** A root holding one table file, its directories `dirAge` old and
       * the file `fileAge` old. */

@@ -31,7 +31,7 @@ class GraphSpec extends AnyFunSuite {
     // forces the distributed power-iteration rounds. The two must agree
     // on every rounded rank, so neither implementation can rot.
     val byRegime = for ((regime, max) <- Seq(
-        "driver-finish" -> graft.operators.Dedup.DriverFinishEdges,
+        "driver-finish" -> graft.engine.RegimeGate.DriverRows,
         "distributed-rounds" -> 0L)) yield {
       val r = graft.operators.Graph.pagerankCore(docs, max).collect()
         .map(x => x.getLong(0) -> x.getDouble(1)).toMap
@@ -72,10 +72,10 @@ class GraphSpec extends AnyFunSuite {
   // plans; wedgeBudget = 0 takes the driver-finish collect but trips the
   // Σ deg² budget, exercising the re-distributed fallback frame.
   private val grRegimes: Seq[(String, Long, Long)] =
-    Seq(("driver-finish", graft.operators.Dedup.DriverFinishEdges,
+    Seq(("driver-finish", graft.engine.RegimeGate.DriverRows,
         graft.operators.Graph.DriverWedgeBudget),
       ("distributed-joins", 0L, graft.operators.Graph.DriverWedgeBudget),
-      ("wedge-fallback", graft.operators.Dedup.DriverFinishEdges, 0L))
+      ("wedge-fallback", graft.engine.RegimeGate.DriverRows, 0L))
 
   test("gr3 link prediction: star leaves and square diagonals, edges excluded") {
     import spark.implicits._
@@ -193,7 +193,7 @@ class GraphSpec extends AnyFunSuite {
     // the regimes must agree EXACTLY — including the honestly-
     // unconverged diameter-4 chain rows.
     for ((regime, max) <- Seq(
-        "driver-finish" -> graft.operators.Dedup.DriverFinishEdges,
+        "driver-finish" -> graft.engine.RegimeGate.DriverRows,
         "distributed-rounds" -> 0L)) {
       val got = graft.operators.Graph.componentsCore(li, max).collect()
         .map(r => r.getLong(0) ->
@@ -222,7 +222,7 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  private val fixpointBounds = Seq(graft.operators.Dedup.DriverFinishEdges, 0L)
+  private val fixpointBounds = Seq(graft.engine.RegimeGate.DriverRows, 0L)
 
   /** Part key -> (component, component size) over `li`'s support-2
     * co-purchase graph, from the engine's one connected-components loop

@@ -841,7 +841,7 @@ class InvariantSpec extends AnyFunSuite {
     // fixed oracle hash barely exercises multi-cohort offsets — build a
     // stream with two cohorts and gaps and check the full matrix.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev9").toString
+    val dir = TestSpark.tempDir("graft-ev9").toString
     Seq(
       (1L, "2024-03-01 01:00:00"), (1L, "2024-03-01 02:00:00"), // same-day dup
       (1L, "2024-03-02 01:00:00"), (1L, "2024-03-05 01:00:00"),
@@ -868,7 +868,7 @@ class InvariantSpec extends AnyFunSuite {
     // refined cluster to be the (distance, cid)-lexicographic argmin over
     // those means — the Lloyd step itself, not just a fixed oracle hash.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sim8").toString
+    val dir = TestSpark.tempDir("graft-sim8").toString
     val vecs = for (c <- 0 until 4; j <- 0 until 10) yield {
       val v = Array.tabulate(8)(i => if (i == c) 10.0f * (c + 1) else 0.1f * j)
       ((c * 10 + j).toLong, v.toSeq)
@@ -899,7 +899,7 @@ class InvariantSpec extends AnyFunSuite {
     // the driver's customer table is null-free, so the oracle hash never
     // exercises prof1's null-counting path — plant nulls and check exact rows
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-prof1").toString
+    val dir = TestSpark.tempDir("graft-prof1").toString
     Seq[(java.lang.Long, String, java.lang.Long, java.lang.Double, String)](
       (1L, "alice", 1L, 10.50, "BUILDING"),
       (2L, null, 1L, null, "BUILDING"),
@@ -922,7 +922,7 @@ class InvariantSpec extends AnyFunSuite {
 
   test("ev10 flags exactly a planted spike, and nothing in flat history") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev10").toString
+    val dir = TestSpark.tempDir("graft-ev10").toString
     // 11 flat values then one 10x spike, all inside one trailing week:
     // pre-spike windows have sd=0 (excluded), the spike's own window must
     // flag, and the flat tail afterwards must stay below 2 rounded sigmas
@@ -939,7 +939,7 @@ class InvariantSpec extends AnyFunSuite {
 
   test("ev11 resample grid covers the span and forward-fills exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev11").toString
+    val dir = TestSpark.tempDir("graft-ev11").toString
     // A active on days 1 and 4, B on day 2 only; span = days 1..4 → a
     // leading gap (B day 1 → 0.0), interior gaps (carry last), and both
     // users on the full grid

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 
@@ -53,7 +51,7 @@ class PipelinesSpec extends AnyFunSuite {
     val dest = Map(
       "FACT_Expense" -> Seq("amount_clean", "merchant"),
       "DIM_Trip" -> Seq("trip_date"))
-    val sink = Files.createTempDirectory("graft-wb").toString
+    val sink = TestSpark.tempDir("graft-wb").toString
     val tables = Pipelines.mapPipeline(df, dest, sinkPath = Some(sink))
     assert(tables.keySet == Set("FACT_Expense", "DIM_Trip"))
     assert(tables("FACT_Expense").columns.sorted.toSeq == Seq("amount_clean", "merchant"))
@@ -68,7 +66,7 @@ class PipelinesSpec extends AnyFunSuite {
     val dest = Map(
       "FACT_Expense" -> Seq("amount_clean", "merchant"),
       "DIM_Trip" -> Seq("trip_date"))
-    val sink = Files.createTempDirectory("graft-wb-x").toString + "/report.xlsx"
+    val sink = TestSpark.tempDir("graft-wb-x").toString + "/report.xlsx"
     val tables = Pipelines.mapPipeline(df, dest, sinkPath = Some(sink))
     // one binary file, one sheet per destination table, readable back
     // through the xlsx half of the workbook seam
@@ -130,7 +128,7 @@ class PipelinesSpec extends AnyFunSuite {
   test("EP3 xlsx sink runs one job for all of mapPipeline's tables") {
     val tables = Pipelines.mapPipeline(
       graft.sources.Loader.load(spark, csvPath), everyColumn)
-    val sink = Files.createTempDirectory("graft-wb-jobs").toString + "/pin.xlsx"
+    val sink = TestSpark.tempDir("graft-wb-jobs").toString + "/pin.xlsx"
     val (_, jobs) = TestSpark.jobsDuring(graft.sources.Xlsx.write(tables, sink, spark))
     assert(jobs == 1, s"$jobs jobs for ${tables.size} sheets")
   }
@@ -153,7 +151,7 @@ class PipelinesSpec extends AnyFunSuite {
 
   test("EP3 with an empty mapping sinks nothing and materialises nothing") {
     val df = graft.sources.Loader.load(spark, csvPath)
-    val sink = Files.createTempDirectory("graft-wb-empty").toString + "/none.xlsx"
+    val sink = TestSpark.tempDir("graft-wb-empty").toString + "/none.xlsx"
     val dest = Map("DIM_None" -> Seq("qqqqqqqqqqqqqqqq"))
     val (tables, mapJobs) =
       TestSpark.jobsDuring(Pipelines.mapPipeline(df, dest, sinkPath = Some(sink)))
@@ -167,7 +165,7 @@ class PipelinesSpec extends AnyFunSuite {
   test("S6 CSV sink roundtrip through the extension-dispatched loader") {
     val df = graft.sources.Loader.load(spark, csvPath)
     val cleaned = Pipelines.cleanPipeline(spark, csvPath).df
-    val out = Files.createTempDirectory("graft-csv").toString + "/out.csv"
+    val out = TestSpark.tempDir("graft-csv").toString + "/out.csv"
     cleaned.write.mode("overwrite").option("header", "true").csv(out)
     // Spark writes a directory of part files; read the directory back
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(out)
@@ -199,7 +197,7 @@ class PipelinesSpec extends AnyFunSuite {
       "canonical keeps its best surviving representative") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-pipe1").toString
+    val dir = TestSpark.tempDir("graft-pipe1").toString
     val pad = "0" * 800
     Seq(
       (6L, wordsA + " " + pad), // EVAL side of the md5 carve, quality < 0.5

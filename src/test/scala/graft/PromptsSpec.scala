@@ -41,7 +41,7 @@ class PromptsSpec extends AnyFunSuite {
   }
 
   test("filesystem templates load like the reference's config paths") {
-    val p = java.nio.file.Files.createTempFile("graft-prompt", ".txt")
+    val p = TestSpark.tempDir("graft-prompt").resolve("prompt.txt")
     java.nio.file.Files.writeString(p, "Hi {name}!")
     assert(Prompts.load(p.toString).render(Map("name" -> "there")) == "Hi there!")
   }

@@ -417,7 +417,7 @@ class SimilaritySpec extends AnyFunSuite {
           id += 1
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft-sim6-prop").toString
+      val dir = TestSpark.tempDir("graft-sim6-prop").toString
       vecs.toSeq.toDF("vec_id", "label", "embedding")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       val pairs = Similarity.nearDupPairsOf(spark, dir)

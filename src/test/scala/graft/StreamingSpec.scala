@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +21,7 @@ class StreamingSpec extends AnyFunSuite {
     * watermark actually advances between batches.
     */
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = TestSpark.tempDir("graft-stream").toString
     t(spark, sf, "events")
       .repartitionByRange(4, col("ts"))
       .write.mode("overwrite").parquet(dir)
@@ -90,7 +88,7 @@ class StreamingSpec extends AnyFunSuite {
     // per user is emitted, and must equal the batch session_window result.
     // (Multi-batch order is exercised separately; file listing order is not
     // time order, so cross-batch arrival order is not deterministic.)
-    val oneDir = Files.createTempDirectory("graft-sess").toString
+    val oneDir = TestSpark.tempDir("graft-sess").toString
     t(spark, sf, "events").coalesce(1).write.mode("overwrite").parquet(oneDir)
     val schema = spark.read.parquet(oneDir).schema
     val events = spark.readStream.schema(schema).parquet(oneDir)
@@ -180,7 +178,7 @@ class StreamingSpec extends AnyFunSuite {
     // single file -> single micro-batch: both sides' state sees all rows,
     // so the join must emit exactly the batch result (multi-file runs shed
     // late files nondeterministically — file listing order != time order)
-    val oneDir = Files.createTempDirectory("graft-ssj").toString
+    val oneDir = TestSpark.tempDir("graft-ssj").toString
     t(spark, sf, "events").coalesce(1).write.mode("overwrite").parquet(oneDir)
     val schema = spark.read.parquet(oneDir).schema
     val stream = spark.readStream.schema(schema).parquet(oneDir)
@@ -572,8 +570,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming artifact sink checkpoints each micro-batch as reloadable JSON") {
-    val srcDir = Files.createTempDirectory("graft-art-src").toString
-    val outDir = Files.createTempDirectory("graft-art-out").toString
+    val srcDir = TestSpark.tempDir("graft-art-src").toString
+    val outDir = TestSpark.tempDir("graft-art-out").toString
     // single file -> exactly one micro-batch -> exactly one batch=0 artifact
     t(spark, sf, "events").coalesce(1).write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
@@ -590,7 +588,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val outDir = Files.createTempDirectory("graft-art-multi").toString
+    val outDir = TestSpark.tempDir("graft-art-multi").toString
     // MemoryStream pins exact micro-batch boundaries: addData + process =
     // one batch, so the sink must produce batch=0 and batch=1 artifacts.
     val input = MemoryStream[(Long, String)]
@@ -624,7 +622,7 @@ class StreamingSpec extends AnyFunSuite {
     // single file -> single micro-batch: isolates dedup semantics from
     // late-arrival dropping (file listing order is not time order, so
     // multi-file runs would shed whole files as late data)
-    val dupDir = Files.createTempDirectory("graft-dups").toString
+    val dupDir = TestSpark.tempDir("graft-dups").toString
     val base = t(spark, sf, "events")
     base.union(base).coalesce(1)
       .write.mode("overwrite").parquet(dupDir)
@@ -676,7 +674,7 @@ class StreamingSpec extends AnyFunSuite {
     // keep-first-arrival and the batch twin's keep-min-doc_id pick the
     // same survivor per fingerprint — arrival order is the only intended
     // divergence, and a batch table has none.
-    val dir = Files.createTempDirectory("graft-pipe2-twin").toString
+    val dir = TestSpark.tempDir("graft-pipe2-twin").toString
     Seq((1L, good), (2L, junk), (3L, good), (4L, good2))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val batch = graft.engine.Pipelines.ingestBatch(spark, dir).collect()
@@ -936,7 +934,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // The BATCH twin (ev7, oracle-gated) on the same four events must
     // produce exactly that snapshot.
-    val dir = Files.createTempDirectory("graft-ev7-twin").toString
+    val dir = TestSpark.tempDir("graft-ev7-twin").toString
     Seq(ev(1, 10, 5, "view", 1.0), ev(2, 11, 1, "click", 2.0),
         ev(1, 9, 2, "view", 9.0), ev(2, 12, 7, "purchase", 3.0))
       // Tables.t decodes events.ts from nanosecond longs (the driver

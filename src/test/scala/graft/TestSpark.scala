@@ -4,22 +4,28 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object TestSpark {
+  /** Directories deleted at JVM exit, with file I/O alone, which does not
+    * care whether Spark's own hook has run yet. */
+  private val atExit = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(atExit.forEach(f => GraftSession.delete(f)))
+
+  /** A fresh directory under the JVM temp dir, deleted at JVM exit. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    atExit.add(dir.toFile)
+    dir
+  }
+
   lazy val spark: SparkSession = {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toFile
+    val warehouse = tempDir("graft-wh").toFile
     val s = GraftSession.builder("local[4]", defaultParallelism = Some(4))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // The suites share this session to the end of the JVM, so it never
-    // reaches GraftSession.stop. Delete its scratch and warehouse at exit
-    // with file I/O alone, which does not care whether Spark's own hook
-    // has run yet.
-    val scratch = new java.io.File(GraftSession.scratchDir(s, ""))
-    sys.addShutdownHook {
-      GraftSession.delete(scratch)
-      GraftSession.delete(warehouse)
-    }
+    // reaches GraftSession.stop: its scratch goes at exit too.
+    atExit.add(new java.io.File(GraftSession.scratchDir(s, "")))
     s
   }
 

@@ -70,7 +70,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (2L, filler),
       (3L, "gamma delta " * 6)
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t19").toString
+    val dir = TestSpark.tempDir("graft-t19").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = TextAnalysis.pmiCollocations(spark, dir).collect()
       .map(r => r.getString(0) -> r.getDouble(4)).toMap
@@ -103,7 +103,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (2L, ('a' to 'z').map(c => s"$c${c}word").mkString(" ")),
       (3L, "the cat sat on the mat"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-t8").toString
+    val dir = TestSpark.tempDir("graft-t8").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextAnalysis.lmSurprise(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
@@ -118,7 +118,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // tail 44), exactly 256 tokens (2 FULL chunks, no empty third), and a
     // 1-token doc.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t9").toString
+    val dir = TestSpark.tempDir("graft-t9").toString
     Seq(
       (1L, Seq.fill(300)("tok").mkString(" ")),
       (2L, Seq.fill(256)("tok").mkString(" ")),
@@ -139,7 +139,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // nothing: totals ab=3, ba=2 — overlapping pairs and repeats within
     // one token must all count, the way BPE merge statistics do.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t11").toString
+    val dir = TestSpark.tempDir("graft-t11").toString
     Seq((1L, "aba abab x"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -153,7 +153,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // multi-sequence span needs its own corpus. One shard (ids = 0 mod 8):
     // 600 tokens spans seqs 0+1; 200 and 30 tokens pack behind it in seq 1.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-t10").toString
+    val dir = TestSpark.tempDir("graft-t10").toString
     Seq(
       (8L, Seq.fill(600)("tok").mkString(" ")),
       (16L, Seq.fill(200)("tok").mkString(" ")),

@@ -40,7 +40,7 @@ class WorkbookSpec extends AnyFunSuite {
     import spark.implicits._
     val a = "t" + ("x" * 35) + "_alpha"
     val b = "t" + ("x" * 35) + "_beta"
-    val dir = java.nio.file.Files.createTempDirectory("graft-wb").toString
+    val dir = TestSpark.tempDir("graft-wb").toString
     WorkbookSink.save(
       Map(a -> Seq((1, "a")).toDF("id", "v"), b -> Seq((2, "b")).toDF("id", "v")),
       dir)
@@ -53,7 +53,7 @@ class WorkbookSpec extends AnyFunSuite {
 
   test("workbook listing goes through the Hadoop FileSystem API (file: URI)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wb-fs").toString
+    val dir = TestSpark.tempDir("graft-wb-fs").toString
     WorkbookSink.save(
       Map("sales" -> Seq((1, "x"), (2, "y")).toDF("id", "v"),
         "dims" -> Seq((7, "d")).toDF("id", "v")),
@@ -78,7 +78,7 @@ class WorkbookSpec extends AnyFunSuite {
     // Sheet names are CHILD PATHS in the dir sink: a separator nests the
     // sheet outside the flat listing, and '..' points the overwrite-mode
     // parquet write at the workbook's PARENT directory.
-    val dir = java.nio.file.Files.createTempDirectory("graft-wb-hostile").toString
+    val dir = TestSpark.tempDir("graft-wb-hostile").toString
     for (bad <- Seq("..", ".", "a/b", "a\\b")) {
       intercept[IllegalArgumentException] {
         WorkbookSink.save(Map(bad -> df), dir)
@@ -92,7 +92,7 @@ class WorkbookSpec extends AnyFunSuite {
   test("control chars, whitespace-only, and Windows-reserved entry names are refused") {
     import spark.implicits._
     val df = Seq((1, "x")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-wb-hostile2").toString
+    val dir = TestSpark.tempDir("graft-wb-hostile2").toString
     // Beyond separators/traversal: control chars (incl. NUL) corrupt
     // listings or truncate paths in C-string layers, whitespace-only
     // names are unaddressable, and Windows device names (CON, NUL, COM1,
@@ -113,7 +113,7 @@ class WorkbookSpec extends AnyFunSuite {
   }
 
   test("non-directory and missing workbook paths fail loudly with one contract") {
-    val f = java.nio.file.Files.createTempFile("graft-wb", ".parquet")
+    val f = java.nio.file.Files.createFile(TestSpark.tempDir("graft-wb").resolve("f.parquet"))
     intercept[IllegalArgumentException] {
       DirWorkbookSource.load(spark, f.toString)
     }

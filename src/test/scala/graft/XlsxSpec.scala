@@ -23,7 +23,7 @@ class XlsxSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory("graft-xlsx").resolve(name).toString
+    TestSpark.tempDir("graft-xlsx").resolve(name).toString
 
   /** The writer's sheet spool files now in the JVM temp dir. */
   private def spools(): Set[String] = {
@@ -287,7 +287,7 @@ class XlsxSpec extends AnyFunSuite {
 
   test("a mid-write failure leaves the previous good workbook intact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsx-atomic")
+    val dir = TestSpark.tempDir("graft-xlsx-atomic")
     val path = dir.resolve("report.xlsx").toString
     val spooledBefore = spools()
     XlsxWorkbookSink.save(Map("t" -> Seq((1L, "good")).toDF("id", "v")), path, spark)
@@ -385,7 +385,7 @@ class XlsxSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       XlsxWorkbookSource.load(spark, "/no/such/graft/workbook.xlsx")
     }
-    val junk = java.nio.file.Files.createTempFile("graft-junk", ".xlsx")
+    val junk = TestSpark.tempDir("graft-junk").resolve("junk.xlsx")
     java.nio.file.Files.write(junk, "not a zip at all".getBytes)
     intercept[IllegalArgumentException] {
       XlsxWorkbookSource.load(spark, junk.toString)
