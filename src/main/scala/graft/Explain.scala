@@ -16,8 +16,10 @@ object Explain {
     * expression ids (`doc_id#123L`), exchange `plan_id`s, the counter
     * suffix of generated lambda variables (`x_12`), JVM lambda class
     * names, identity hashes (`Foo@1b2c3d4e`), the Spark application id
-    * that names per-session tables and paths (`local-1792394179696`)
-    * and written files' UUIDs.
+    * that names per-session tables and paths (`local-1792394179696`),
+    * written files' UUIDs, and the ids and call-site source lines of RDDs
+    * (`MapPartitionsRDD[847] at localCheckpoint at Pipelines.scala:249`),
+    * which shift with any job or edit before them.
     */
   private val Noise = Seq(
     """#\d+""".r -> "#N",
@@ -26,7 +28,9 @@ object Explain {
     """\$+Lambda[$/\w.]*""".r -> "\\$Lambda",
     """@[0-9a-f]{4,16}\b""".r -> "@H",
     """(local[-_])\d{6,}""".r -> "$1APP",
-    """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""".r -> "UUID")
+    """[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""".r -> "UUID",
+    """RDD\[\d+\]""".r -> "RDD[N]",
+    """(\bat \w+\.scala):\d+""".r -> "$1:N")
 
   /** `text` with every [[Noise]] pattern replaced (pure). */
   def normalise(text: String): String =

@@ -184,8 +184,8 @@ object Pipelines {
     // tokenization serves both scoring and the banded dedup. Docs too short
     // to shingle keep a NULL sh (in the corpus, never a candidate). The
     // keyed repartition is Tables.tWide's width pin: the cleaned frame is
-    // otherwise one partition. The when() guard around the shingle HOF
-    // stands in for a row filter, since short docs must stay in the corpus.
+    // otherwise one partition. The when() guard stands in for a row
+    // filter, since short docs must stay in the corpus.
     val scored = graft.Tables.wide(cleaned, col("doc_id"))
       .select(col("doc_id"), col("text"),
         once(qualityScore(col("text"))).as("quality"),

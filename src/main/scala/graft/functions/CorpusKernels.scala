@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MathUtils}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -18,10 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order functions (`transform`, `aggregate`, `zip_with`,
   * `filter`) are `CodegenFallback`, so the compositions these replace ran
   * one interpreted lambda call per vector dimension, token or window.
-  * Each kernel returns the same bits as the composition it replaces; that
-  * composition is kept below as the kernel's `…Builtin` reference form,
-  * for the specs only (`CorpusKernelsSpec` compares the two in both eval
-  * paths).
+  * Each kernel returns the same bits as the composition it replaces;
+  * `CorpusKernelsSpec` compares the two in both eval paths.
   */
 
 /** `Σ (x − y)²` over two `array<bigint>`: sim8's exact integer squared L2
@@ -178,6 +175,92 @@ case class Token60(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** The lowercased runs of ASCII letters of a string, in order:
+  * `array_remove(split(lower(s), "[^a-z]+"), "")` in one pass over the
+  * UTF-8 bytes, with no case-mapping table and no regex. `A`–`Z` fold to
+  * `a`–`z`. The only non-ASCII code points whose lowercase holds an ASCII
+  * letter are U+212A (KELVIN SIGN, to `k`) and U+0130 (to `i` plus
+  * U+0307, so the `i` ends its token); Spark's `lower` maps them so with
+  * and without ICU case mappings, under any default locale but the
+  * Turkish, Azeri and Lithuanian ones. Every other non-ASCII code point
+  * and every malformed byte separates tokens, as its lowercase (or the
+  * replacement character it decodes to) does.
+  */
+case class Tokens(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "tokens"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    CorpusKernels.expect(prettyName, Seq(child), {
+      case _: StringType => true
+      case _ => false
+    }, "string")
+
+  override def nullSafeEval(s: Any): Any =
+    CorpusKernels.tokens(s.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s => s"${CorpusKernels.Name}.tokens($s)")
+
+  override protected def withNewChildInternal(newChild: Expression): Tokens =
+    copy(child = newChild)
+}
+
+/** Word bigrams in order: element `i` is `t_i || ' ' || t_{i+1}`, NULL
+  * when either token is NULL (as `concat` is). Empty for fewer than two
+  * tokens; NULL for a null array.
+  */
+case class Bigrams(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(StringType, containsNull)
+    case _ => ArrayType(StringType)
+  }
+  override def prettyName: String = "bigrams"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    CorpusKernels.expect(prettyName, Seq(child), {
+      case ArrayType(_: StringType, _) => true
+      case _ => false
+    }, "array<string>")
+
+  override def nullSafeEval(tokens: Any): Any =
+    CorpusKernels.bigrams(tokens.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, t => s"${CorpusKernels.Name}.bigrams($t)")
+
+  override protected def withNewChildInternal(newChild: Expression): Bigrams =
+    copy(child = newChild)
+}
+
+/** The `n`-entry MinHash signature of a shingle set: entry `k` is the
+  * least 4-hex-digit window `k` (digits `4k+1..4k+4`) of the lowercase
+  * md5 hex of a non-null shingle, so one md5 per shingle serves all `n`
+  * orderings. Every entry is NULL when no shingle is non-null; NULL for a
+  * null array.
+  */
+case class MinhashSig(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1 && n <= 8, s"minhash_sig needs 1 <= n <= 8, got $n")
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def prettyName: String = "minhash_sig"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    CorpusKernels.expect(prettyName, Seq(child), {
+      case ArrayType(_: StringType, _) => true
+      case _ => false
+    }, "array<string>")
+
+  override def nullSafeEval(shingles: Any): Any =
+    CorpusKernels.minhashSig(shingles.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s => s"${CorpusKernels.Name}.minhashSig($s, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
+    copy(child = newChild)
+}
+
 object CorpusKernels {
 
   /** Column-API surface of the kernels. */
@@ -189,29 +272,12 @@ object CorpusKernels {
     Bridge.column(Simhash60(Bridge.expression(tokens)))
   def token60(s: Column): Column =
     Bridge.column(Token60(Bridge.expression(s)))
-
-  /** The builtin compositions the kernels replace, kept as their
-    * reference semantics for the specs. `kgramMd5Builtin` adds the
-    * `size >= k` guard its call sites carried: unguarded, the window
-    * sequence counts DOWN past 1 when `n < k` and `slice` rejects index 0.
-    */
-  def longSqL2Builtin(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-  def kgramMd5Builtin(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, typedLit(Seq.empty[String]))
-      .otherwise(transform(sequence(lit(1), size(tokens) - (k - 1)),
-        i => md5(concat_ws(" ", slice(tokens, i, lit(k))))))
-  def token60Builtin(s: Column): Column =
-    conv(md5(s).substr(1, 15), 16, 10).cast("long")
-  def simhash60Builtin(tokens: Column): Column = {
-    val hs = transform(tokens, token60Builtin(_))
-    when(size(hs) >= 1, (0 until 60).map(i =>
-        when(lit(2) * size(filter(hs,
-            h => shiftright(h, i).bitwiseAND(1) === 1)) - size(hs) > 0,
-          shiftleft(lit(1L), i)).otherwise(lit(0L)))
-      .reduce(_.bitwiseOR(_)))
-  }
+  def tokens(text: Column): Column =
+    Bridge.column(Tokens(Bridge.expression(text)))
+  def bigrams(tokens: Column): Column =
+    Bridge.column(Bigrams(Bridge.expression(tokens)))
+  def minhashSig(shingles: Column, n: Int): Column =
+    Bridge.column(MinhashSig(Bridge.expression(shingles), n))
 
   /** The class name generated code calls the static kernels through. */
   private[functions] val Name: String = getClass.getName.stripSuffix("$")
@@ -269,6 +335,71 @@ object CorpusKernels {
       w += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** [[Tokens]]: the tokens share one buffer of lowered letters. */
+  def tokens(s: UTF8String): ArrayData = {
+    val n = s.numBytes()
+    val low = new Array[Byte](n)
+    val out = new java.util.ArrayList[AnyRef]()
+    var w = 0 // letters in `low`
+    var start = 0 // where the open token starts in `low`
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      var letter = 0 // a letter that continues the token, else 0
+      var width = 1
+      if (b >= 'a' && b <= 'z') letter = b
+      else if (b >= 'A' && b <= 'Z') letter = b + 32
+      else if (b == 0xE2.toByte && i + 2 < n && s.getByte(i + 1) == 0x84.toByte &&
+          s.getByte(i + 2) == 0xAA.toByte) { letter = 'k'; width = 3 }
+      else if (b == 0xC4.toByte && i + 1 < n && s.getByte(i + 1) == 0xB0.toByte) {
+        low(w) = 'i'; w += 1; width = 2 // U+0130: `i`, then U+0307 ends the token
+      }
+      if (letter != 0) { low(w) = letter.toByte; w += 1 }
+      else if (w > start) {
+        out.add(UTF8String.fromBytes(low, start, w - start))
+        start = w
+      }
+      i += width
+    }
+    if (w > start) out.add(UTF8String.fromBytes(low, start, w - start))
+    new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  def bigrams(tokens: ArrayData): ArrayData = {
+    val out = new Array[Any](math.max(0, tokens.numElements() - 1))
+    var i = 0
+    while (i < out.length) {
+      if (!tokens.isNullAt(i) && !tokens.isNullAt(i + 1))
+        out(i) = UTF8String.concat(tokens.getUTF8String(i), Space,
+          tokens.getUTF8String(i + 1))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def minhashSig(shingles: ArrayData, n: Int): ArrayData = {
+    val md = Md5.get()
+    val least = Array.fill(n)(0x10000)
+    var i = 0
+    while (i < shingles.numElements()) {
+      if (!shingles.isNullAt(i)) {
+        val d = md.digest(shingles.getUTF8String(i).getBytes)
+        var k = 0
+        while (k < n) {
+          least(k) = math.min(least(k), ((d(2 * k) & 0xff) << 8) | (d(2 * k + 1) & 0xff))
+          k += 1
+        }
+      }
+      i += 1
+    }
+    new GenericArrayData(least.map[Any] { v =>
+      if (v > 0xffff) null
+      else UTF8String.fromBytes(Array(12, 8, 4, 0).map(sh => Hex((v >> sh) & 0xf)))
+    })
   }
 
   /** [[Simhash60]] over a non-empty token array. */

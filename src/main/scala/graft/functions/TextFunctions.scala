@@ -7,37 +7,33 @@ import org.apache.spark.sql.functions._
   * (north-star extensions over the reference's text handling, SURVEY.md
   * §2.5): token counting, quality scoring, language ID, fingerprinting.
   *
-  * Everything here is a pure Catalyst expression tree over builtins — no
-  * UDFs — so the operators stay inside whole-stage codegen and are
-  * evaluated columnar at the scan. Every expression has an exact ANSI-SQL
-  * equivalent (used by the DuckDB oracle), which also pins the semantics
-  * precisely.
+  * No UDFs: each function is a Catalyst expression tree over builtins and
+  * the codegen kernels of [[CorpusKernels]]. Every expression has an exact
+  * ANSI-SQL equivalent (used by the DuckDB oracle), which also pins the
+  * semantics. Higher-order functions such as [[stopwordRatio]]'s `filter`
+  * are `CodegenFallback`: they run interpreted, and the operator that
+  * evaluates one leaves whole-stage codegen.
   */
 object TextFunctions {
 
   /** Lowercased alphabetic word tokens in document order, duplicates
     * preserved — THE single tokenization definition; every operator
     * (text analysis, dedup shingling) and every oracle SQL fragment must
-    * derive from this expression so tokenization cannot drift.
+    * derive from this expression so tokenization cannot drift. The
+    * [[CorpusKernels.tokens]] kernel: the maximal `[a-z]+` runs of
+    * `lower(c)`, which the oracle spells with `regexp_split_to_array`.
     */
-  def tokensOrdered(c: Column): Column =
-    array_remove(split(lower(c), "[^a-z]+"), "")
+  def tokensOrdered(c: Column): Column = CorpusKernels.tokens(c)
 
   /** Lowercased alphabetic word tokens, deduplicated (set semantics). */
   def tokenSet(c: Column): Column =
     array_distinct(tokensOrdered(c))
 
-  /** Word-bigram shingles (duplicates preserved) from an
-    * ALREADY-MATERIALIZED token array attribute — THE single shingle
-    * definition (dedup LSH, fingerprints). PRECONDITIONS: the argument is
-    * a column attribute, never an inline expression (Spark does no CSE
-    * inside lambda bodies — an inline split re-tokenizes per shingle),
-    * and size >= 2 (sequence(1, 0) descends and indexes element 0 —
-    * filter rows first).
+  /** Word-bigram shingles (duplicates preserved) of a token array — THE
+    * single shingle definition (dedup LSH, fingerprints): the
+    * [[CorpusKernels.bigrams]] kernel, empty below two tokens.
     */
-  def rawShingles(tokAttr: Column): Column =
-    transform(sequence(lit(1), size(tokAttr) - 1),
-      i => concat(element_at(tokAttr, i), lit(" "), element_at(tokAttr, i + 1)))
+  def rawShingles(tokens: Column): Column = CorpusKernels.bigrams(tokens)
 
   /** Whitespace token count (the "wc -w" notion of tokens). */
   def tokenCount(c: Column): Column =

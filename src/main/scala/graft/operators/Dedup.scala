@@ -31,18 +31,11 @@ object Dedup {
 
   import graft.functions.TextFunctions.tokensOrdered
 
-  /** Distinct word-bigram shingles from an already-materialized token
-    * array attribute (see TextFunctions.rawShingles). The token expression
-    * must not be inlined: Spark does no common-subexpression elimination
-    * inside lambda bodies, so an inline split would re-tokenize the text
-    * for every shingle (~6x slower). Callers filter size >= 2 at the row
-    * level; a when/otherwise guard around the HOF doubles the projection.
-    */
-  private[graft] def shinglesOf(tokAttr: Column): Column =
-    array_distinct(graft.functions.TextFunctions.rawShingles(tokAttr))
+  /** Distinct word-bigram shingles of a token array. */
+  private[graft] def shinglesOf(tokens: Column): Column =
+    array_distinct(graft.functions.TextFunctions.rawShingles(tokens))
 
-  /** (doc_id, text) -> (doc_id, sh): tokenization and shingling as two
-    * stacked projections so each runs once per row. Documents with fewer
+  /** (doc_id, text) -> (doc_id, sh). Documents with fewer
     * than two tokens shingle to nothing and can never be candidates, so
     * they are filtered out entirely — the oracle's empty `range(1, len)`
     * produces the same absence. Parameterized over the corpus frame so
@@ -274,23 +267,19 @@ object Dedup {
     * orderings on both engines.
     *
     * Scan-local: the shingle set already lives in one array per row, so
-    * the per-window minimum is an `array_min` over a lambda projection —
-    * no explode, no groupBy, no shuffle. `array_min` skips nulls like the
-    * `min` aggregate, and the md5 array is pinned behind
-    * [[graft.functions.EvalOnce]] so CollapseProject cannot inline the
-    * hashing 8x into the window minima. An empty shingle array produces no
-    * signature (`concat_ws` would otherwise band its all-null signature as
-    * md5("")).
+    * the [[graft.functions.CorpusKernels.minhashSig]] kernel takes all 8
+    * window minima in one pass — no explode, no groupBy, no shuffle. It
+    * skips null shingles like the `min` aggregate, and it is pinned behind
+    * [[graft.functions.EvalOnce]] so CollapseProject cannot inline it 8x
+    * into the entries. An empty shingle array produces no signature
+    * (`concat_ws` would otherwise band its all-null signature as md5("")).
     */
   private def signatures(sh: DataFrame): DataFrame = {
     val hashed = sh.filter(size(col("sh")) >= 1)
-      .select(col("doc_id"),
-        graft.functions.EvalOnce.once(
-          transform(col("sh"), s => md5(s))).as("hs"))
-    val aggs = (0 until NumHashes).map(k =>
-      array_min(transform(col("hs"),
-        h => substring(h, k * 4 + 1, 4))).as(s"s$k"))
-    hashed.select(col("doc_id") +: aggs: _*)
+      .select(col("doc_id"), graft.functions.EvalOnce.once(
+        graft.functions.CorpusKernels.minhashSig(col("sh"), NumHashes)).as("sig"))
+    hashed.select(col("doc_id") +:
+      (0 until NumHashes).map(k => col("sig").getItem(k).as(s"s$k")): _*)
   }
 
   /** LSH band buckets in long format (doc_id, band, bucket). */

@@ -49,14 +49,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.fdot(a, b)
 
-  /** The compositional builtin-only form, kept as the reference semantics
-    * for [[dot]] (SimilaritySpec asserts bit-equality between the two).
-    */
-  def dotBuiltin(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Euclidean norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 

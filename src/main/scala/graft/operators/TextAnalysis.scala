@@ -61,7 +61,7 @@ object TextAnalysis {
     val base = t(spark, dir, "documents")
       .select(col("doc_id"), fingerprint(col("text")).as("fp_doc"),
         tokensOrdered(col("text")).as("tk"))
-    val withShingle = base.filter(size(col("tk")) >= 2)
+    val withShingle = base
       .select(col("doc_id"), explode(rawShingles(col("tk"))).as("s"), col("fp_doc"))
       .groupBy("doc_id", "fp_doc")
       .agg(min(substring(md5(col("s")), 1, 16)).as("fp_shingle"))
@@ -210,8 +210,7 @@ object TextAnalysis {
     // exchange replayed once per subtree.
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
-    val bi = docs.filter(size(col("tk")) >= 2)
-      .select(col("doc_id"), explode(rawShingles(col("tk"))).as("bg"))
+    val bi = docs.select(col("doc_id"), explode(rawShingles(col("tk"))).as("bg"))
     val c2 = bi.groupBy("bg").agg(count(lit(1)).as("c2"))
     // ONE prefix-extraction expression feeds both the marginal and the
     // conditional join.
@@ -723,8 +722,8 @@ object TextAnalysis {
     import graft.functions.TextFunctions.rawShingles
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
-    val counts = docs.filter(size(col("tk")) >= 2)
-      .select(col("doc_id"), (size(col("tk")) - 1).cast("long").as("n_bigrams"),
+    val counts = docs.select(col("doc_id"),
+        (size(col("tk")) - 1).cast("long").as("n_bigrams"),
         explode(rawShingles(col("tk"))).as("bg"))
       .groupBy("doc_id", "n_bigrams", "bg")
       .agg(count(lit(1)).as("c"))
@@ -762,8 +761,7 @@ object TextAnalysis {
     val uni = docs.select(explode(col("tk")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n_tok"))
     val tt = uni.agg(sum(col("n_tok")).cast("double").as("t_tok"))
-    val pairs = docs.filter(size(col("tk")) >= 2)
-      .select(explode(rawShingles(col("tk"))).as("bg"))
+    val pairs = docs.select(explode(rawShingles(col("tk"))).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("n_ab"))
     val nbig = pairs.agg(sum(col("n_ab")).cast("double").as("n_big"))
     pairs.filter(col("n_ab") >= 5)
@@ -1056,9 +1054,8 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val docs = tWide(spark, dir, "documents")
       .select(col("doc_id"), tokensOrdered(col("text")).as("tk"))
-    val ds = docs.filter(size(col("tk")) >= 2)
-      .select(col("doc_id"),
-        explode(array_distinct(rawShingles(col("tk")))).as("s"))
+    val ds = docs.select(col("doc_id"),
+      explode(array_distinct(rawShingles(col("tk")))).as("s"))
     val per = ds
       .withColumn("first_doc", min(col("doc_id")).over(Window.partitionBy("s")))
       .groupBy(col("doc_id"))

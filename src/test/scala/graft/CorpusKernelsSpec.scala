@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.CorpusKernels._
+import graft.ReferenceForms._
 import graft.functions.TextFunctions.{tokenSet, tokensOrdered}
+import graft.operators.Dedup.shinglesOf
 
 /** Each corpus kernel returns what the builtin composition it replaced
   * returns — on sf0.01 rows and on planted edge cases — through generated
@@ -119,6 +121,110 @@ class CorpusKernelsSpec extends AnyFunSuite {
 
   private lazy val docs = Tables.t(spark, sf, "documents")
     .select(tokensOrdered(col("text")).as("t"), tokenSet(col("text")).as("ts"))
+
+  /** `body` under both of `lower`'s case-mapping implementations. */
+  private def inBothCaseMappings(body: => Unit): Unit =
+    Seq("true", "false").foreach { icu =>
+      withConf("spark.sql.icu.caseMappings.enabled" -> icu)(body)
+    }
+
+  test("tokens equals the lower/split/array_remove tokenizer for every code point") {
+    val cps = spark.sparkContext
+      .parallelize(0 to Character.MAX_CODE_POINT, 4)
+      .filter(cp => cp < Character.MIN_SURROGATE || cp > Character.MAX_SURROGATE)
+      .map(cp => Row(cp, "a" + new String(Character.toChars(cp)) + "b"))
+    val df = spark.createDataFrame(cps, StructType(Seq(
+      StructField("cp", IntegerType), StructField("s", StringType))))
+    inBothCaseMappings {
+      inBothPaths {
+        val diff = df.select(col("cp"), tokens(col("s")).as("k"),
+            tokensBuiltin(col("s")).as("r"))
+          .filter(!(col("k") <=> col("r")))
+          .limit(20).collect()
+        assert(diff.isEmpty, diff.map(r => f"U+${r.getInt(0)}%04X ${r.get(1)} ${r.get(2)}")
+          .mkString(", "))
+      }
+    }
+    assert(df.count() == Character.MAX_CODE_POINT + 1 - 2048)
+  }
+
+  test("tokens: null, empty, blank, ß, final sigma, the two ASCII-lowering code points, malformed UTF-8") {
+    val df = frame(StructType(Seq(StructField("text", StringType), StructField("hex", StringType))),
+      Row(null, null),
+      Row("", null),
+      Row(" \t\n ", null),
+      Row("Straße", null),
+      Row("ΟΔΟΣ abc ΣΑΣ", null),
+      Row("aİb İ \u212Aelvin", null),
+      Row("Don't STOP-me now3x", null),
+      Row(null, "C341"),        // truncated 2-byte lead, then A
+      Row(null, "41E28442"),    // truncated 3-byte sequence between letters
+      Row(null, "FF41C4B0BF42"), // invalid byte, A, U+0130, stray continuation, B
+      Row(null, "E284AAE284"),  // U+212A, then a truncated copy of it
+      Row(null, "EDA080617A"))  // an encoded surrogate, then az
+    val text = when(col("hex").isNotNull, unhex(col("hex")).cast("string"))
+      .otherwise(col("text"))
+    inBothCaseMappings {
+      inBothPaths {
+        val got = same(df, tokens(text), tokensBuiltin(text))
+          .map(r => Option(r.getSeq[String](0)).map(_.toList))
+        assert(got.toSeq == Seq(None, Some(Nil), Some(Nil), Some(List("stra", "e")),
+          Some(List("abc")), Some(List("ai", "b", "i", "kelvin")),
+          Some(List("don", "t", "stop", "me", "now", "x")),
+          Some(List("a")), Some(List("a", "b")), Some(List("ai", "b")),
+          Some(List("k")), Some(List("az"))))
+      }
+    }
+  }
+
+  test("tokens, bigrams and minhash_sig equal their compositions on sf0.01 documents") {
+    val text = Tables.t(spark, sf, "documents").select(col("text"))
+    val sh = docs.select(shinglesOf(col("t")).as("sh"))
+    inBothPaths {
+      same(text, tokens(col("text")), tokensBuiltin(col("text")))
+      val bg = same(docs, bigrams(col("t")), bigramsBuiltin(col("t")))
+      assert(bg.exists(_.getSeq[String](0).nonEmpty))
+      Seq(1, 8).foreach { n =>
+        val sig = same(sh, minhashSig(col("sh"), n), minhashSigBuiltin(col("sh"), n))
+        assert(sig.exists(r => !r.getSeq[String](0).contains(null)))
+      }
+    }
+  }
+
+  test("bigrams: null array, 0, 1 and 2 tokens, a null token") {
+    val df = frame(StructType(Seq(StructField("t", ArrayType(StringType)))),
+      Row(null),
+      Row(Seq()),
+      Row(Seq("a")),
+      Row(Seq("a", "b")),
+      Row(Seq("a", null, "b")),
+      Row(Seq("a", "b", "a", "b")))
+    inBothPaths {
+      val got = same(df, bigrams(col("t")), bigramsBuiltin(col("t")))
+        .map(r => Option(r.getSeq[String](0)).map(_.toList))
+      assert(got.toSeq == Seq(None, Some(Nil), Some(Nil), Some(List("a b")),
+        Some(List(null, null)), Some(List("a b", "b a", "a b"))))
+    }
+  }
+
+  test("minhash_sig: null array, empty set, one shingle, a null shingle") {
+    val df = frame(StructType(Seq(StructField("sh", ArrayType(StringType)))),
+      Row(null),
+      Row(Seq()),
+      Row(Seq("a b")),
+      Row(Seq(null)),
+      Row(Seq("a b", null, "b c")))
+    val md5Hex = (s: String) => java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val windows = (s: String) => md5Hex(s).grouped(4).toList
+    inBothPaths {
+      val got = same(df, minhashSig(col("sh"), 8), minhashSigBuiltin(col("sh"), 8))
+        .map(r => Option(r.getSeq[String](0)).map(_.toList))
+      val nulls = Some(List.fill[String](8)(null))
+      assert(got.toSeq == Seq(None, nulls, Some(windows("a b")), nulls,
+        Some(windows("a b").zip(windows("b c")).map { case (x, y) => Seq(x, y).min })))
+    }
+  }
 
   test("kgram_md5 equals the md5(concat_ws(slice)) windows on sf0.01 documents") {
     inBothPaths {

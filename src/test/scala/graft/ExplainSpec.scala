@@ -24,6 +24,18 @@ class ExplainSpec extends AnyFunSuite {
       "part-00000-UUID-c000.snappy.parquet")
   }
 
+  test("normalise rewrites an RDD's id and the source line of its call site") {
+    val raw = "Scan ExistingRDD [doc_id#1L] Arguments: [doc_id#1L], " +
+      "MapPartitionsRDD[847] at localCheckpoint at Pipelines.scala:249, " +
+      "createDataFrame at Xlsx.scala:798 " +
+      "Condition : (quality#3 >= 0.5)"
+    assert(Explain.normalise(raw) ==
+      "Scan ExistingRDD [doc_id#NL] Arguments: [doc_id#NL], " +
+      "MapPartitionsRDD[N] at localCheckpoint at Pipelines.scala:N, " +
+      "createDataFrame at Xlsx.scala:N " +
+      "Condition : (quality#N >= 0.5)")
+  }
+
   test("a cached frame (dd9) and a gated one (gr5) explain identically twice") {
     for (name <- Seq("dd9_incremental", "gr5_components")) {
       val fn = SparkEntry.queries(name)

@@ -76,7 +76,13 @@ class ExtensionsSpec extends AnyFunSuite {
     val hits = spelledOutside("CorpusKernels.scala", Seq(
       """md5\(\s*concat_ws\(\s*" ",\s*slice\(""".r,
       """conv\(\s*md5\(""".r,
-      """(?s)aggregate\(\s*zip_with\(.{0,120}?lit\(0L\)""".r))
+      """(?s)aggregate\(\s*zip_with\(.{0,120}?lit\(0L\)""".r,
+      // the tokenizer; other splits of a lowered string are not tokens
+      """\bsplit\(\s*lower\([^"']*["']\[\^a-z\]\+["']""".r,
+      // the bigram window; the trigram one counts to `size - 2`
+      """transform\(\s*sequence\(\s*(?:lit\()?1\)?\s*,\s*size\([^()]*(?:\([^()]*\))?\)\s*-\s*1\s*\)""".r,
+      // the signature's window minima; sim8's nearest centroid is not one
+      """array_min\(\s*transform\((?!\s*cents\b)""".r))
     assert(hits.isEmpty, s"call graft.functions.CorpusKernels: $hits")
   }
 

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Similarity
+import graft.ReferenceForms.dotBuiltin
 
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -28,7 +29,7 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = e.alias("a").crossJoin(e.alias("b")).limit(2000)
     val both = pairs.select(
       Similarity.dot(col("a.embedding"), col("b.embedding")).as("native"),
-      Similarity.dotBuiltin(col("a.embedding"), col("b.embedding")).as("builtin"))
+      dotBuiltin(col("a.embedding"), col("b.embedding")).as("builtin"))
     assert(both.collect().forall(r => r.getDouble(0) == r.getDouble(1)))
   }
 
@@ -38,13 +39,13 @@ class SimilaritySpec extends AnyFunSuite {
     val ragged = Seq((Seq(1f, 2f), Seq(1f, 2f, 3f))).toDF("a", "b")
     val both = ragged.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotBuiltin(col("a"), col("b")).as("builtin")).collect()(0)
+      dotBuiltin(col("a"), col("b")).as("builtin")).collect()(0)
     assert(both.isNullAt(0) && both.isNullAt(1))
     val withNullElem = Seq((Seq(Option(1f), None), Seq(Option(1f), Option(2f))))
       .toDF("a", "b")
     val both2 = withNullElem.select(
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotBuiltin(col("a"), col("b")).as("builtin")).collect()(0)
+      dotBuiltin(col("a"), col("b")).as("builtin")).collect()(0)
     assert(both2.isNullAt(0) && both2.isNullAt(1))
   }
 
